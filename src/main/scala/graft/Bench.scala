@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.ParquetInput
 object Bench {
   /** Pinned round-14 median of the IO sentinel (n=9 interleaved reps,
     * 2026-08-16 window whose CPU sentinel_ratio was 1.044 — see
@@ -35,7 +36,7 @@ object Bench {
         sha2(conv(pmod(xxhash64(col("id"), lit(7)), lit(1000000007L))
           .cast("string"), 10, 16), 256).as("s"))
       .write.mode("overwrite").parquet(dir)
-    val r = spark.read.parquet(dir)
+    val r = ParquetInput.read(spark, dir)
       .agg(expr("bit_xor(h)").as("xh"), sum(length(col("s"))).as("sl"))
       .collect()(0)
     require(!r.isNullAt(0) && r.getLong(1) == 128000000L,

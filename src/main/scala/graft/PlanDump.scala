@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic (the one tool left of three): dumps formatted physical
   * plans — and, with `--time`, per-query wall times — for selected queries.
@@ -14,12 +13,8 @@ object PlanDump {
       case qs => qs
     }
     val cpus = if (time) "32" else "8"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // the session Verify, Bench and the benchmark run, plan rules included
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       if (time) "/root/testdata/sf0.1" else "/root/testdata/sf0.01")

@@ -3,7 +3,7 @@ package graft.entries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOf, BloomFilterJoin, Dedup, Multimodal,
-  RangeJoin, Relational, Similarity, TextOps}
+  ParquetInput, RangeJoin, Relational, Similarity, TextOps}
 import OracleLib._
 
 /** Dedup family: exact/near/span/set-similarity dedup and
@@ -82,7 +82,7 @@ private[graft] object DedupEntries {
     // case is matching NEW docs against history
     "q_stream_neardup" -> ((s, d) =>
       Dedup.streamNearDupCandidates(
-          s.read.parquet(s"$d/documents.parquet"), s, d)
+          ParquetInput.read(s, s"$d/documents.parquet"), s, d)
         .filter(col("new_id") =!= col("hist_id"))),
   )
 

@@ -3,7 +3,7 @@ package graft.entries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOf, BloomFilterJoin, Dedup, Multimodal,
-  RangeJoin, Relational, Similarity, TextOps}
+  ParquetInput, RangeJoin, Relational, Similarity, TextOps}
 import OracleLib._
 
 /** SURVEY §2B host-operator workload + the TPC-H battery,
@@ -80,8 +80,8 @@ private[graft] object RelationalEntries {
     // the hot-key spread; replicating a large dim would be the anti-
     // pattern the operator's scaladoc warns about)
     "q_salted_join" -> ((s, d) => {
-      val ord = s.read.parquet(s"$d/orders.parquet")
-      val cust = s.read.parquet(s"$d/customer.parquet")
+      val ord = ParquetInput.read(s, s"$d/orders.parquet")
+      val cust = ParquetInput.read(s, s"$d/customer.parquet")
         .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
       // o_orderkey is the fact side's primary key — the idCol contract
       graft.operators.Skew.saltedJoin(ord, cust, "o_custkey",

@@ -3,7 +3,7 @@ package graft.entries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOf, BloomFilterJoin, Dedup, Multimodal,
-  RangeJoin, Relational, Similarity, TextOps}
+  ParquetInput, RangeJoin, Relational, Similarity, TextOps}
 import OracleLib._
 
 /** Sketch-table algebra: KMV/quantile/priority/bloom
@@ -108,7 +108,7 @@ private[graft] object SketchEntries {
     // literal contract values and the exact counts are cross-engine.
     "q_sketch_delta_bound" -> ((s, d) => {
       val delta = graft.operators.SketchOps.snapshotDelta(s, d, k = 64)
-      val base = s.read.parquet(s"$d/documents.parquet")
+      val base = ParquetInput.read(s, s"$d/documents.parquet")
         .select(col("source"), col("text"),
           (col("doc_id") % 2 === 0).as("prev"))
       val scoped = base.select(col("source").as("scope"), col("text"),
@@ -148,7 +148,7 @@ private[graft] object SketchEntries {
     "q_ks_bound" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val drift = graft.operators.SketchOps.quantileDrift(s, d, k = 64)
-      val base = s.read.parquet(s"$d/documents.parquet")
+      val base = ParquetInput.read(s, s"$d/documents.parquet")
         .select(col("source"), col("n_chars").cast("double").as("v"),
           (conv(substring(md5(col("doc_id").cast("string")), 1, 1), 16, 10)
             .cast("int") < 8).as("a"))
@@ -210,7 +210,7 @@ private[graft] object SketchEntries {
     "q_sketch_overlap" -> ((s, d) =>
       graft.operators.SketchOps.eventTypeUserOverlap(s, d)),
     "q_heavy_hitters" -> ((s, d) =>
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetInput.read(s, s"$d/documents.parquet")
         .agg(graft.functions.HeavyHitters.topItems(col("source"), 64).as("hh"))
         .select(explode(arrays_zip(col("hh.items"), col("hh.counts"))).as("x"))
         .select(col("x.items").as("source"), col("x.counts").as("n_docs"))),

@@ -149,7 +149,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
       bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000, materialized: Boolean = false): DataFrame = {
     val labels =
-      if (materialized) spark.read.parquet(materializeClusters(spark, dir,
+      if (materialized) ParquetInput.read(spark, materializeClusters(spark, dir,
         numHashes, bands, threshold, maxBucket))
       else connectedComponents(
         minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
@@ -210,7 +210,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
         p
       })
     val fresh = pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(2)) === 1)
-    incrementalComponents(spark.read.parquet(prevPath), fresh)
+    incrementalComponents(ParquetInput.read(spark, prevPath), fresh)
       .withColumn("cluster_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("cluster_id")))
@@ -293,7 +293,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000, materialized: Boolean = false): DataFrame = {
     val labels =
-      if (materialized) spark.read.parquet(materializeClusters(spark, dir,
+      if (materialized) ParquetInput.read(spark, materializeClusters(spark, dir,
         numHashes, bands, threshold, maxBucket))
       else connectedComponents(
         minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
@@ -321,7 +321,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val labels = spark.read.parquet(materializeClusters(spark, dir,
+    val labels = ParquetInput.read(spark, materializeClusters(spark, dir,
       numHashes, bands, threshold, maxBucket))
     val d = docs(spark, dir)
     val ranked = labels
@@ -348,7 +348,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
   def softDedupWeights(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    val labels = spark.read.parquet(materializeClusters(spark, dir,
+    val labels = ParquetInput.read(spark, materializeClusters(spark, dir,
       numHashes, bands, threshold, maxBucket))
     val sizes = labels.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_n"))

@@ -44,7 +44,8 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
   def minHashPairsMaterialized(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    val sigs = spark.read.parquet(materializeSignatures(spark, dir, numHashes))
+    val sigs = ParquetInput.read(spark,
+      materializeSignatures(spark, dir, numHashes))
     verifyPairs(spark, dir,
       bucketPairs(bandKeysOf(sigs, numHashes, bands), maxBucket), threshold)
   }
@@ -79,7 +80,7 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
   def minHashPairsCached(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame =
-    spark.read.parquet(materializePairs(spark, dir, numHashes, bands,
+    ParquetInput.read(spark, materializePairs(spark, dir, numHashes, bands,
       threshold, maxBucket))
 
   /** Drop materialized pair tables AND delete their directories. */
@@ -166,7 +167,8 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
       minEstimate: Double = 0.5): DataFrame = {
     // fail fast on bad banding BEFORE the corpus-wide signature build
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val hist = spark.read.parquet(materializeSignatures(spark, dir, numHashes))
+    val hist = ParquetInput.read(spark,
+      materializeSignatures(spark, dir, numHashes))
     candidatesVsIndex(stream, hist, numHashes, bands, minEstimate)
   }
 
@@ -316,16 +318,16 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
     val buckets = probe.select("bucket").distinct().collect()
       .map(_.getInt(0)).toSeq
     if (buckets.isEmpty) return empty
-    val histBands = spark.read
-      .option("basePath", s"$indexDir/bands").parquet(priorBands: _*)
+    val histBands = ParquetInput.read(spark,
+      Map("basePath" -> s"$indexDir/bands"), priorBands: _*)
       .filter(col("bucket").isin(buckets: _*))
       .select(col("band"), col("band_key"), col("bucket"),
         col("doc_id").as("hist_id"), col("batch").cast("long").as("batch"))
     val matched = probe.join(histBands, Seq("band", "band_key", "bucket"))
       .groupBy("new_id", "hist_id")
       .agg(max(col("batch")).as("batch"), first(col("sig")).as("sig"))
-    val histSigs = spark.read
-      .option("basePath", s"$indexDir/sigs").parquet(priorSigs: _*)
+    val histSigs = ParquetInput.read(spark,
+      Map("basePath" -> s"$indexDir/sigs"), priorSigs: _*)
       .select(col("doc_id").as("hist_id"), col("sig").as("hist_sig"),
         col("batch").cast("long").as("batch"))
     scoreSimEst(matched.join(histSigs, Seq("hist_id", "batch")),
@@ -568,8 +570,8 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
     val sigDirs = committedBatchDirs(spark, s"$indexDir/sigs", None)
     if (sigDirs.isEmpty) return (0L, 0L)
     val latest = sigDirs.map(d => d.split("=").last.toLong).max
-    val all = spark.read.option("basePath", s"$indexDir/sigs")
-      .parquet(sigDirs: _*)
+    val all = ParquetInput.read(spark,
+      Map("basePath" -> s"$indexDir/sigs"), sigDirs: _*)
       .select(col("doc_id"), col("sig"), col("batch").cast("long").as("batch"))
     val total = all.count()
     // latest version per doc: one keyed shuffle — maintenance-window
@@ -591,7 +593,7 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
       kept.write.mode("overwrite").parquet(side))
     // bands are derived: rebuild from the COMPACTED signatures so every
     // band row resolves to a live (doc_id, batch=latest) version
-    val compacted = spark.read.parquet(s"$indexDir/sigs/batch=$latest")
+    val compacted = ParquetInput.read(spark, s"$indexDir/sigs/batch=$latest")
     swapIn("bands", side =>
       bucketedBandKeys(compacted, numHashes, bands, nBuckets)
         .write.mode("overwrite").partitionBy("bucket").parquet(side))

@@ -150,7 +150,7 @@ private[operators] trait DedupSetSim { self: DedupCore =>
           shingleArray(col("text"), shingleK).as("ws"))
         .withColumn("wh", sort_array(transform(col("ws"), x => xxhash64(x))))
       sets.write.mode("overwrite").parquet(s"$path/sets")
-      val sorted = raritySorted(spark.read.parquet(s"$path/sets"),
+      val sorted = raritySorted(ParquetInput.read(spark, s"$path/sets"),
         threshold - 0.001)
       setSimPrefixes(sorted, hotDf)
         .write.mode("overwrite").parquet(s"$path/prefix")
@@ -224,9 +224,9 @@ private[operators] trait DedupSetSim { self: DedupCore =>
       if (materialized) {
         val p = materializeSetSimTables(spark, dir, threshold, shingleK,
           hotDf)
-        (spark.read.parquet(s"$p/sets"),
-          spark.read.parquet(s"$p/prefix"),
-          spark.read.parquet(s"$p/prefix2"))
+        (ParquetInput.read(spark, s"$p/sets"),
+          ParquetInput.read(spark, s"$p/prefix"),
+          ParquetInput.read(spark, s"$p/prefix2"))
       } else {
         val s = docs(spark, dir).select(col("doc_id"),
           shingleArray(col("text"), shingleK).as("ws"))

@@ -212,7 +212,7 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
     // ([[materializeBagTable]]) so the histogram pass runs once per
     // corpus, not once per query, and CollapseProject can't substitute
     // it into the post-join filter (recomputed PER PAIR when it does).
-    val base = spark.read.parquet(materializeBagTable(spark, dir))
+    val base = ParquetInput.read(spark, materializeBagTable(spark, dir))
     // PRE-FLIGHT CANDIDATE GUARD (round-14, verdict task #2): the
     // banded enumeration below is Θ(Σ_band n_b²) and was MEASURED
     // quadratic at the second decade (warm ×99.5 at ×10 data,
@@ -281,7 +281,7 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
   def editCandidateEstimate(spark: SparkSession, dir: String,
       maxLenDiff: Int): Double =
     editGuardCache.computeIfAbsent((dir, maxLenDiff), { _ =>
-      val hist = spark.read.parquet(materializeBagTable(spark, dir))
+      val hist = ParquetInput.read(spark, materializeBagTable(spark, dir))
         .groupBy(floor(col("n_chars") / lit(maxLenDiff)).cast("long")
           .as("bkt"))
         .count().collect()

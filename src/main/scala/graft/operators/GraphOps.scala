@@ -253,7 +253,7 @@ object GraphOps {
   private def knnEdges(spark: SparkSession, dir: String, k: Int,
       numPlanes: Int, materialized: Boolean): DataFrame =
     if (materialized)
-      spark.read.parquet(materializeKnnEdges(spark, dir, k, numPlanes))
+      ParquetInput.read(spark, materializeKnnEdges(spark, dir, k, numPlanes))
     else undirect(Similarity.knnJoin(spark, dir, k, numPlanes),
       "vec_a", "vec_b")
 

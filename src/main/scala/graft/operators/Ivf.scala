@@ -168,7 +168,7 @@ object Ivf {
     val q = qVec.map(_.toDouble)
     val qnorm = math.sqrt(q.map(x => x * x).sum)
     val emb = col("embedding")
-    val base = spark.read.parquet(indexPath)
+    val base = ParquetInput.read(spark, indexPath)
       .filter(col("cluster").isin(cells: _*))
     excludeId.fold(base)(id => base.filter(col("vec_id") =!= id))
       .select(col("vec_id"), col("label"), col("cluster"),

@@ -59,7 +59,7 @@ object Pipeline {
       salt: String = "graft-v1", materialized: Boolean = false): DataFrame = {
     val labels =
       (if (materialized)
-        spark.read.parquet(Dedup.materializeClusters(spark, dir))
+        ParquetInput.read(spark, Dedup.materializeClusters(spark, dir))
       else Dedup.connectedComponents(
         Dedup.minHashPairsMaterialized(spark, dir)))
         .select(col("doc_id"), col("cluster_id"))

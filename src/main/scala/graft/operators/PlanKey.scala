@@ -16,8 +16,8 @@ import org.apache.spark.sql.DataFrame
   *     so no field is elided.
   *  2. Input snapshot. A canonical plan names file inputs by path, but
   *     a path's CONTENTS can change between calls (append/overwrite).
-  *     For file leaves the key therefore folds in a file-snapshot
-  *     fingerprint — file count, total bytes, max modification time —
+  *     For file leaves the key therefore folds in a digest of the
+  *     per-file (path, length, modification time) [[FileSnapshot]],
   *     taken from the SAME FileIndex the query itself would scan, so
   *     cached probe statistics expire exactly when the data the query
   *     reads changes. Non-file leaves (LocalRelation) fingerprint via
@@ -44,25 +44,17 @@ private[operators] object PlanKey {
     treeStringFull(analyzed.canonicalized) + "#" + leafFp
   }
 
-  /** count:bytes:maxModTime over the leaf's own (cached) file listing —
+  /** SHA-256 of the leaf's [[FileSnapshot]] (its own cached listing) —
     * the advisory fingerprint that invalidates memoized probe stats
     * when a path's contents change. Fails open to a time-bucketed token
     * (fresh key ≈ re-price) rather than closed (stale reuse). */
   private def snapshot(
       location: org.apache.spark.sql.execution.datasources.FileIndex)
       : String =
-    try {
-      val files = location.listFiles(Nil, Nil).iterator.flatMap(_.files)
-      var n = 0L; var bytes = 0L; var maxMod = 0L
-      files.foreach { f =>
-        n += 1L
-        bytes += f.getLen
-        if (f.getModificationTime > maxMod) maxMod = f.getModificationTime
-      }
-      s"$n:$bytes:$maxMod"
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        s"unlisted:${System.nanoTime()}"
+    FileSnapshot.of(location).fold(s"unlisted:${System.nanoTime()}") { s =>
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.mkString("\n").getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString
     }
 
   /** Canonicalized tree rendered with no field truncation. */

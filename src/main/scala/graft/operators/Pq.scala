@@ -240,7 +240,7 @@ object Pq {
         s"SUDAN: query_id $queryId not found in $dir/embeddings.parquet")
     val qVec = qRows(0).getSeq[Float](0).toArray
     val (path, centroids, books) = materializeIvfPqIndex(spark, dir, nlist, m, k)
-    twoStageSearch(spark.read.parquet(path), centroids, books, qVec,
+    twoStageSearch(ParquetInput.read(spark, path), centroids, books, qVec,
       kNn, nprobe, rerank, excludeVecId = Some(queryId))
   }
 
@@ -268,7 +268,7 @@ object Pq {
 
   private[operators] def readModel(spark: SparkSession, path: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val rows = spark.read.parquet(s"$path/model").collect()
+    val rows = ParquetInput.read(spark, s"$path/model").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getSeq[Double](3).toArray))
     val centroids = rows.filter(_._1 == "centroid").sortBy(_._2).map(_._4)
@@ -325,7 +325,7 @@ object Pq {
     * if the appended distribution drifts from the training sample, cells
     * skew (hot centroids absorb the new mass) and ADC quantization error
     * grows. The standard serving discipline applies: monitor the cell
-    * histogram (`spark.read.parquet(path + "/index")
+    * histogram (`ParquetInput.read(spark, s"$path/index")
     * .groupBy("cluster").count()`), and when skew crosses budget,
     * rebuild via [[buildIvfPqIndexAt]] over the full corpus — rebuilds
     * are rare, appends are cheap, and the two never require downtime
@@ -343,7 +343,7 @@ object Pq {
       qVec: Array[Float], kNn: Int = 10, nprobe: Int = 4,
       rerank: Int = 4, excludeVecId: Option[Long] = None): DataFrame = {
     val (centroids, books) = readModel(spark, path)
-    twoStageSearch(spark.read.parquet(s"$path/index"), centroids, books,
+    twoStageSearch(ParquetInput.read(spark, s"$path/index"), centroids, books,
       qVec, kNn, nprobe, rerank, excludeVecId)
   }
 
@@ -393,7 +393,7 @@ object Pq {
     // cells therefore count in the mean (imbalance = max·nlist/n) and
     // surface explicitly (n_empty_cells, min_cell = 0).
     val nlist = readModel(spark, path)._1.length
-    spark.read.parquet(s"$path/index")
+    ParquetInput.read(spark, s"$path/index")
       .groupBy("cluster").agg(count(lit(1)).as("n"))
       .agg(
         lit(nlist).cast("long").as("n_cells"),

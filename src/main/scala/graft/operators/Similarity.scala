@@ -442,7 +442,7 @@ object Similarity {
   private def embedLabels(spark: SparkSession, dir: String,
       minCosine: Double, numPlanes: Int, materialized: Boolean): DataFrame =
     if (materialized)
-      spark.read.parquet(
+      ParquetInput.read(spark, 
         materializeEmbedClusters(spark, dir, minCosine, numPlanes))
     else Dedup.connectedComponents(
       nearDupPairs(spark, dir, minCosine, numPlanes),

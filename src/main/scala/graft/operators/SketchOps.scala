@@ -27,7 +27,7 @@ import graft.functions.KmvSketch
 object SketchOps {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    ParquetInput.read(spark, s"$dir/documents.parquet")
 
   /** One KMV sketch row per `groupCol` value over `value`. */
   def sketchTable(df: DataFrame, groupCol: String, value: Column,
@@ -236,8 +236,8 @@ object SketchOps {
     val root = snapshotTables(spark, dir, k)
     graft.functions.SketchMeta.check(spark, s"$root/snap1")
     graft.functions.SketchMeta.check(spark, s"$root/snap2")
-    val stored = spark.read.parquet(s"$root/snap1")
-      .unionByName(spark.read.parquet(s"$root/snap2"))
+    val stored = ParquetInput.read(spark, s"$root/snap1")
+      .unionByName(ParquetInput.read(spark, s"$root/snap2"))
     val merged = stored.groupBy("source")
       .agg(KmvSketch.mergeStatesExpr(collect_list(col("sketch")), k)
         .as("sketch"))
@@ -285,9 +285,9 @@ object SketchOps {
     graft.functions.SketchMeta.check(spark, s"$root/snap1")
     graft.functions.SketchMeta.check(spark, s"$root/snap2")
     val empty = array().cast("array<bigint>")
-    val s1 = spark.read.parquet(s"$root/snap1")
+    val s1 = ParquetInput.read(spark, s"$root/snap1")
       .select(col("source"), col("sketch").as("sk1"))
-    val s2 = spark.read.parquet(s"$root/snap2")
+    val s2 = ParquetInput.read(spark, s"$root/snap2")
       .select(col("source"), col("sketch").as("sk2"))
     def report(scope: Column, a: Column, b: Column): Column =
       bindOnce(KmvSketch.estimateExpr(
@@ -382,9 +382,9 @@ object SketchOps {
     graft.functions.SketchMeta.check(spark, s"$root/qsnap1")
     graft.functions.SketchMeta.check(spark, s"$root/qsnap2")
     val empty = array().cast("array<struct<_1:bigint,_2:double>>")
-    val s1 = spark.read.parquet(s"$root/qsnap1")
+    val s1 = ParquetInput.read(spark, s"$root/qsnap1")
       .select(col("source"), col("qsk").as("sk1"))
-    val s2 = spark.read.parquet(s"$root/qsnap2")
+    val s2 = ParquetInput.read(spark, s"$root/qsnap2")
       .select(col("source"), col("qsk").as("sk2"))
     val joined = s1.join(s2, Seq("source"), "full")
       .select(col("source"),
@@ -451,8 +451,8 @@ object SketchOps {
   def ordersCustomerJoinEstimate(spark: SparkSession, dir: String,
       k: Int = 65536): DataFrame =
     joinCardinalityEstimate(
-      spark.read.parquet(s"$dir/orders.parquet"), "o_custkey",
-      spark.read.parquet(s"$dir/customer.parquet"), "c_custkey", k)
+      ParquetInput.read(spark, s"$dir/orders.parquet"), "o_custkey",
+      ParquetInput.read(spark, s"$dir/customer.parquet"), "c_custkey", k)
 
   // ---------------------------------------------- sketch cube rollup
 

@@ -20,14 +20,14 @@ object Tables {
   /** documents.parquet: doc_id BIGINT, text STRING, lang STRING,
     * source STRING, n_chars BIGINT (+ anything the generator adds). */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    normalize(spark.read.parquet(dir + "/documents.parquet"), Map(
+    normalize(ParquetInput.read(spark, dir + "/documents.parquet"), Map(
       "doc_id" -> LongType, "text" -> StringType, "lang" -> StringType,
       "source" -> StringType, "n_chars" -> LongType))
 
   /** embeddings.parquet: vec_id BIGINT, embedding ARRAY<FLOAT>,
     * label INT (+ extras). */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    normalize(spark.read.parquet(dir + "/embeddings.parquet"), Map(
+    normalize(ParquetInput.read(spark, dir + "/embeddings.parquet"), Map(
       "vec_id" -> LongType, "embedding" -> ArrayType(FloatType),
       "label" -> IntegerType))
 
@@ -44,7 +44,7 @@ object Tables {
     * when it is. Wired into `graft.Verify`; spec-pinned on both a
     * lossless and a lossy float64 fixture. */
   def assertLosslessEmbeddingDrift(spark: SparkSession, dir: String): Unit = {
-    val raw = spark.read.parquet(dir + "/embeddings.parquet")
+    val raw = ParquetInput.read(spark, dir + "/embeddings.parquet")
     val lossy = raw.schema.fields.find(_.name == "embedding")
       .map(_.dataType) match {
       case Some(ArrayType(DoubleType, _)) =>

@@ -415,14 +415,15 @@ object TextOps {
     * matching tokens ever become rows — `words().filter(isin)` paid the
     * per-row generator for every token of the corpus and then dropped
     * almost all of them. Row-identical to
-    * `words(spark, dir).filter(col("word").isin(terms: _*))` for
-    * non-empty terms (the length>0 filter is subsumed: '' is never a
-    * query term). */
+    * `words(spark, dir).filter(col("word").isin(terms: _*))`: that
+    * form drops empty tokens, so an empty query term never matches, and
+    * dropping '' from the terms here keeps the length>0 filter
+    * subsumed. */
   private def scopedWords(spark: SparkSession, dir: String,
       terms: Seq[String]): DataFrame = {
-    require(terms.forall(_.nonEmpty), "query terms must be non-empty")
+    val nonEmpty = terms.filter(_.nonEmpty)
     docs(spark, dir).select(col("doc_id"),
-      explode(filter(split(col("text"), "\\s+"), w => w.isin(terms: _*)))
+      explode(filter(split(col("text"), "\\s+"), w => w.isin(nonEmpty: _*)))
         .as("word"))
   }
 
@@ -689,7 +690,7 @@ object TextOps {
     prunedFpCache.computeIfAbsent((dir, maxDf), { _ =>
       val path = java.nio.file.Files
         .createTempDirectory("winnow_fps_pruned").toString
-      val fps = spark.read.parquet(materializeFingerprints(spark, dir))
+      val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
       val hot = fps.groupBy("fp_hash").agg(count(lit(1)).as("hash_df"))
         .filter(col("hash_df") > maxDf).select("fp_hash")
       val pruned = fps.join(hot, Seq("fp_hash"), "left_anti")
@@ -714,7 +715,7 @@ object TextOps {
   def containmentCandidateEstimate(spark: SparkSession, dir: String,
       maxDf: Int): Double =
     containGuardCache.computeIfAbsent((dir, maxDf), { _ =>
-      val fps = spark.read.parquet(materializeFingerprints(spark, dir))
+      val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
       val r = fps.groupBy("fp_hash").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf)
         .agg(sum(col("df") * (col("df") - 1L)).as("twice_pairs"))
@@ -768,8 +769,8 @@ object TextOps {
       // index rows carry (fp_hash, doc_id, n_fp) with the prune and
       // sizes baked in at build time: both join sides bring their own
       // denominator, so the pair aggregate is the whole plan
-      val idx = spark.read
-        .parquet(materializePrunedFingerprints(spark, dir, maxDf))
+      val idx = ParquetInput.read(spark,
+        materializePrunedFingerprints(spark, dir, maxDf))
       val a = idx.select(col("fp_hash"), col("doc_id").as("doc_a"),
         col("n_fp").as("n_a"))
       val b = idx.select(col("fp_hash"), col("doc_id").as("doc_b"),
@@ -845,7 +846,7 @@ object TextOps {
       materialized: Boolean = false): DataFrame = {
     val fps =
       if (materialized)
-        spark.read.parquet(materializeFingerprints(spark, dir))
+        ParquetInput.read(spark, materializeFingerprints(spark, dir))
       else fingerprints(spark, dir)
     // NO forced broadcast hints: the eval side is benchmark-sized in
     // the intended use, but `evalMaxId` is caller-controlled (the SQL

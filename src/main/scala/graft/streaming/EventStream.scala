@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.ParquetInput
 
 /** Structured Streaming operators over the `events` stream shape
   * (event_id, ts, user_id, event_type, value) — beyond the reference's
@@ -687,7 +688,7 @@ object EventStream extends Serializable {
       k: Int = 65536): DataFrame = {
     import graft.functions.KmvSketch
     graft.functions.SketchMeta.check(spark, outDir)
-    spark.read.parquet(outDir)
+    ParquetInput.read(spark, outDir)
       .groupBy(col("event_type"))
       .agg(KmvSketch.estimateExpr(
         KmvSketch.mergeStatesExpr(collect_list(col("sketch")), k), k)
@@ -767,7 +768,7 @@ object EventStream extends Serializable {
       itemName: String = "user_id"): DataFrame = {
     import graft.functions.HeavyHitters
     graft.functions.SketchMeta.check(spark, outDir)
-    spark.read.parquet(outDir)
+    ParquetInput.read(spark, outDir)
       .groupBy(col("event_type"))
       .agg(collect_list(col("state")).as("sts"))
       .select(col("event_type"), explode(HeavyHitters.topKExpr(

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.ParquetInput
 
 /** Measures the char-bag prune's survivor rate on a fixture dir
   * (round-14): replicates [[graft.operators.DedupSpans
@@ -19,8 +20,8 @@ object BagPruneProbe {
     val maxDist = if (args.length > 2) args(2).toInt else 16
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.local(cpus)
-    val slim = spark.read
-      .parquet(graft.operators.Dedup.materializeBagTable(spark, dir))
+    val slim = ParquetInput.read(spark,
+      graft.operators.Dedup.materializeBagTable(spark, dir))
       .filter(pmod(xxhash64(col("doc_id")), lit(10)) === 0)
       .select(col("doc_id"), col("n_chars"), col("bag"))
     def side(suffix: String) = slim.select(

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.operators.ParquetInput
+
 /** Pre-flight pair-join economics at a given fixture dir (round-14):
   * prints the SAME candidate-volume estimates [[graft.operators
   * .PairGuard]] checks — edit-distance banded enumeration (Σ_band
@@ -23,7 +25,8 @@ object PairVolumeProbe {
       val p = graft.operators.Dedup.materializeSetSimTables(spark, dir)
       val setsim = graft.operators.Dedup.setSimCandidateEstimate(
         spark, dir, 0.5, 3, graft.operators.Dedup.DefaultHotDf,
-        spark.read.parquet(s"$p/prefix"), spark.read.parquet(s"$p/prefix2"),
+        ParquetInput.read(spark, s"$p/prefix"),
+        ParquetInput.read(spark, s"$p/prefix2"),
         cacheable = true)
       println(f"""{"probe":"pair_volume","dir":"$dir","edit_candidates":$edit%.0f,"setsim_candidates":$setsim%.0f}""")
     }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.ParquetInput
 
 /** Stage decomposition of [[graft.operators.Dedup.repeatedSpans]] (r16
   * optimization evidence, the [[SetSimStageProbe]] protocol): times the
@@ -25,7 +26,7 @@ object RepeatedSpansStageProbe {
       val med = xs.map(_._1).sorted.apply(xs.size / 2)
       println(f"[rspans-probe] $tag%-12s med=$med%.3f s rows=${xs.head._2}")
     }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = ParquetInput.read(spark, s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val k = 8
     // inline mirror of the operator's anchor-hash pass (private there)

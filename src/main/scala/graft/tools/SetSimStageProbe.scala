@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.ParquetInput
 
 /** Stage decomposition of [[graft.operators.Dedup.setSimPairs]] — the
   * top gate query by median (r16 optimization evidence): times, on the
@@ -29,9 +30,9 @@ object SetSimStageProbe {
       val med = xs.map(_._1).sorted.apply(xs.size / 2)
       println(f"[setsim-probe] $tag%-12s med=$med%.3f s rows=${xs.head._2}")
     }
-    val sets = spark.read.parquet(s"$p/sets")
-    val prefix = spark.read.parquet(s"$p/prefix")
-    val prefix2 = spark.read.parquet(s"$p/prefix2")
+    val sets = ParquetInput.read(spark, s"$p/sets")
+    val prefix = ParquetInput.read(spark, s"$p/prefix")
+    val prefix2 = ParquetInput.read(spark, s"$p/prefix2")
     timed("scan") {
       sets.count() + prefix.count() + prefix2.count()
     }

@@ -40,4 +40,31 @@ class PlanKeySpec extends SparkSpec {
     val k3 = PlanKey.of(spark.read.parquet(dir).filter(col("id") > 0))
     assert(k2 == k3, "same snapshot must key identically across reads")
   }
+
+  test("file leaf key tells apart rewrites with equal count, bytes and " +
+      "max mtime") {
+    import spark.implicits._
+    def partFile(dir: String) = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-")).toSeq match {
+        case Seq(f) => f
+        case fs => fail(s"expected one part file in $dir, got $fs")
+      }
+    val dir = java.nio.file.Files.createTempDirectory("plankey_eq").toString
+    val other = java.nio.file.Files.createTempDirectory("plankey_eq").toString
+    Seq((1L, "x")).toDF("id", "v").coalesce(1)
+      .write.mode("overwrite").option("compression", "none").parquet(dir)
+    Seq((2L, "y")).toDF("id", "v").coalesce(1)
+      .write.mode("overwrite").option("compression", "none").parquet(other)
+    val (a, b) = (partFile(dir), partFile(other))
+    assert(a.length == b.length, "fixture must match on bytes")
+    val k1 = PlanKey.of(spark.read.parquet(dir))
+    // swap in different rows: one file, same length, same mtime
+    val mtime = a.lastModified()
+    assert(a.delete())
+    val swapped = new java.io.File(dir, b.getName)
+    java.nio.file.Files.move(b.toPath, swapped.toPath)
+    assert(swapped.setLastModified(mtime))
+    val k2 = PlanKey.of(spark.read.parquet(dir))
+    assert(k1 != k2, "a count:bytes:maxMtime collision must not share a key")
+  }
 }

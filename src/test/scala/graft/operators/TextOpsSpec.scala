@@ -700,6 +700,19 @@ class TextOpsSpec extends SparkSpec {
     assert(got.exists { case (_, (ra, rb, _)) => ra.isDefined != rb.isDefined })
   }
 
+  test("bm25/rrf: an empty query term is ignored, not rejected") {
+    val terms = Seq("join", "scan", "filter")
+    val withEmpty = Seq("join", "", "scan", "filter")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(TextOps.bm25(spark, sfDir, withEmpty)) ===
+      rows(TextOps.bm25(spark, sfDir, terms)))
+    assert(rows(TextOps.rrfFusion(spark, sfDir, withEmpty)) ===
+      rows(TextOps.rrfFusion(spark, sfDir, terms)))
+    assert(TextOps.bm25(spark, sfDir, Seq("")).isEmpty,
+      "only-empty terms score nothing")
+  }
+
   test("bigram logprob: hand-computed stupid backoff, held-out docs hit " +
       "the backoff path, short docs score null") {
     import spark.implicits._
