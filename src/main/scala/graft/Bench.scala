@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.Json
 import graft.operators.ParquetInput
 object Bench {
   /** Pinned round-14 median of the IO sentinel (n=9 interleaved reps,
@@ -54,6 +55,18 @@ object Bench {
     """"n":\s*(\d+)""".r.findAllMatchIn(body)
       .map(_.group(1).toInt).foldLeft(0)(math.max)
 
+  /** One entry of `<prefix>_errors.json`: the query, the pass it failed
+    * in, the exception class and the first line of its message. */
+  private[graft] def errorRecord(query: String, pass: String,
+      e: Throwable): String = {
+    val line = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse("")
+    Seq("query" -> query, "pass" -> pass, "class" -> e.getClass.getName,
+        "message" -> line.take(500))
+      .map { case (k, v) => s"${Json.quote(k)}:${Json.quote(v)}" }
+      .mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -62,8 +75,15 @@ object Bench {
     // query shape so the timed run measures the engine, not JVM warmup.
     // (Steady-state is 5-10x cold: q_agg_q1 7.6s cold vs 0.6s warm.)
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => }
+    // A failed query leaves a record (query, pass, exception class, first
+    // message line) in <prefix>_errors.json, as Verify's errors.json
+    // does, instead of only an ok=false on stderr.
+    val errors = collection.mutable.ListBuffer.empty[String]
+    def attempt(name: String, pass: String)(run: => Unit): Boolean =
+      try { run; true }
+      catch { case e: Throwable => errors += errorRecord(name, pass, e); false }
+    SparkEntry.queries.foreach { case (name, fn) =>
+      attempt(name, "warmup")(fn(spark, warmDir).count())
     }
     spark.catalog.clearCache() // drop any frames persisted during warmup
     // Per-query lower-median-of-3: a transient host/JVM stall poisons at
@@ -116,8 +136,7 @@ object Bench {
     }
     val buildCosts = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
+      val ok = attempt(name, "build")(fn(spark, sfDir).count())
       spark.catalog.clearCache()
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $name rep0(build) ${dt}%.3f s ok=$ok")
@@ -141,8 +160,7 @@ object Bench {
     for (rep <- 1 to Reps) {
       for ((name, fn) <- selected) {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        val ok = attempt(name, s"rep$rep")(fn(spark, sfDir).count())
         spark.catalog.clearCache() // isolate queries from each other's state
         val dt = (System.nanoTime() - t0) / 1e9
         // per-rep trace on stderr: lets a post-mortem tell a bad plan
@@ -220,6 +238,9 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"${prefix}_medians$degradeSuffix.json"),
       mediansJson.getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"${prefix}_errors.json"),
+      errors.mkString("[", ",", "]").getBytes("UTF-8"))
     val ioMed = if (ioSamples.isEmpty) -1.0 else median(ioSamples.toList)
     val ioRatio = if (ioMed > 0) ioMed / IoSentinelR14 else -1.0
     val LineBudget = 1600

@@ -11,6 +11,10 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 object Json {
   private val mapper = new ObjectMapper()
 
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped. */
+  def quote(s: String): String = mapper.writeValueAsString(s)
+
   def parse(s: String): Option[JsonNode] =
     // readTree("") yields a MissingNode, not an error — treat as no data
     try Option(mapper.readTree(s)).filterNot(_.isMissingNode)

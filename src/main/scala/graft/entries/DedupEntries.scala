@@ -41,7 +41,7 @@ private[graft] object DedupEntries {
     "q_minhash_keep" -> ((s, d) => Dedup.minHashKeep(s, d, materialized = true)),
     // transitive dedup: connected components over the near-dup pair graph;
     // the labels come from the build-once assignment table (CC runs once
-    // per session — the report and the keep-filter both scan it)
+    // per corpus snapshot — the report and the keep-filter both scan it)
     "q_dedup_clusters" -> ((s, d) =>
       Dedup.minHashClusters(s, d, materialized = true)),
     // incremental CC: history half labeled once, new half folded in via

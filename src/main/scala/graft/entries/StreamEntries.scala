@@ -34,7 +34,7 @@ private[graft] object StreamEntries {
     // merged from the STORED rows only (exact below k)
     "q_stream_sketch" -> ((s, d) =>
       graft.streaming.EventStream.sketchIngestBatchDemo(s,
-        Relational.events(s, d), d)),
+        Relational.events(s, d))),
     // streaming heavy-hitters ingest (batch twin): per-micro-batch MG
     // state rows through the idempotent sink, lifetime per-type top-5
     // hot `props.k` tags merged from the STORED rows only. The tag
@@ -43,7 +43,7 @@ private[graft] object StreamEntries {
     // alike; ties at the cut break (n desc, tag asc) in both engines.
     "q_stream_hh" -> ((s, d) =>
       graft.streaming.EventStream.hhIngestBatchDemo(s,
-        Relational.events(s, d), d,
+        Relational.events(s, d),
         item = get_json_object(col("props"), "$.k"),
         itemName = "tag")),
     // streaming twin: per-window event-type KL drift vs the global mix

@@ -21,11 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * generic operator.
   *
   * Semantics match `size(array_intersect)` on sorted inputs exactly:
-  * duplicates (hash collisions in the setsim tables) count ONCE, and a
-  * NULL array yields 0 (the caller's arrays are non-null by
-  * construction; 0 keeps the expression total). Inputs MUST be sorted
-  * ascending — the caller owns that invariant (spec-pinned vs the
-  * generic intersect on the real tables). */
+  * duplicates (hash collisions in the setsim tables) count ONCE, null
+  * elements match each other once (two arrays that both hold a null
+  * share one null) and are never read as values, and a NULL array
+  * yields 0 (the caller's arrays are non-null by construction; 0 keeps
+  * the expression total). The non-null elements MUST be sorted
+  * ascending, wherever the nulls sit — the caller owns that invariant
+  * (spec-pinned vs the generic intersect on the real tables and on
+  * nullable arrays read back from parquet). */
 final case class SortedIntersectExpression(left: Expression,
     right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -33,15 +36,7 @@ final case class SortedIntersectExpression(left: Expression,
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def prettyName: String = "sorted_intersect_n"
-  // containsNull = false: `count` reads every slot with getLong, so a
-  // null element would be read as garbage and silently diverge from
-  // size(array_intersect) (which matches nulls as equal). Declaring the
-  // element non-nullable makes analysis REJECT nullable-element arrays
-  // instead — the expression is only sound on the caller's
-  // null-free sorted hash arrays (r17, advisor finding).
-  override def inputTypes =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false))
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val a = left.eval(input)
@@ -74,27 +69,43 @@ final case class SortedIntersectExpression(left: Expression,
 
 object SortedIntersectExpression {
   /** Merge scan over two ascending long arrays; equal runs advance both
-    * sides and count once (array_intersect's distinct semantics). */
+    * sides and count once (array_intersect's distinct semantics). Null
+    * slots are skipped, and a null held by both sides counts once. */
   def count(a: ArrayData, b: ArrayData): Long = {
     if (a == null || b == null) return 0L
     val na = a.numElements()
     val nb = b.numElements()
+    val aNull = hasNull(a)
+    val bNull = hasNull(b)
     var i = 0
     var j = 0
-    var n = 0L
+    var n = if (aNull && bNull) 1L else 0L
     var prev = 0L
     var hasPrev = false
     while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x < y) i += 1
-      else if (x > y) j += 1
+      if (aNull && a.isNullAt(i)) i += 1
+      else if (bNull && b.isNullAt(j)) j += 1
       else {
-        if (!hasPrev || x != prev) { n += 1L; prev = x; hasPrev = true }
-        i += 1; j += 1
+        val x = a.getLong(i)
+        val y = b.getLong(j)
+        if (x < y) i += 1
+        else if (x > y) j += 1
+        else {
+          if (!hasPrev || x != prev) { n += 1L; prev = x; hasPrev = true }
+          i += 1; j += 1
+        }
       }
     }
     n
+  }
+
+  private def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) return true
+      i += 1
+    }
+    false
   }
 
   /** Column form (the [[graft.operators.Dedup.setSimPairs]] call site). */

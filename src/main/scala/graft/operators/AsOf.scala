@@ -265,15 +265,6 @@ object AsOf {
     * broadcast path. */
   val AutoBroadcastConf = "spark.graft.asof.autoBroadcast"
 
-  /** Memo of [[asOfRouteDecision]]'s sampled probe row, keyed by the
-    * probe union's semantic plan ([[PlanKey]]): (left n/max-key pair,
-    * ts lo/hi, right n) raw (unscaled) longs. Bounded via the same
-    * clear-on-overflow policy as the fan-out memo. */
-  private val routeProbeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Option[(Long, Long)], Option[(Long, Long)], Option[Long])]()
-
-  def clearRouteProbeCache(): Unit = routeProbeCache.clear()
-
   /** The ts column as an exact Long in its internal unit (micros for
     * timestamps, days for DATE, the raw value for integrals) — the unit
     * the `tolerance`/`bucketWidth` contracts document. None when the ts
@@ -563,13 +554,12 @@ object AsOf {
       lit(null).cast("long").as("_kh"), lit(null).cast("long").as("_t"))
     val isLeft = col("_side") === 0
     val union = lPart.unionByName(rPart)
-    // memoized per semantic plan (r16, same contract as the range-join
-    // fan-out memo): the sampled statistics are a pure, seeded function
+    // built once per probe union (r16, same contract as the range-join
+    // fan-out sums): the sampled statistics are a pure, seeded function
     // of the two input plans, so a session re-running the same as-of
     // (the TVF steady state) prices the route once. broadcastFits and
     // the partition count are re-read per call — conf changes re-route.
-    if (routeProbeCache.size > 256) routeProbeCache.clear() // bounded memo
-    val row = routeProbeCache.computeIfAbsent(PlanKey.of(union), { _ =>
+    val row = Artifacts("asof_route_probe", (), union) {
       val r = union
         .groupBy(col("_side"), col("_kh"))
         .agg(count(lit(1)).as("_n"), min(col("_t")).as("_tn"),
@@ -582,7 +572,7 @@ object AsOf {
         if (r.isNullAt(2) || r.isNullAt(3)) None
         else Some((r.getLong(2), r.getLong(3))),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))
-    })
+    }
     def scaled(v: Long) = math.round(v / probeFraction)
     val (leftRows, maxKey) = row._1 match {
       case Some((n, mx)) => (scaled(n), scaled(mx))

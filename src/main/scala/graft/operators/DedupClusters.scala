@@ -104,38 +104,23 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
   private[operators] val lastCcRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Session registry of materialized cluster-label tables — the
-    * build-once artifact ONE level above the signatures: (doc_id,
-    * cluster_id) from the CC loop, written to parquet once per (corpus,
-    * params) and scanned by every consumer. In production the cluster
-    * report and the keep-filter both read the same assignment table
-    * computed once per ingest batch; re-running a multi-round iterative
-    * CC per downstream query would repeat the most expensive stage of
-    * the whole dedup pipeline. Same immutable-corpus contract as
-    * [[materializeSignatures]]. */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Double, Int), String]()
-
-  /** Run CC over the MinHash pair graph ONCE and persist (doc_id,
+  /** Build-once cluster-label table — the artifact ONE level above the
+    * signatures: (doc_id, cluster_id) from the CC loop, written to
+    * parquet once per pair table and scanned by every
+    * consumer. In production the cluster report and the keep-filter
+    * both read the same assignment table computed once per ingest
+    * batch; re-running a multi-round iterative CC per downstream query
+    * would repeat the most expensive stage of the whole dedup pipeline.
+    * Runs CC over the MinHash pair graph ONCE and persists (doc_id,
     * cluster_id); returns the parquet path. */
   def materializeClusters(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000): String =
-    clusterCache.computeIfAbsent(
-      (dir, numHashes, bands, threshold, maxBucket), { _ =>
-        val path = java.nio.file.Files
-          .createTempDirectory("minhash_clusters").toString
-        connectedComponents(minHashPairsCached(spark, dir, numHashes,
-          bands, threshold, maxBucket))
-          .write.mode("overwrite").parquet(path)
-        path
-      })
-
-  /** Drop materialized cluster tables AND delete their directories. */
-  def clearClusterCache(): Unit = {
-    clusterCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    clusterCache.clear()
+      maxBucket: Int = 1000): String = {
+    val pairs = minHashPairsCached(spark, dir, numHashes, bands, threshold,
+      maxBucket)
+    Artifacts.dir("minhash_clusters", (), pairs) { path =>
+      connectedComponents(pairs).write.mode("overwrite").parquet(path)
+    }
   }
 
   /** Near-dup clusters over the MinHash pair graph: (doc_id, cluster_id,
@@ -199,30 +184,17 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
       threshold, maxBucket)
     // the history labeling is a PERSISTED table (the real production
     // contract: last night's job wrote it; tonight's fold-in reads it)
-    // — built once per session, so the entry's cost is the fold-in run
-    val prevPath = historyLabelCache.computeIfAbsent(
-      (dir, numHashes, bands, threshold, maxBucket), { _ =>
-        val p = java.nio.file.Files
-          .createTempDirectory("cc_history_labels").toString
-        connectedComponents(pairs.filter(
-            pmod(col("doc_a") + col("doc_b"), lit(2)) === 0))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+    // — built once per pair table, so the entry's cost is the fold-in run
+    val prevPath = Artifacts.dir("cc_history_labels", (), pairs) { p =>
+      connectedComponents(pairs.filter(
+          pmod(col("doc_a") + col("doc_b"), lit(2)) === 0))
+        .write.mode("overwrite").parquet(p)
+    }
     val fresh = pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(2)) === 1)
     incrementalComponents(ParquetInput.read(spark, prevPath), fresh)
       .withColumn("cluster_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("cluster_id")))
-  }
-
-  private val historyLabelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Double, Int), String]()
-
-  def clearHistoryLabelCache(): Unit = {
-    historyLabelCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    historyLabelCache.clear()
   }
 
   /** Contrastive training pairs for embedding/reranker models — the

@@ -7,36 +7,23 @@ import org.apache.spark.sql.functions._
   * banded pairs/keep/hot-bucket audit, and the stream-static ingest
   * index (probe, live ingest, compaction). See [[Dedup]]. */
 private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
-  /** Session-scoped registry of materialized signature tables (the same
-    * build-once pattern as `Ivf.materializeIndex`): compute the signatures
-    * ONCE, write them to parquet, and let every downstream pass — both
-    * sides of the banded self-join, keep-filters, cross-run comparisons —
-    * SCAN them instead of recomputing the shingle+minhash pipeline per
-    * lineage branch. At 100 TB this is the difference between hashing the
-    * corpus once and hashing it once per plan branch. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
+  /** Build-once signature table (the same pattern as
+    * `Ivf.materializeIndex`): compute the signatures ONCE, write them to
+    * parquet, and let every downstream pass — both sides of the banded
+    * self-join, keep-filters, cross-run comparisons — SCAN them instead
+    * of recomputing the shingle+minhash pipeline per lineage branch. At
+    * 100 TB this is the difference between hashing the corpus once and
+    * hashing it once per plan branch. */
   def materializeSignatures(spark: SparkSession, dir: String,
       numHashes: Int = 64): String =
-    sigCache.computeIfAbsent((dir, numHashes), { _ =>
-      val path = java.nio.file.Files.createTempDirectory("minhash_sigs")
-        .toString
+    Artifacts.dir("minhash_sigs", numHashes, docs(spark, dir)) { path =>
       // (doc_id, sig) ONLY — persisting the text column here would
       // rewrite the whole corpus into the signature table; the banded
       // join consumes just ids and signatures, and the verify stage
       // re-reads texts from the corpus itself
       minHashSignatures(spark, dir, numHashes).select("doc_id", "sig")
         .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  /** Drop materialized signature tables AND delete their directories. */
-  def clearSignatureCache(): Unit = {
-    sigCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    sigCache.clear()
-  }
+    }
 
   /** [[minHashPairs]] reading a materialized signature table — the 100 TB
     * shape (signatures scanned, not recomputed, on both self-join sides).
@@ -50,30 +37,27 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
       bucketPairs(bandKeysOf(sigs, numHashes, bands), maxBucket), threshold)
   }
 
-  /** Session registry of materialized PAIR tables — one step further
-    * than the signature table: the banded candidate join + exact-Jaccard
-    * verify runs once per corpus, and every downstream consumer (keep
-    * filter, cluster labeling, clean-corpus pipeline, cross-source
-    * matrix, audits) SCANS the (doc_a, doc_b, jaccard) parquet instead
-    * of re-deriving the pair pipeline. This is the PLANS-prescribed
-    * "materialize the pair graph once, anti-join it into every
-    * downstream read" — the steady-state 100 TB shape, where the pair
-    * table is corpus-sublinear by construction (bucketed candidates,
-    * maxBucket-capped). Immutable-corpus contract as the other caches. */
-  private val pairTableCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Double, Int), String]()
-
+  /** Build-once PAIR table — one step further than the signature
+    * table: the banded candidate join + exact-Jaccard verify runs once
+    * per corpus, and every downstream consumer (keep filter, cluster
+    * labeling, clean-corpus pipeline, cross-source matrix, audits) SCANS
+    * the (doc_a, doc_b, jaccard) parquet instead of re-deriving the pair
+    * pipeline. This is the PLANS-prescribed "materialize the pair graph
+    * once, anti-join it into every downstream read" — the steady-state
+    * 100 TB shape, where the pair table is corpus-sublinear by
+    * construction (bucketed candidates, maxBucket-capped). Keyed on the
+    * signature table's read, which is new whenever the corpus is. */
   def materializePairs(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000): String =
-    pairTableCache.computeIfAbsent(
-      (dir, numHashes, bands, threshold, maxBucket), { _ =>
-        val path = java.nio.file.Files
-          .createTempDirectory("minhash_pairs").toString
+      maxBucket: Int = 1000): String = {
+    val sigs = ParquetInput.read(spark,
+      materializeSignatures(spark, dir, numHashes))
+    Artifacts.dir("minhash_pairs", (bands, threshold, maxBucket), sigs) {
+      path =>
         minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
           maxBucket).write.mode("overwrite").parquet(path)
-        path
-      })
+    }
+  }
 
   /** [[minHashPairs]] served from the build-once pair table. Identical
     * rows to the computing forms (deterministic pipeline; spec-pinned). */
@@ -82,13 +66,6 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
       maxBucket: Int = 1000): DataFrame =
     ParquetInput.read(spark, materializePairs(spark, dir, numHashes, bands,
       threshold, maxBucket))
-
-  /** Drop materialized pair tables AND delete their directories. */
-  def clearPairCache(): Unit = {
-    pairTableCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    pairTableCache.clear()
-  }
 
   /** Audit query: the MinHash band buckets a `maxBucket` cap prunes
     * (band, band_key, bucket_n). Empty → the cap dropped nothing. */

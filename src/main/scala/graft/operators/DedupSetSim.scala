@@ -9,6 +9,74 @@ import org.apache.spark.sql.functions._
 private[operators] trait DedupSetSim { self: DedupCore =>
   // ------------------------------------------- exact set-similarity join
 
+  /** Build-once tables for [[setSimPairs]]:
+    * `<path>/sets` = the full shingle arrays (doc_id, ws, wh),
+    * `<path>/prefix` = the rarity-ordered single-token prefix rows
+    * (doc_id, n, pos, tok) and `<path>/prefix2` = the hot-token pair
+    * rows (doc_id, n, pos, key). The shingle explode + df group-by +
+    * per-doc rarity sort — the dominant cost, and one the join would
+    * otherwise recompute on every plan branch — runs once per
+    * (corpus, threshold, k, hotDf). */
+  def materializeSetSimTables(spark: SparkSession, dir: String,
+      threshold: Double = 0.5, shingleK: Int = 3,
+      hotDf: Int = DefaultHotDf): String = {
+    val d = docs(spark, dir)
+    Artifacts.dir("setsim", (threshold, shingleK, hotDf), d) { path =>
+      // `wh` = per-element xxhash64 of the shingle set, SORTED at build
+      // time (r16): the bulk verify intersects the LONG arrays
+      // (8 B/element, no string equality) and only survivors touch the
+      // string arrays — same hash-prune/string-confirm split as
+      // repeatedPositions. Sorting once here lets the verify run an
+      // allocation-free merge scan ([[graft.functions
+      // .SortedIntersectExpression]]) instead of array_intersect's
+      // per-pair hash set — the probe-measured dominant term of the
+      // warm query.
+      val sets = d
+        .select(col("doc_id"),
+          shingleArray(col("text"), shingleK).as("ws"))
+        .withColumn("wh", sort_array(transform(col("ws"), x => xxhash64(x))))
+      sets.write.mode("overwrite").parquet(s"$path/sets")
+      val sorted = raritySorted(ParquetInput.read(spark, s"$path/sets"),
+        threshold - 0.001)
+      setSimPrefixes(sorted, hotDf)
+        .write.mode("overwrite").parquet(s"$path/prefix")
+      setSimPrefixPairs(sorted, hotDf)
+        .write.mode("overwrite").parquet(s"$path/prefix2")
+    }
+  }
+
+  /** Hot-token demotion threshold: a prefix token shared by more than
+    * this many documents joins through the Δ=2 pair path instead of
+    * the single-token path — the PPJoin twin of `planesFor`'s
+    * targetBucket. A FIXED cap is the right shape (not one grown with
+    * n): it bounds the singles stream at hotDf/2 · prefixRows = O(n)
+    * at every corpus size, while the gate fixtures (max prefix df 11)
+    * never trip it. 64 keeps the worst undemoted bucket at ~2k
+    * candidate rows and measured ×33 fewer sf1-twin candidates. */
+  val DefaultHotDf = 64
+
+  /** Enumerated-candidate-row count of [[setSimPairs]]'s two prefix
+    * equi-joins, priced from the key document frequencies BEFORE the
+    * join runs: a self-join on key enumerates exactly Σ_key df(key)²
+    * ordered rows (~2× the `doc_a < doc_b` survivors) — summed over
+    * the single-token stream (`tok`) and the hot-pair stream (`key`).
+    * One map-side group-by + sum per stream over the build-once
+    * prefix tables; doubles because a saturated corpus's Σ df² is
+    * precisely the number too big for the join (the estimate needs
+    * magnitude, not exactness). */
+  def setSimCandidateEstimate(prefixed: DataFrame,
+      prefixPairs: DataFrame): Double =
+    Artifacts("setsim_estimate", (), prefixed, prefixPairs) {
+      def sumSq(rows: DataFrame, key: String): Double = {
+        val r = rows.groupBy(col(key)).count()
+          .agg(sum(col("count").cast("double") * col("count")
+            .cast("double")))
+          .collect()(0)
+        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+      }
+      sumSq(prefixed, "tok") + sumSq(prefixPairs, "key")
+    }
+
   /** EXACT set-similarity self-join via prefix filtering (the
     * PPJoin/All-Pairs family — Xiao et al. WWW'08, Bayardo et al.
     * WWW'07): all document pairs whose word-`shingleK`-gram SHINGLE-set
@@ -119,99 +187,6 @@ private[operators] trait DedupSetSim { self: DedupCore =>
     * without that, the self-join + verify recompute the shingle
     * explode on four plan branches (measured 17 s → ~1 s warm at
     * sf0.1, the same trade every materialized table here makes). */
-  private val setSimCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Double, Int, Int), String]()
-
-  /** Build-once tables for [[setSimPairs]] (same immutable-corpus
-    * session-cache contract as [[materializeSignatures]]):
-    * `<path>/sets` = the full shingle arrays (doc_id, ws, wh),
-    * `<path>/prefix` = the rarity-ordered single-token prefix rows
-    * (doc_id, n, pos, tok) and `<path>/prefix2` = the hot-token pair
-    * rows (doc_id, n, pos, key). The shingle explode + df group-by +
-    * per-doc rarity sort — the dominant cost, and one the join would
-    * otherwise recompute on every plan branch — runs once per
-    * (dir, threshold, k, hotDf). */
-  def materializeSetSimTables(spark: SparkSession, dir: String,
-      threshold: Double = 0.5, shingleK: Int = 3,
-      hotDf: Int = DefaultHotDf): String =
-    setSimCache.computeIfAbsent((dir, threshold, shingleK, hotDf), { _ =>
-      val path = java.nio.file.Files.createTempDirectory("setsim").toString
-      // `wh` = per-element xxhash64 of the shingle set, SORTED at build
-      // time (r16): the bulk verify intersects the LONG arrays
-      // (8 B/element, no string equality) and only survivors touch the
-      // string arrays — same hash-prune/string-confirm split as
-      // repeatedPositions. Sorting once here lets the verify run an
-      // allocation-free merge scan ([[graft.functions
-      // .SortedIntersectExpression]]) instead of array_intersect's
-      // per-pair hash set — the probe-measured dominant term of the
-      // warm query.
-      val sets = docs(spark, dir)
-        .select(col("doc_id"),
-          shingleArray(col("text"), shingleK).as("ws"))
-        .withColumn("wh", sort_array(transform(col("ws"), x => xxhash64(x))))
-      sets.write.mode("overwrite").parquet(s"$path/sets")
-      val sorted = raritySorted(ParquetInput.read(spark, s"$path/sets"),
-        threshold - 0.001)
-      setSimPrefixes(sorted, hotDf)
-        .write.mode("overwrite").parquet(s"$path/prefix")
-      setSimPrefixPairs(sorted, hotDf)
-        .write.mode("overwrite").parquet(s"$path/prefix2")
-      path
-    })
-
-  /** Hot-token demotion threshold: a prefix token shared by more than
-    * this many documents joins through the Δ=2 pair path instead of
-    * the single-token path — the PPJoin twin of `planesFor`'s
-    * targetBucket. A FIXED cap is the right shape (not one grown with
-    * n): it bounds the singles stream at hotDf/2 · prefixRows = O(n)
-    * at every corpus size, while the gate fixtures (max prefix df 11)
-    * never trip it. 64 keeps the worst undemoted bucket at ~2k
-    * candidate rows and measured ×33 fewer sf1-twin candidates. */
-  val DefaultHotDf = 64
-
-  /** Drop materialized set-sim tables AND delete their directories. */
-  def clearSetSimCache(): Unit = {
-    setSimCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    setSimCache.clear()
-    setSimGuardCache.clear()
-  }
-
-  /** Per-corpus cache of [[setSimCandidateEstimate]] (same key as the
-    * build-once tables, cleared with them) — the guard prices the join
-    * once per corpus, keeping warm [[setSimPairs]] timings unchanged. */
-  private val setSimGuardCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Double, Int, Int), java.lang.Double]()
-
-  /** Enumerated-candidate-row count of [[setSimPairs]]'s two prefix
-    * equi-joins, priced from the key document frequencies BEFORE the
-    * join runs: a self-join on key enumerates exactly Σ_key df(key)²
-    * ordered rows (~2× the `doc_a < doc_b` survivors) — summed over
-    * the single-token stream (`tok`) and the hot-pair stream (`key`).
-    * One map-side group-by + sum per stream over the build-once
-    * prefix tables; doubles because a saturated corpus's Σ df² is
-    * precisely the number too big for the join (the estimate needs
-    * magnitude, not exactness). */
-  def setSimCandidateEstimate(spark: SparkSession, dir: String,
-      threshold: Double, shingleK: Int, hotDf: Int,
-      prefixed: DataFrame, prefixPairs: DataFrame,
-      cacheable: Boolean): Double = {
-    def compute(): java.lang.Double = {
-      def sumSq(rows: DataFrame, key: String): Double = {
-        val r = rows.groupBy(col(key)).count()
-          .agg(sum(col("count").cast("double") * col("count")
-            .cast("double")))
-          .collect()(0)
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      }
-      sumSq(prefixed, "tok") + sumSq(prefixPairs, "key")
-    }
-    if (cacheable)
-      setSimGuardCache.computeIfAbsent(
-        (dir, threshold, shingleK, hotDf), _ => compute())
-    else compute()
-  }
-
   def setSimPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.5, shingleK: Int = 3,
       materialized: Boolean = true,
@@ -239,13 +214,12 @@ private[operators] trait DedupSetSim { self: DedupCore =>
     // candidate term Σ_key C(df,2) was MEASURED turning quadratic
     // under full domain saturation (warm ×28 at the second decade,
     // BENCH_sf10_r14.json) — price both key streams from their
-    // document frequencies (one map-side agg each, cached per corpus
-    // alongside the build-once tables) and refuse the saturated
+    // document frequencies (one map-side agg each, built once per
+    // prefix-table input in Artifacts) and refuse the saturated
     // regime before the join runs. setSimHotTokens remains the
     // detection AUDIT; this is the inline enforcement.
     PairGuard.check(spark, "setSimPairs",
-      setSimCandidateEstimate(spark, dir, threshold, shingleK, hotDf,
-        prefixed, prefixPairs, cacheable = materialized),
+      setSimCandidateEstimate(prefixed, prefixPairs),
       "minHashPairs (LSH band keys hash whole SETS - a combinatorial " +
         "domain that never saturates; measured flat across both " +
         "decades) with recall quantified against this operator at " +

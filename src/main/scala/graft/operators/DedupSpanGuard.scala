@@ -238,30 +238,18 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
               s"k=$k, nBuckets=$nBuckets would probe the wrong layout.")
     }
 
-  private[operators] val gramIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int), String]
-
-  /** Drop cached demo indexes AND delete their temp directories (same
-    * disk-hygiene contract as [[clearSetSimCache]]). */
-  def clearGramIndexCache(): Unit = {
-    gramIndexCache.values.foreach(p =>
-      Ivf.deleteRecursively(new java.io.File(p)))
-    gramIndexCache.clear()
-  }
-
   /** Demo split of the guard over one corpus dir (the oracle-able
     * entry): documents with `doc_id % holdoutMod != 0` are "history"
-    * (indexed once per session), the rest are "incoming" and probed —
-    * regions reported are incoming text that history already contains. */
+    * (indexed once per corpus snapshot), the rest are "incoming" and
+    * probed — regions reported are incoming text that history already
+    * contains. */
   def spanGuard(spark: SparkSession, dir: String, k: Int = 8,
       nBuckets: Int = 64, holdoutMod: Int = 5): DataFrame = {
     val d = docs(spark, dir)
-    val idx = gramIndexCache.getOrElseUpdate((dir, k, nBuckets, holdoutMod), {
-      val p = java.nio.file.Files.createTempDirectory("gramindex").toString
+    val idx = Artifacts.dir("gramindex", (k, nBuckets, holdoutMod), d) { p =>
       materializeGramIndex(spark,
         d.filter(col("doc_id") % holdoutMod =!= 0), p, k, nBuckets)
-      p
-    })
+    }
     spanGuardProbe(spark, idx,
       d.filter(col("doc_id") % holdoutMod === 0), k, nBuckets)
   }

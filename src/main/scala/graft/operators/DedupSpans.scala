@@ -262,12 +262,6 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
       .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
   }
 
-  /** Per-(dir, maxLenDiff) cache of [[editCandidateEstimate]] — the
-    * guard costs one histogram pass per corpus, not one per call, so
-    * warm [[editDistancePairs]] timings are unchanged. */
-  private val editGuardCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), java.lang.Double]()
-
   /** Enumerated-candidate-row count of [[editDistancePairs]]'s banded
     * self-join, priced BEFORE the join runs: with the length histogram
     * cnt(b) per `floor(len/maxLenDiff)` bucket, the explode-3-buckets
@@ -277,11 +271,13 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
     * One map-side group-by over the build-once bag table; the
     * collected histogram is bounded by max-doc-length / maxLenDiff
     * buckets (a bounded dictionary read, ~650/8 entries on the
-    * fixtures), cached per (dir, maxLenDiff). */
+    * fixtures), built once per (bag table, maxLenDiff), so warm
+    * [[editDistancePairs]] timings are unchanged. */
   def editCandidateEstimate(spark: SparkSession, dir: String,
-      maxLenDiff: Int): Double =
-    editGuardCache.computeIfAbsent((dir, maxLenDiff), { _ =>
-      val hist = ParquetInput.read(spark, materializeBagTable(spark, dir))
+      maxLenDiff: Int): Double = {
+    val bags = ParquetInput.read(spark, materializeBagTable(spark, dir))
+    Artifacts("edit_estimate", maxLenDiff, bags) {
+      val hist = bags
         .groupBy(floor(col("n_chars") / lit(maxLenDiff)).cast("long")
           .as("bkt"))
         .count().collect()
@@ -290,9 +286,10 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
         c.toDouble * (hist.getOrElse(b - 1, 0L) + c +
           hist.getOrElse(b + 1, 0L)).toDouble
       }.sum
-    })
+    }
+  }
 
-  /** Session registry of materialized bag tables: (doc_id, text,
+  /** Build-once bag table: (doc_id, text,
     * n_chars, bag BINARY(54)) written once per corpus — the
     * edit-distance analogue of [[materializeSignatures]] (texts ride
     * along because the DP verify needs them; at 100 TB this is the
@@ -308,24 +305,13 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
     * passed ~14%). Built by
     * ONE streaming char scan per doc ([[graft.functions
     * .CharBagExpression]]) instead of 27 regexp passes. */
-  private val bagCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def materializeBagTable(spark: SparkSession, dir: String): String =
-    bagCache.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files.createTempDirectory("edit_bags").toString
-      docs(spark, dir)
-        .select(col("doc_id"), col("text"), col("n_chars"),
+  def materializeBagTable(spark: SparkSession, dir: String): String = {
+    val d = docs(spark, dir)
+    Artifacts.dir("edit_bags", (), d) { path =>
+      d.select(col("doc_id"), col("text"), col("n_chars"),
           graft.functions.CharBagExpression.bagCol(col("text")).as("bag"))
         .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  /** Drop materialized bag tables AND delete their directories. */
-  def clearBagCache(): Unit = {
-    bagCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    bagCache.clear()
+    }
   }
 
   // ------------------------------------------------- cross-source dup matrix

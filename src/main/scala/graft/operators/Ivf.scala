@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -99,39 +97,18 @@ object Ivf {
       centroids)
   }
 
-  /** Session-scoped registry of materialized indexes: built once per
-    * (corpus dir, nlist, trainSample), probed many times. At real scale
-    * this is a managed table location, not a temp dir. The cache assumes an
-    * immutable corpus under `dir` for the session (the norm for snapshot
-    * parquet); if the corpus is rewritten, call [[clearIndexCache]] or the
-    * probe serves the stale index. */
-  private val indexCache =
-    new ConcurrentHashMap[(String, Int, Int), (String, Array[Array[Double]])]()
-
   /** Build-once: tag the corpus and write it PARTITIONED BY cluster, so a
     * probe's `cluster IN (...)` filter prunes whole partitions at the scan.
-    * Idempotent per (dir, nlist, trainSample) within the session. */
+    * Built once per (corpus, nlist, trainSample), probed many times; at
+    * real scale this is a managed table location, not a temp dir. */
   def materializeIndex(spark: SparkSession, dir: String, nlist: Int = 16,
       trainSample: Int = 4096): (String, Array[Array[Double]]) =
-    indexCache.computeIfAbsent((dir, nlist, trainSample), { _ =>
+    Artifacts("ivf_index", (nlist, trainSample), embeddings(spark, dir)) {
       val (indexed, centroids) = buildIndex(spark, dir, nlist, trainSample)
-      val path = java.nio.file.Files.createTempDirectory("ivf_index").toString
+      val path = Artifacts.newDir("ivf_index")
       indexed.write.mode("overwrite").partitionBy("cluster").parquet(path)
       (path, centroids)
-    })
-
-  /** Drop materialized indexes AND delete their temp directories (test
-    * hygiene / corpus-changed invalidation). */
-  def clearIndexCache(): Unit = {
-    indexCache.values.forEach { case (path, _) => deleteRecursively(new java.io.File(path)) }
-    indexCache.clear()
-  }
-
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+    }
 
   /** The `nprobe` cells whose centroids are nearest to the query (driver
     * side — nlist is tiny by construction). */

@@ -428,29 +428,15 @@ object Multimodal {
       .select(col("asset_id"), col("d._1").as("dhash_hi"),
         col("d._2").as("dhash_lo"))
 
-  /** Session registry of materialized dHash tables: built once per
-    * corpus dir, probed/joined many times — the image analogue of
-    * [[Dedup.materializeSignatures]] (same immutable-corpus contract). */
-  private val dHashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once: run the codec + dHash over the corpus ONCE and persist
-    * the (asset_id, dhash_hi, dhash_lo) table as parquet. At 100 TB this
-    * is the durable index artifact every image-dedup run joins against —
-    * never re-decoding the corpus per query. */
+    * the (asset_id, dhash_hi, dhash_lo) table as parquet — the image
+    * analogue of [[Dedup.materializeSignatures]]. At 100 TB this is the
+    * durable index artifact every image-dedup run joins against — never
+    * re-decoding the corpus per query. */
   def materializeDHashIndex(spark: SparkSession, dir: String): String =
-    dHashCache.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files.createTempDirectory("dhash_index").toString
+    Artifacts.dir("dhash_index", (), imageAssets(spark, dir)) { path =>
       imageDHash(spark, dir).write.mode("overwrite").parquet(path)
-      path
-    })
-
-  /** Drop materialized dHash tables and delete their directories. */
-  def clearDHashCache(): Unit = {
-    dHashCache.values.forEach(p =>
-      Ivf.deleteRecursively(new java.io.File(p)))
-    dHashCache.clear()
-  }
+    }
 
   /** The dHash UDF over a raw PNG payload column (decode → 9×8 pool →
     * sign bits), shared by the batch and streaming dedup paths. */
@@ -473,24 +459,17 @@ object Multimodal {
     (hi, lo)
   })
 
-  /** Four 16-bit band keys of a split dHash — the LSH keys both dedup
-    * paths bucket on (Hamming ≤ 3 ⇒ ≥1 band equal, pigeonhole). */
-  /** Per-dir cache of [[imagePairEstimate]]: the estimate is a pure
-    * function of the corpus (the dHash set is deterministic per dir
-    * whichever frame carries it — materialized index or per-call
-    * checkpoint), so it is priced once per corpus and warm repeat
-    * calls pay nothing, same contract as the other two guards. */
-  private val imageGuardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-
   /** Enumerated-candidate-row count of [[imageNearDupPairs]]'s band
     * self-join: Σ over (band, band_key) buckets of cnt² (ordered pairs
     * incl. self, ~2× the `asset_a < asset_b` survivors) — the guard's
     * pre-flight estimate, exact by the same equi-join-cardinality
-    * argument as the setsim guard. */
+    * argument as the setsim guard. The dHash set is a deterministic
+    * function of the image table whichever frame carries it (the
+    * materialized index or a per-call checkpoint), so the estimate is
+    * built once per image table and warm repeat calls pay nothing. */
   def imagePairEstimate(spark: SparkSession, dir: String,
       hashes: DataFrame): Double =
-    imageGuardCache.computeIfAbsent(dir, { _ =>
+    Artifacts("image_estimate", (), imageAssets(spark, dir)) {
       val r = hashes
         .select(explode(dHashBands(col("dhash_hi"), col("dhash_lo")))
           .as("bk"))
@@ -499,8 +478,10 @@ object Multimodal {
           .cast("double")))
         .collect()(0)
       if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    })
+    }
 
+  /** Four 16-bit band keys of a split dHash — the LSH keys both dedup
+    * paths bucket on (Hamming ≤ 3 ⇒ ≥1 band equal, pigeonhole). */
   private def dHashBands(hi: org.apache.spark.sql.Column,
       lo: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     array(

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
 
 /** The per-file (path, length, modification time) listing of a file
   * input, sorted by path: the one definition of "the same input" that
-  * the schema memo of [[ParquetInput]] and the probe memo key of
-  * [[PlanKey]] both validate against. It is read off a FileIndex the
+  * the schema memo of [[ParquetInput]] and the [[Artifacts]] key
+  * ([[PlanKey]]) both validate against. It is read off a FileIndex the
   * caller already holds (an InMemoryFileIndex lists once, when its
   * DataFrame is built), so taking it costs no second listing. */
 private[operators] object FileSnapshot {

@@ -2,10 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Semantic cache key for a DataFrame's analyzed plan — the shared
-  * memo key of the pre-flight probes (range-join fan-out guard, as-of
-  * route probe): one string that is equal iff the frames compute the
-  * same thing over the same input SNAPSHOT.
+/** Semantic key for a DataFrame's analyzed plan — the input part of
+  * every [[Artifacts]] key: one string that is equal iff the frames
+  * compute the same thing over the same input SNAPSHOT.
   *
   * Two soundness requirements (both directions verified by spec):
   *
@@ -19,9 +18,11 @@ import org.apache.spark.sql.DataFrame
   *     For file leaves the key therefore folds in a digest of the
   *     per-file (path, length, modification time) [[FileSnapshot]],
   *     taken from the SAME FileIndex the query itself would scan, so
-  *     cached probe statistics expire exactly when the data the query
-  *     reads changes. Non-file leaves (LocalRelation) fingerprint via
-  *     their hashCode, which derives from the inline rows.
+  *     a built artifact expires exactly when the data the query reads
+  *     changes. Non-file leaves (LocalRelation, Range) fingerprint via
+  *     their hashCode, which covers the inline rows and the leaf's
+  *     output attribute ids: two frames built separately over the same
+  *     rows are two keys (a miss, never a collision).
   *
   * A fingerprint mismatch can only cause a cache MISS (re-pricing —
   * correct, just slower); the unsound direction (two different inputs

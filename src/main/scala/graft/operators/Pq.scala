@@ -30,26 +30,20 @@ object Pq {
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
 
-  /** Session codebook registry: trained once per (dir, m, k,
-    * trainSample), reused by every encode/search — the training sample
-    * collect + Lloyd loop must not re-run per query. Same
-    * immutable-corpus contract as the other build-once caches. */
-  private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int), Array[Array[Array[Double]]]]()
-
-  /** Drop cached codebooks (test hygiene / corpus-changed invalidation). */
-  def clearCodebookCache(): Unit = codebookCache.clear()
-
   /** Per-subspace codebooks: `m` arrays of `k` centroids of dim/m floats.
     * Trains on the hash-ordered uniform sample ([[Ivf.uniformSample]] —
-    * layout-independent by the same argument); build-once per session. */
+    * layout-independent by the same argument). Trained once per
+    * (corpus, m, k, trainSample) — the training sample collect + Lloyd
+    * loop must not re-run per query. */
   def trainCodebooks(spark: SparkSession, dir: String, m: Int = 8,
-      k: Int = 16, trainSample: Int = 4096): Array[Array[Array[Double]]] =
-    codebookCache.computeIfAbsent((dir, m, k, trainSample), { _ =>
-      val sample = Ivf.uniformSample(embeddings(spark, dir), trainSample)
+      k: Int = 16, trainSample: Int = 4096): Array[Array[Array[Double]]] = {
+    val e = embeddings(spark, dir)
+    Artifacts("pq_codebooks", (m, k, trainSample), e) {
+      val sample = Ivf.uniformSample(e, trainSample)
         .select("embedding").collect().map(_.getSeq[Float](0).toArray)
       codebooksFromSample(sample, m, k)
-    })
+    }
+  }
 
   /** Per-subspace codebooks from an in-memory training sample. */
   private def codebooksFromSample(sample: Array[Array[Float]], m: Int,
@@ -116,41 +110,25 @@ object Pq {
 
   // --------------------------------------------------- IVF+PQ composition
 
-  /** Session registry of materialized IVF+PQ indexes — the composed
-    * build-once artifact: vectors tagged with their IVF cell AND their
-    * PQ codes, written partitioned by cell. Same immutable-corpus cache
-    * contract as [[Ivf.materializeIndex]]. */
-  private val ivfPqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Int),
-    (String, Array[Array[Double]], Array[Array[Array[Double]]])]()
-
-  /** Build the composed index ONCE: IVF cell tags ([[Ivf.buildIndex]]) +
-    * PQ codes in the same table, partitioned by cluster — a probe prunes
-    * whole cell directories at the scan AND scores 4-byte codes instead
-    * of 256-byte vectors. This is the standard 100 TB ANN layout
-    * (IVF-PQ); the raw embedding rides along for the exact re-rank
-    * stage. */
+  /** Build the composed index ONCE per (corpus, params): IVF cell tags
+    * ([[Ivf.buildIndex]]) + PQ codes in the same table, partitioned by
+    * cluster — a probe prunes whole cell directories at the scan AND
+    * scores 4-byte codes instead of 256-byte vectors. This is the
+    * standard 100 TB ANN layout (IVF-PQ); the raw embedding rides along
+    * for the exact re-rank stage. */
   def materializeIvfPqIndex(spark: SparkSession, dir: String,
       nlist: Int = 16, m: Int = 8, k: Int = 16, trainSample: Int = 4096)
       : (String, Array[Array[Double]], Array[Array[Array[Double]]]) =
-    ivfPqCache.computeIfAbsent((dir, nlist, m, k, trainSample), { _ =>
+    Artifacts("ivfpq_index", (nlist, m, k, trainSample),
+        embeddings(spark, dir)) {
       val (indexed, centroids) = Ivf.buildIndex(spark, dir, nlist, trainSample)
       val books = trainCodebooks(spark, dir, m, k, trainSample)
-      val path = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
+      val path = Artifacts.newDir("ivfpq_index")
       indexed.withColumn("codes",
           graft.functions.PqEncodeExpression.codes(col("embedding"), books))
         .write.mode("overwrite").partitionBy("cluster").parquet(path)
       (path, centroids, books)
-    })
-
-  /** Drop composed indexes and delete their directories (test hygiene /
-    * corpus-changed invalidation). */
-  def clearIvfPqCache(): Unit = {
-    ivfPqCache.values.forEach { case (path, _, _) =>
-      Ivf.deleteRecursively(new java.io.File(path))
     }
-    ivfPqCache.clear()
-  }
 
   /** Two-stage IVF-PQ search — the full production recipe:
     *  1. PRUNE: read only the `nprobe` nearest cells (parquet partition
@@ -347,17 +325,6 @@ object Pq {
       qVec, kNn, nprobe, rerank, excludeVecId)
   }
 
-  /** Session cache for the append-demo index: base corpus = even
-    * vec_ids, appended delta = odd vec_ids. */
-  private val appendDemoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def clearAppendDemoCache(): Unit = {
-    appendDemoCache.values.forEach(p =>
-      Ivf.deleteRecursively(new java.io.File(p)))
-    appendDemoCache.clear()
-  }
-
   /** Recall@k of the GROWN index (built on the even-id half, odd-id
     * half appended with the frozen model) against brute force over the
     * full corpus — the live-ingest twin of `q_ann_ivfpq`. Deterministic
@@ -412,28 +379,14 @@ object Pq {
   def annIndexHealth(spark: SparkSession, dir: String): DataFrame =
     indexHealthReport(spark, appendDemoIndex(spark, dir))
 
-  /** Build-once accessor for the append-demo index path. */
-  private def appendDemoIndex(spark: SparkSession, dir: String): String =
-    appendDemoCache.computeIfAbsent(dir, { _ =>
-      val p = java.nio.file.Files.createTempDirectory("ivfpq_append")
-        .toString
-      val all = embeddings(spark, dir)
+  /** Build-once append-demo index: base corpus = even vec_ids, appended
+    * delta = odd vec_ids. */
+  private def appendDemoIndex(spark: SparkSession, dir: String): String = {
+    val all = embeddings(spark, dir)
+    Artifacts.dir("ivfpq_append", (), all) { p =>
       buildIvfPqIndexAt(spark, p, all.filter(col("vec_id") % 2 === 0))
       appendToIvfPqIndex(spark, p, all.filter(col("vec_id") % 2 =!= 0))
-      p
-    })
-
-  /** Session cache for the drift/rebuild demo: (stale-model path,
-    * rebuilt path). */
-  private val rebuildDemoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  def clearRebuildDemoCache(): Unit = {
-    rebuildDemoCache.values.forEach { case (a, b) =>
-      Ivf.deleteRecursively(new java.io.File(a))
-      Ivf.deleteRecursively(new java.io.File(b))
     }
-    rebuildDemoCache.clear()
   }
 
   /** The drifted delta: odd-id embeddings shifted by +2.0 in every
@@ -451,18 +404,16 @@ object Pq {
     * (the documented rebuild-and-swap, executed). */
   private def rebuildDemoPaths(spark: SparkSession, dir: String)
       : (String, String) =
-    rebuildDemoCache.computeIfAbsent(dir, { _ =>
-      val stale = java.nio.file.Files
-        .createTempDirectory("ivfpq_drift").toString
-      val rebuilt = java.nio.file.Files
-        .createTempDirectory("ivfpq_rebuilt").toString
+    Artifacts("ivfpq_rebuild_demo", (), embeddings(spark, dir)) {
+      val stale = Artifacts.newDir("ivfpq_drift")
+      val rebuilt = Artifacts.newDir("ivfpq_rebuilt")
       val base = embeddings(spark, dir).filter(col("vec_id") % 2 === 0)
       val delta = driftedDelta(spark, dir)
       buildIvfPqIndexAt(spark, stale, base)
       appendToIvfPqIndex(spark, stale, delta)
       buildIvfPqIndexAt(spark, rebuilt, base.unionByName(delta))
       (stale, rebuilt)
-    })
+    }
 
   /** The full serving lifecycle the health report's scaladoc promises,
     * executed end to end: drifted appends skew the frozen-model index →

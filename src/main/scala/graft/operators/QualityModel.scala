@@ -60,22 +60,17 @@ object QualityModel {
   private def label: Column =
     (TextOps.nWords >= 30 && TextOps.nWords <= 150).cast("double")
 
-  /** Session weight registry — train once per corpus dir, score many
-    * times (same build-once contract as the ANN index caches). */
-  private val weightCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Double]]()
-
-  def clearWeightCache(): Unit = weightCache.clear()
-
   /** Trained weights (bias-first). `iters` Newton–IRLS steps from w = 0;
     * `ridge` damps the Hessian so near-separable data cannot blow the
-    * step up (and keeps the 4×4 system nonsingular). */
+    * step up (and keeps the 4×4 system nonsingular). Trained once per
+    * (corpus, iters, ridge), scored many times. */
   def trainWeights(spark: SparkSession, dir: String, iters: Int = 8,
-      ridge: Double = 1e-3): Array[Double] =
-    weightCache.computeIfAbsent((dir, iters), { _ =>
+      ridge: Double = 1e-3): Array[Double] = {
+    val d = Tables.documents(spark, dir)
+    Artifacts("quality_weights", (iters, ridge), d) {
       val fs = features
       val p = fs.length
-      val base = Tables.documents(spark, dir)
+      val base = d
         .select(fs.zipWithIndex.map { case (f, j) => f.as(s"f$j") } :+
           label.as("y"): _*)
         .persist()
@@ -110,7 +105,8 @@ object QualityModel {
         }
         w
       } finally base.unpersist()
-    })
+    }
+  }
 
   /** Fixed-order Gaussian elimination with partial pivoting for the tiny
     * SPD Newton system — deterministic double arithmetic on the driver. */

@@ -83,26 +83,20 @@ object RangeJoin {
         fanOutSpan(lo, hi, binWidth).as("_g_fan"))
     }
     val union = tagged.reduce(_.unionAll(_))
-    // Memoize the priced sums per SEMANTIC PLAN (r16): a session that
-    // re-runs the same range join (the TVF / scheduled-job steady
-    // state) re-paid the pre-flight scan on every call. The canonical
-    // plan string alone is NOT a sound key — LocalRelation prints no
-    // rows and a file relation's string may omit its path — so the key
-    // also carries a leaf fingerprint (parquet root paths; inline-data
-    // hashCode, which LocalRelation derives from its rows). The sums
-    // are immutable facts of (plan, binWidth — already inside the span
+    // Built once per probe union (r16): a session that re-runs the same
+    // range join (the TVF / scheduled-job steady state) re-paid the
+    // pre-flight scan on every call. The sums are immutable facts of
+    // the union's plan and input snapshot (binWidth is inside the span
     // expressions); check() still runs per call, so warn/refuse
     // semantics are unchanged.
-    val key = PlanKey.of(union)
-    if (fanOutCache.size > 256) fanOutCache.clear() // bounded memo
-    val sums = fanOutCache.computeIfAbsent(key, { _ =>
+    val sums = Artifacts("range_fan_out", (), union) {
       union
         .groupBy(col("_g_side")).agg(sum(col("_g_fan")).as("_g_est"))
         .collect()
         .map(r =>
           r.getInt(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1)))
         .toMap
-    })
+    }
     eligible.zipWithIndex.foreach { case ((_, _, _, op), i) =>
       PairGuard.check(spark, op, sums.getOrElse(i, 0.0),
         "choose binWidth ≈ the typical interval width so per-interval " +
@@ -110,13 +104,6 @@ object RangeJoin {
           "generate; cap or split them upstream)")
     }
   }
-
-  /** Session memo of [[guardFanOutSides]] sums, keyed by canonical plan
-    * + leaf fingerprint; cleared for tests via [[clearGuardCache]]. */
-  private val fanOutCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[Int, Double]]()
-
-  def clearGuardCache(): Unit = fanOutCache.clear()
 
   /** Join `probe` (interval [lo, hi], both inclusive, LONG expressions) to
     * `build` (point value `v`, LONG expression): one output row per

@@ -141,17 +141,13 @@ object Similarity {
     * hardcoded bucket expressions keep matching. */
   val AutoPlanes = 0
 
-  /** Memoized embedding-corpus row count per dir — the "reported
-    * stats" read a build-once index would serve; one metadata-cheap
-    * count per corpus per session, never per query. */
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def embeddingCount(spark: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(dir,
-      _ => embeddings(spark, dir).count()).longValue
-
-  def clearEmbeddingCountCache(): Unit = embCountCache.clear()
+  /** Embedding-corpus row count — the "reported stats" read a
+    * build-once index would serve; one metadata-cheap count per corpus
+    * snapshot, never per query. */
+  def embeddingCount(spark: SparkSession, dir: String): Long = {
+    val e = embeddings(spark, dir)
+    Artifacts("embedding_count", (), e)(e.count())
+  }
 
   private[graft] def resolvePlanes(spark: SparkSession, dir: String,
       numPlanes: Int, targetBucket: Int = 250): Int =
@@ -404,39 +400,26 @@ object Similarity {
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("cluster_id")))
 
-  /** Session registry of materialized semantic-cluster label tables —
-    * the embedding analogue of `Dedup.materializeClusters`: (vec_id,
-    * cluster_id) persisted once per (corpus, params), scanned by both
-    * the cluster report and the keep-filter. Same immutable-corpus
-    * contract as the other build-once caches. */
-  private val embedClusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Double, Int, Int), String]()
-
+  /** Build-once semantic-cluster label table — the embedding analogue
+    * of `Dedup.materializeClusters`: (vec_id, cluster_id) persisted once
+    * per (corpus, params), scanned by both the cluster report and the
+    * keep-filter. */
   def materializeEmbedClusters(spark: SparkSession, dir: String,
       minCosine: Double = 0.3, numPlanes0: Int = AutoPlanes,
       maxBucket: Int = 1000): String = {
-    // resolve BEFORE the cache key so AutoPlanes and an explicit
+    // resolve BEFORE the key so AutoPlanes and an explicit
     // planesFor(count) share one materialized table
     val numPlanes = resolvePlanes(spark, dir, numPlanes0)
     // maxBucket participates in the key: a cap changes the pair graph,
     // so two cap settings must not share one materialized label table
-    embedClusterCache.computeIfAbsent((dir, minCosine, numPlanes, maxBucket), { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("embed_clusters").toString
+    Artifacts.dir("embed_clusters", (minCosine, numPlanes, maxBucket),
+        embeddings(spark, dir)) { path =>
       Dedup.connectedComponents(
           nearDupPairs(spark, dir, minCosine, numPlanes, maxBucket),
           aCol = "vec_a", bCol = "vec_b")
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
         .write.mode("overwrite").parquet(path)
-      path
-    })
-  }
-
-  /** Drop materialized semantic-cluster tables + their directories. */
-  def clearEmbedClusterCache(): Unit = {
-    embedClusterCache.values.forEach(path =>
-      Ivf.deleteRecursively(new java.io.File(path)))
-    embedClusterCache.clear()
+    }
   }
 
   private def embedLabels(spark: SparkSession, dir: String,

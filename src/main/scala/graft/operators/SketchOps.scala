@@ -188,28 +188,15 @@ object SketchOps {
 
   // ------------------------------------ persisted cross-snapshot merge
 
-  /** Session cache for the persisted-snapshot demo: two sketch TABLES
-    * written to parquet once per (dir, k). */
-  private val snapshotDemoCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), String]()
-
-  def clearSnapshotDemoCache(): Unit = {
-    snapshotDemoCache.values.forEach(p =>
-      Ivf.deleteRecursively(new java.io.File(p)))
-    snapshotDemoCache.clear()
-  }
-
   /** Write the two demo snapshot sketch tables (doc_id parity split of
     * the corpus — a deterministic stand-in for "last night's shard" and
     * "tonight's shard") and return their root. Each table is one
     * (source, sketch) row per source, a few KB — the artifact a nightly
-    * job would land next to its shard. */
+    * job would land next to its shard. Written once per (corpus, k). */
   private[operators] def snapshotTables(spark: SparkSession, dir: String,
-      k: Int): String =
-    snapshotDemoCache.computeIfAbsent((dir, k), { _ =>
-      val root = java.nio.file.Files
-        .createTempDirectory("sketch_snapshots").toString
-      val d = docs(spark, dir)
+      k: Int): String = {
+    val d = docs(spark, dir)
+    Artifacts.dir("sketch_snapshots", k, d) { root =>
       sketchTable(d.filter(col("doc_id") % 2 === 0), "source",
         col("text"), k).write.mode("overwrite").parquet(s"$root/snap1")
       sketchTable(d.filter(col("doc_id") % 2 =!= 0), "source",
@@ -218,8 +205,8 @@ object SketchOps {
       // (see graft.functions.SketchMeta) and readers check it
       graft.functions.SketchMeta.write(spark, s"$root/snap1")
       graft.functions.SketchMeta.write(spark, s"$root/snap2")
-      root
-    })
+    }
+  }
 
   /** The incremental-maintenance proof, executed: per-source (and
     * `__ALL__`) distinct-text estimates for the COMBINED corpus, derived
@@ -322,26 +309,15 @@ object SketchOps {
       col("r.est_overlap").as("est_overlap"))
   }
 
-  private val qSnapshotDemoCache = new java.util.concurrent
-    .ConcurrentHashMap[(String, Int), String]()
-
-  def clearQuantileSnapshotDemoCache(): Unit = {
-    qSnapshotDemoCache.values.forEach(p =>
-      Ivf.deleteRecursively(new java.io.File(p)))
-    qSnapshotDemoCache.clear()
-  }
-
   /** Write the two demo QUANTILE snapshot sketch tables (md5 half-split
     * of the corpus — engine-independent and decorrelated from `source`,
     * unlike doc_id parity, which the fixture's source assignment makes
     * degenerate) and return their root. One (source, qsk) state row per
-    * source per half, over n_chars. */
+    * source per half, over n_chars. Written once per (corpus, k). */
   private[operators] def quantileSnapshotTables(spark: SparkSession,
-      dir: String, k: Int): String =
-    qSnapshotDemoCache.computeIfAbsent((dir, k), { _ =>
-      val root = java.nio.file.Files
-        .createTempDirectory("quantile_snapshots").toString
-      val d = docs(spark, dir)
+      dir: String, k: Int): String = {
+    val d = docs(spark, dir)
+    Artifacts.dir("quantile_snapshots", k, d) { root =>
       val firstHalf = conv(substring(
         md5(col("doc_id").cast("string")), 1, 1), 16, 10).cast("int") < 8
       def states(half: DataFrame) = half.groupBy(col("source"))
@@ -353,8 +329,8 @@ object SketchOps {
         .write.mode("overwrite").parquet(s"$root/qsnap2")
       graft.functions.SketchMeta.write(spark, s"$root/qsnap1")
       graft.functions.SketchMeta.write(spark, s"$root/qsnap2")
-      root
-    })
+    }
+  }
 
   /** Distribution-DRIFT detector from stored quantile sketch states —
     * the continuous twin of [[graft.streaming.EventStream.typeDriftBatch]]
@@ -579,14 +555,6 @@ object SketchOps {
     * build side never exceeds the blocklist itself; if that side
     * outgrows the broadcast budget at production scale, AQE falls back
     * to a shuffle join whose probe side is still only the sliver. */
-  /** Session cache of built blocklist blooms — the merged word array is
-    * nBits/64 longs by construction (never data-sized), so caching it
-    * is the build-once convention at its cheapest. */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int), Array[Long]]()
-
-  def clearBloomCache(): Unit = bloomCache.clear()
-
   def bloomBlocklistAdmit(spark: SparkSession, dir: String,
       nBits: Int = 1 << 16, numHashes: Int = 4,
       holdoutMod: Int = 7): DataFrame = {
@@ -598,16 +566,17 @@ object SketchOps {
       .select(col("doc_id"), col("source"), col("text"))
     // stored-table shape: one bloom row per source, then the row-level
     // OR-merge; the driver collect is the merged words only — bounded
-    // at nBits/64 longs by construction, never data-sized
-    val merged = bloomCache.computeIfAbsent(
-      (dir, nBits, numHashes, holdoutMod), { _ =>
-        val states = block.groupBy(col("source"))
-          .agg(BloomSketch.sketchState(col("text"), nBits, numHashes)
-            .as("bloom"))
-        states.agg(collect_list(col("bloom")).as("states"))
-          .select(BloomSketch.mergeStatesExpr(col("states"), nBits))
-          .collect()(0).getSeq[Long](0).toArray
-      })
+    // at nBits/64 longs by construction, never data-sized, so building
+    // it once per (blocklist, nBits, numHashes) is the build-once
+    // convention at its cheapest
+    val merged = Artifacts("blocklist_bloom", (nBits, numHashes), block) {
+      val states = block.groupBy(col("source"))
+        .agg(BloomSketch.sketchState(col("text"), nBits, numHashes)
+          .as("bloom"))
+      states.agg(collect_list(col("bloom")).as("states"))
+        .select(BloomSketch.mergeStatesExpr(col("states"), nBits))
+        .collect()(0).getSeq[Long](0).toArray
+    }
     val flaggedCol = BloomSketch.mightContain(col("text"), merged,
       numHashes)
     val clean = incoming.filter(!flaggedCol)

@@ -640,57 +640,34 @@ object TextOps {
           lit(PhoneRe), lit(0)))
         .cast("long").as("n_phones"))
 
-  /** Session registry of materialized fingerprint tables — the same
-    * build-once pattern as `Dedup.materializeSignatures`: winnow the
-    * corpus ONCE, write the scalar (doc_id, fp_hash) table to parquet,
-    * and let every consumer — both sides of the containment self-join,
-    * the df/size windows, cross-corpus overlap joins — SCAN it instead
-    * of re-running the winnowing expression per lineage branch. At
-    * 100 TB this is the difference between fingerprinting the corpus
-    * once and once per plan branch. Immutable-corpus contract as the
-    * other build-once caches. */
-  private val fpTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Build-once fingerprint table — the same pattern as
+    * `Dedup.materializeSignatures`: winnow the corpus ONCE, write the
+    * scalar (doc_id, fp_hash) table to parquet, and let every consumer —
+    * both sides of the containment self-join, the df/size windows,
+    * cross-corpus overlap joins — SCAN it instead of re-running the
+    * winnowing expression per lineage branch. At 100 TB this is the
+    * difference between fingerprinting the corpus once and once per plan
+    * branch. */
   def materializeFingerprints(spark: SparkSession, dir: String): String =
-    fpTableCache.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files.createTempDirectory("winnow_fps")
-        .toString
+    Artifacts.dir("winnow_fps", (), docs(spark, dir)) { path =>
       fingerprints(spark, dir).write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
-  /** Drop materialized fingerprint tables AND delete their directories. */
-  def clearFingerprintCache(): Unit = {
-    fpTableCache.values.forEach(path =>
-      graft.operators.Ivf.deleteRecursively(new java.io.File(path)))
-    fpTableCache.clear()
-    prunedFpCache.values.forEach(path =>
-      graft.operators.Ivf.deleteRecursively(new java.io.File(path)))
-    prunedFpCache.clear()
-    containGuardCache.clear()
-  }
-
-  /** Session registry of PRUNED fingerprint indexes — the production
-    * containment artifact: (fp_hash, doc_id, n_fp) with boilerplate
-    * hashes (df > maxDf) already dropped and each row carrying its
-    * doc's PRUNED fingerprint count. Folding the hot-hash prune and
-    * the per-doc sizes into the build (they are corpus-global facts,
-    * not query-time choices) means the WARM containment plan is one
+  /** Build-once PRUNED fingerprint index — the production containment
+    * artifact: (fp_hash, doc_id, n_fp) with boilerplate hashes
+    * (df > maxDf) already dropped and each row carrying its doc's
+    * PRUNED fingerprint count. Folding the hot-hash prune and the
+    * per-doc sizes into the build (they are corpus-global facts, not
+    * query-time choices) means the WARM containment plan is one
     * self-join plus one aggregate: no full-stream df aggregate, no
-    * anti-join per branch, no size joins — the rows on both join
-    * sides already carry n_a/n_b. At 100 TB the index is also
-    * strictly smaller than the raw fingerprint table (the boilerplate
-    * tail is gone), which every consumer pays for otherwise. */
-  private val prunedFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
+    * anti-join per branch, no size joins — the rows on both join sides
+    * already carry n_a/n_b. At 100 TB the index is also strictly
+    * smaller than the raw fingerprint table (the boilerplate tail is
+    * gone), which every consumer pays for otherwise. */
   def materializePrunedFingerprints(spark: SparkSession, dir: String,
-      maxDf: Int): String =
-    prunedFpCache.computeIfAbsent((dir, maxDf), { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("winnow_fps_pruned").toString
-      val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
+      maxDf: Int): String = {
+    val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
+    Artifacts.dir("winnow_fps_pruned", maxDf, fps) { path =>
       val hot = fps.groupBy("fp_hash").agg(count(lit(1)).as("hash_df"))
         .filter(col("hash_df") > maxDf).select("fp_hash")
       val pruned = fps.join(hot, Seq("fp_hash"), "left_anti")
@@ -698,8 +675,8 @@ object TextOps {
         .join(pruned.groupBy("doc_id").agg(count(lit(1)).as("n_fp")),
           Seq("doc_id"))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
+  }
 
   /** Exact pair-enumeration volume of [[containmentPairs]]:
     * Σ_h df_h·(df_h−1)/2 over fingerprint hashes SURVIVING the
@@ -711,26 +688,19 @@ object TextOps {
     * sub-cap df band and the term goes df² — the same hazard class
     * PairGuard already fences for setsim/edit. Computed from the
     * build-once fingerprint table (one map-side-combinable aggregate;
-    * the join itself scans that table twice). */
+    * the join itself scans that table twice), built once per
+    * (fingerprint table, maxDf) so warm calls run no aggregate. */
   def containmentCandidateEstimate(spark: SparkSession, dir: String,
-      maxDf: Int): Double =
-    containGuardCache.computeIfAbsent((dir, maxDf), { _ =>
-      val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
+      maxDf: Int): Double = {
+    val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
+    Artifacts("containment_estimate", maxDf, fps) {
       val r = fps.groupBy("fp_hash").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf)
         .agg(sum(col("df") * (col("df") - 1L)).as("twice_pairs"))
         .head.get(0)
       if (r == null) 0.0 else r.asInstanceOf[Long].toDouble / 2.0
-    })
-
-  /** Per-(dir, maxDf) cache of [[containmentCandidateEstimate]] — the
-    * estimate is a pure function of the immutable corpus (same contract
-    * as the setsim/edit/image guard caches, r16: this was the one guard
-    * still re-running its full-index aggregate on every warm call —
-    * one whole fingerprint-table scan + group-by per query). Cleared
-    * with the fingerprint tables. */
-  private val containGuardCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), java.lang.Double]()
+    }
+  }
 
   /** Cross-document containment via winnowing fingerprints: pairs of
     * documents sharing fingerprint hashes, scored by

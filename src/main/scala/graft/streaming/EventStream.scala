@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.ParquetInput
+import graft.operators.{Artifacts, ParquetInput}
 
 /** Structured Streaming operators over the `events` stream shape
   * (event_id, ts, user_id, event_type, value) — beyond the reference's
@@ -699,16 +699,11 @@ object EventStream extends Serializable {
     * the events table split into 4 deterministic "micro-batches"
     * (event_id mod 4), each batch's sketch rows written through the
     * SAME idempotent sink, totals derived from the stored rows only.
-    * Exact below k ⇒ the driver's oracle pins per-type distinct users. */
+    * Exact below k ⇒ the DuckDB oracle pins per-type distinct users.
+    * The demo table is written once per (events frame, k). */
   def sketchIngestBatchDemo(spark: SparkSession, events: DataFrame,
-      dir: String, k: Int = 65536): DataFrame = {
-    // key includes the events frame's semantic hash (same contract as
-    // hhIngestBatchDemo): a second call with the same dir but a
-    // filtered/transformed events frame gets its own demo table
-    val root = sketchDemoCache.computeIfAbsent(
-      (dir, k, events.queryExecution.analyzed.semanticHash()), { _ =>
-      val out = java.nio.file.Files
-        .createTempDirectory("sketch_ingest").toString
+      k: Int = 65536): DataFrame = {
+    val root = Artifacts.dir("sketch_ingest", k, events) { out =>
       (0L until 4L).foreach { b =>
         idempotentBatchSink(out)(
           batchSketchRows(events.filter(
@@ -716,18 +711,8 @@ object EventStream extends Serializable {
               lit(4L)) === b), k), b)
       }
       graft.functions.SketchMeta.write(spark, out)
-      out
-    })
+    }
     sketchIngestTotals(spark, root, k)
-  }
-
-  private val sketchDemoCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), String]()
-
-  def clearSketchDemoCache(): Unit = {
-    sketchDemoCache.values.forEach(p =>
-      graft.operators.Ivf.deleteRecursively(new java.io.File(p)))
-    sketchDemoCache.clear()
   }
 
   /** Streaming HEAVY-HITTERS ingest — the frequent-items twin of
@@ -787,19 +772,14 @@ object EventStream extends Serializable {
     * exact regime holds at EVERY scale factor (the item vocabulary,
     * unlike user ids, does not grow with the data). */
   def hhIngestBatchDemo(spark: SparkSession, events: DataFrame,
-      dir: String, k: Int = 256, top: Int = 5,
+      k: Int = 256, top: Int = 5,
       item: Column = col("user_id").cast("string"),
       itemName: String = "user_id"): DataFrame = {
-    // the cache key carries the item expression's canonical SQL and the
-    // events frame's semantic hash, not just (dir, k, itemName): two
-    // calls sharing a dir/name but binding a different item column or a
-    // filtered events frame must land separate demo tables, not silently
-    // read the first call's stored states
-    val root = hhDemoCache.computeIfAbsent(
-      (dir, k, itemName, item.toString,
-        events.queryExecution.analyzed.semanticHash()), { _ =>
-      val out = java.nio.file.Files
-        .createTempDirectory("hh_ingest").toString
+    // the item expression is part of the key: two calls binding a
+    // different item column over one events frame must land separate
+    // demo tables, not silently read the first call's stored states
+    val root = Artifacts.dir("hh_ingest", (k, itemName, item.toString),
+        events) { out =>
       (0L until 4L).foreach { b =>
         idempotentBatchSink(out)(
           batchHhRows(events.filter(
@@ -807,18 +787,8 @@ object EventStream extends Serializable {
               lit(4L)) === b), k, item), b)
       }
       graft.functions.SketchMeta.write(spark, out)
-      out
-    })
+    }
     hhIngestTotals(spark, root, k, top, itemName)
-  }
-
-  private val hhDemoCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String, String, Int), String]()
-
-  def clearHhDemoCache(): Unit = {
-    hhDemoCache.values.forEach(p =>
-      graft.operators.Ivf.deleteRecursively(new java.io.File(p)))
-    hhDemoCache.clear()
   }
 
   /** Per-window distribution-drift monitor (batch form): KL divergence of

@@ -24,10 +24,8 @@ object PairVolumeProbe {
       val edit = graft.operators.Dedup.editCandidateEstimate(spark, dir, 8)
       val p = graft.operators.Dedup.materializeSetSimTables(spark, dir)
       val setsim = graft.operators.Dedup.setSimCandidateEstimate(
-        spark, dir, 0.5, 3, graft.operators.Dedup.DefaultHotDf,
         ParquetInput.read(spark, s"$p/prefix"),
-        ParquetInput.read(spark, s"$p/prefix2"),
-        cacheable = true)
+        ParquetInput.read(spark, s"$p/prefix2"))
       println(f"""{"probe":"pair_volume","dir":"$dir","edit_candidates":$edit%.0f,"setsim_candidates":$setsim%.0f}""")
     }
     spark.stop()

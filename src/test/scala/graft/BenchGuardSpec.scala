@@ -38,4 +38,19 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.maxLedgerN(body) >= 9,
       "the committed n>=9 ledger must arm the no-clobber guard")
   }
+
+  test("errorRecord keeps the query, pass, exception class and first " +
+      "message line as one JSON object") {
+    val e = new IllegalStateException("bad \"plan\"\n\tat line two")
+    val rec = graft.core.Json.parse(Bench.errorRecord("q_x", "rep2", e))
+    assert(rec.isDefined)
+    def field(k: String) = rec.flatMap(graft.core.Json.str(_, k))
+    assert(field("query").contains("q_x"))
+    assert(field("pass").contains("rep2"))
+    assert(field("class").contains("java.lang.IllegalStateException"))
+    assert(field("message").contains("bad \"plan\""))
+    val noMessage = graft.core.Json.parse(
+      Bench.errorRecord("q_y", "warmup", new RuntimeException()))
+    assert(noMessage.flatMap(graft.core.Json.str(_, "message")).contains(""))
+  }
 }

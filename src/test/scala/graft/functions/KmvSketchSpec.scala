@@ -102,7 +102,7 @@ class KmvSketchSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val got = merged.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === direct, s"merged $got vs direct $direct")
-    SketchOps.clearSnapshotDemoCache()
+    graft.operators.Artifacts.clear()
   }
 
   test("snapshotDelta: set-difference/overlap reads are exact below k, " +
@@ -142,7 +142,7 @@ class KmvSketchSpec extends SparkSpec {
       ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5)))).toMap
     assert(got === want, s"delta $got vs raw truth $want")
-    SketchOps.clearSnapshotDemoCache()
+    graft.operators.Artifacts.clear()
   }
 
   test("snapshotDelta estimator regime (k far below distincts): derived " +
@@ -164,7 +164,7 @@ class KmvSketchSpec extends SparkSpec {
         s"${r.getString(0)}: overlap $overlap outside [0, " +
           s"${math.min(prev, nw)}]")
     }
-    SketchOps.clearSnapshotDemoCache()
+    graft.operators.Artifacts.clear()
   }
 
   test("sketch rollup: every level exact below k, one raw scan") {

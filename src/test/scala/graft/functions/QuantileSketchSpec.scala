@@ -214,7 +214,7 @@ class QuantileSketchSpec extends SparkSpec {
     val got = drift.collect().map(r => r.getString(0) ->
       ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(got === want, s"drift $got vs raw truth $want")
-    SketchOps.clearQuantileSnapshotDemoCache()
+    graft.operators.Artifacts.clear()
   }
 
   test("mergeStatesExpr at 50k struct elements: sortedDedup keeps " +

@@ -225,7 +225,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("materialized signatures: identical pairs, no recompute in plan") {
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
     val recomputed = Dedup.minHashPairs(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val mat = Dedup.minHashPairsMaterialized(spark, sfDir)
@@ -239,13 +239,13 @@ class DedupSpec extends SparkSpec {
     // build-once: same path on re-request; clear deletes the directory
     val p1 = Dedup.materializeSignatures(spark, sfDir)
     assert(p1 === Dedup.materializeSignatures(spark, sfDir))
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
     assert(!new java.io.File(p1).exists())
   }
 
   test("materialized pair table: identical pairs, consumers scan it " +
       "(no band pipeline in the plan)") {
-    Dedup.clearPairCache()
+    Artifacts.clear()
     try {
       val recompute = Dedup.minHashPairs(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -262,7 +262,7 @@ class DedupSpec extends SparkSpec {
       val keepPlan = Dedup.minHashKeep(spark, sfDir, materialized = true)
         .queryExecution.executedPlan.toString
       assert(!keepPlan.contains("minhash_signature"), keepPlan.take(2000))
-    } finally Dedup.clearPairCache()
+    } finally Artifacts.clear()
   }
 
   test("stream-static near-dup: live docs matched against the sig index") {
@@ -273,7 +273,7 @@ class DedupSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("streamdedup").toString
     Seq((1L, base), (2L, other)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
     // batch mode: a near-copy matches its source exactly once, estimate
     // close to the true Jaccard; a novel doc matches nothing
     val probe = Seq((100L, base + " extra tail"), (101L, "совсем novel"))
@@ -296,7 +296,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === Set((100L, 1L)))
     } finally query.stop()
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
   }
 
   test("liveNearDupIngest: the index GROWS across micro-batches and " +
@@ -616,14 +616,14 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("ccdedup").toString
     df.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
     val clusters = Dedup.minHashClusters(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(clusters === Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)))
     val kept = Dedup.minHashClusterKeep(spark, tmp).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 9L))
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
   }
 
   test("clusterKeepBest keeps the LONGEST cluster member, not the min id; " +
@@ -642,7 +642,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("bestkeep").toString
     df.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
     val kept = Dedup.clusterKeepBest(spark, tmp).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(2L, 9L),
@@ -661,7 +661,7 @@ class DedupSpec extends SparkSpec {
     assert(w(9L) === ((1L, 1.0)), s"singleton weighs 1: $w")
     assert(math.abs(w.values.map(_._2).sum - keptMin.size) < 1e-3,
       "total soft mass must equal the hard-dedup kept count")
-    Dedup.clearSignatureCache()
+    Artifacts.clear()
   }
 
   test("spanDedup: repeated span kept once, exact dup collapses to empty") {
@@ -840,7 +840,7 @@ class DedupSpec extends SparkSpec {
     assert(fAfter <= 32,
       s"probe reads $fAfter files after compaction — not the ≤16-bucket " +
         s"constant (was $fBefore before compaction)")
-    Ivf.deleteRecursively(tmpRoot.toFile)
+    Artifacts.deleteRecursively(tmpRoot.toFile)
   }
 
   test("repeatedSpans finds arbitrary-offset shared substrings, merges " +
@@ -942,7 +942,7 @@ class DedupSpec extends SparkSpec {
         r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(direct === out,
       s"pruned probe diverged from unpruned: ${direct.mkString(",")}")
-    Ivf.deleteRecursively(tmpRoot.toFile)
+    Artifacts.deleteRecursively(tmpRoot.toFile)
   }
 
   test("setSimPairs: prefix filtering finds EXACTLY the brute-force " +
@@ -1124,7 +1124,7 @@ class DedupSpec extends SparkSpec {
       Dedup.spanGuardProbe(spark, exactIdx, incoming)
     }
     assert(eM.getMessage.contains("_graft_gram_meta"), eM.getMessage)
-    Ivf.deleteRecursively(tmpRoot.toFile)
+    Artifacts.deleteRecursively(tmpRoot.toFile)
   }
 
   test("span-guard empty-history bootstrap: a zero-gram index probes to " +
@@ -1141,26 +1141,7 @@ class DedupSpec extends SparkSpec {
       Seq((900L, (0 until 20).map(j => s"w$j").mkString(" ")))
         .toDF("doc_id", "text"))
     assert(out.count() === 0L, "empty history flags nothing")
-    Ivf.deleteRecursively(tmpRoot.toFile)
-  }
-
-  test("clearGramIndexCache deletes the materialized demo index dirs") {
-    import spark.implicits._
-    val boiler = (1 to 10).map(i => s"c$i").mkString(" ")
-    val docs = (0 until 10).map(i => (i.toLong,
-      s"${(0 until 10).map(j => s"d${i}x$j").mkString(" ")} $boiler"))
-    val tmp = java.nio.file.Files.createTempDirectory("sgcache").toString
-    docs.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    Dedup.clearGramIndexCache()
-    Dedup.spanGuard(spark, tmp).count()
-    val dirs = Dedup.gramIndexCache.values.toList
-    assert(dirs.nonEmpty, "spanGuard must register its demo index")
-    assert(dirs.forall(p => new java.io.File(p).exists()))
-    Dedup.clearGramIndexCache()
-    assert(dirs.forall(p => !new java.io.File(p).exists()),
-      "clear must delete the temp index dirs, not just forget them")
-    assert(Dedup.gramIndexCache.isEmpty)
+    Artifacts.deleteRecursively(tmpRoot.toFile)
   }
 
   test("live span guard rides the ingest loop: regions emitted per " +
@@ -1230,8 +1211,8 @@ class DedupSpec extends SparkSpec {
     val b2 = spark.read.parquet(s"$gout/batch=2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(b2.toSeq === Seq((20L, 2L, 17L, 15L)), s"got ${b2.toSeq}")
-    Dedup.clearSignatureCache()
-    Ivf.deleteRecursively(tmpRoot.toFile)
+    Artifacts.clear()
+    Artifacts.deleteRecursively(tmpRoot.toFile)
   }
 
   test("incremental CC: label-seeded fold-in is bit-identical to " +

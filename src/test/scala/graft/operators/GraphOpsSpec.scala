@@ -110,7 +110,7 @@ class GraphOpsSpec extends SparkSpec {
 
   test("materialized knn edges: identical graph results, edge pipeline " +
       "absent from the consuming plan") {
-    GraphOps.clearEdgeCache()
+    Artifacts.clear()
     try {
       val direct = GraphOps.knnTriangles(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
@@ -132,6 +132,6 @@ class GraphOpsSpec extends SparkSpec {
       assert(pr.keySet === prDirect.keySet)
       pr.foreach { case (n, v) =>
         assert(math.abs(v - prDirect(n)) < 1e-8, s"node $n") }
-    } finally GraphOps.clearEdgeCache()
+    } finally Artifacts.clear()
   }
 }

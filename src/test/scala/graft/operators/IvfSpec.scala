@@ -44,7 +44,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("materialized probe prunes partitions: only nprobe cells scanned") {
-    Ivf.clearIndexCache()
+    Artifacts.clear()
     val (path, centroids) = Ivf.materializeIndex(spark, sfDir, nlist = 16)
     val q = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 0L).select("embedding")
@@ -73,9 +73,9 @@ class IvfSpec extends SparkSpec {
     // a different trainSample is a DIFFERENT index (cache keys on it)
     val (path3, _) = Ivf.materializeIndex(spark, sfDir, nlist = 16,
       trainSample = 128)
-    assert(path3 !== path, "trainSample must be part of the cache key")
-    // clearIndexCache deletes the materialized temp directories
-    Ivf.clearIndexCache()
+    assert(path3 !== path, "trainSample must be part of the key")
+    // the store's clear deletes the materialized temp directories
+    Artifacts.clear()
     assert(!new java.io.File(path).exists(), "clear must delete index dirs")
     assert(!new java.io.File(path3).exists(), "clear must delete index dirs")
   }

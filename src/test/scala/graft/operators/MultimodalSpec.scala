@@ -128,7 +128,7 @@ class MultimodalSpec extends SparkSpec {
       "materialized dHash index, batch twin agrees") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    Multimodal.clearDHashCache()
+    Artifacts.clear()
     // probe: a pixel-identical re-upload of asset 3 under a new id, and
     // a genuinely novel image. NOTE: the synthetic rule is fully periodic
     // mod 256 and ids 0..499 cover every residue class, so ANY
@@ -231,7 +231,7 @@ class MultimodalSpec extends SparkSpec {
     // the materialized (build-once parquet index) path yields identical
     // pairs, reuses its directory across calls, and never re-decodes:
     // its plan carries no codec UDF, only the parquet scan of the index
-    Multimodal.clearDHashCache()
+    Artifacts.clear()
     val mat = Multimodal.imageNearDupPairs(spark, sfDir, maxHamming = 2,
       materialized = true)
     assert(mat.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -240,7 +240,7 @@ class MultimodalSpec extends SparkSpec {
       "materialized join must read the index, not re-run the codec")
     val p1 = Multimodal.materializeDHashIndex(spark, sfDir)
     assert(Multimodal.materializeDHashIndex(spark, sfDir) === p1)
-    Multimodal.clearDHashCache()
+    Artifacts.clear()
     assert(!new java.io.File(p1).exists())
   }
 
@@ -266,6 +266,6 @@ class MultimodalSpec extends SparkSpec {
         .queryExecution.sparkPlan.toString
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"), plan)
-    } finally Multimodal.clearDHashCache()
+    } finally Artifacts.clear()
   }
 }

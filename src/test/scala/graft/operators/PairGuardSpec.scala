@@ -67,8 +67,7 @@ class PairGuardSpec extends SparkSpec {
     def directRows(df: org.apache.spark.sql.DataFrame, key: String) =
       df.select(col(key)).join(df.select(col(key)), Seq(key)).count()
     val direct = directRows(prefix, "tok") + directRows(prefix2, "key")
-    val est = Dedup.setSimCandidateEstimate(spark, sfDir, 0.5, 3,
-      Dedup.DefaultHotDf, prefix, prefix2, cacheable = false)
+    val est = Dedup.setSimCandidateEstimate(prefix, prefix2)
     assert(est === direct.toDouble,
       s"estimate $est must equal the joins' enumerated rows $direct")
   }

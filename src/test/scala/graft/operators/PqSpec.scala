@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 class PqSpec extends SparkSpec {
 
   test("codebooks: deterministic, m subspaces of k centroids of dim/m") {
-    Pq.clearCodebookCache()
+    Artifacts.clear()
     val b1 = Pq.trainCodebooks(spark, sfDir, m = 8, k = 16)
     // cache hit returns the same table; a cold retrain must reproduce it
     assert(Pq.trainCodebooks(spark, sfDir, m = 8, k = 16) eq b1)
-    Pq.clearCodebookCache()
+    Artifacts.clear()
     val b2 = Pq.trainCodebooks(spark, sfDir, m = 8, k = 16)
     assert(b1.length === 8)
     b1.foreach { book =>
@@ -94,7 +94,7 @@ class PqSpec extends SparkSpec {
 
   test("IVF-PQ composed index: partition-pruned probe, build-once cache, " +
       "re-rank stage equals exact cosine on the shortlist") {
-    Pq.clearIvfPqCache()
+    Artifacts.clear()
     val (path, _, _) = Pq.materializeIvfPqIndex(spark, sfDir)
     // the composed table carries cell partitions AND 4-byte codes
     val idx = spark.read.parquet(path)
@@ -117,7 +117,7 @@ class PqSpec extends SparkSpec {
     // build-once: second call reuses the same directory
     val (path2, _, _) = Pq.materializeIvfPqIndex(spark, sfDir)
     assert(path2 === path)
-    Pq.clearIvfPqCache()
+    Artifacts.clear()
     assert(!new java.io.File(path).exists(), "clear must delete index dirs")
   }
 
@@ -160,8 +160,8 @@ class PqSpec extends SparkSpec {
       assert(scans.exists(_.partitionFilters
         .exists(_.references.exists(_.name == "cluster"))))
     } finally {
-      Ivf.deleteRecursively(new java.io.File(pGrow))
-      Ivf.deleteRecursively(new java.io.File(pOne))
+      Artifacts.deleteRecursively(new java.io.File(pGrow))
+      Artifacts.deleteRecursively(new java.io.File(pOne))
     }
   }
 
@@ -210,7 +210,7 @@ class PqSpec extends SparkSpec {
   test("rebuild-and-swap closes the serving loop: drift trips the " +
       "imbalance alarm, the fresh-path rebuild clears it and recovers " +
       "recall in the drifted region") {
-    Pq.clearRebuildDemoCache()
+    Artifacts.clear()
     val row = Pq.annRebuildRecovery(spark, sfDir).collect()(0)
     val (imbD, alarm, imbR, cleared) = (row.getDouble(0), row.getBoolean(1),
       row.getDouble(2), row.getBoolean(3))
@@ -229,10 +229,10 @@ class PqSpec extends SparkSpec {
     assert(recR >= 0.5, s"rebuilt recall unusably low: $recR")
     // determinism: a second call (cache-cleared cold rebuild) reproduces
     // every pinned value — the property the golden oracle rests on
-    Pq.clearRebuildDemoCache()
+    Artifacts.clear()
     val again = Pq.annRebuildRecovery(spark, sfDir).collect()(0)
     assert(again === row, "rebuild demo must be deterministic")
-    Pq.clearRebuildDemoCache()
+    Artifacts.clear()
     // an even (base-side) query id is a misuse of the demo, named error
     val e = intercept[IllegalArgumentException](
       Pq.annRebuildRecovery(spark, sfDir, queryId = 2L))
@@ -249,7 +249,7 @@ class PqSpec extends SparkSpec {
         math.sin(i * 0.7 + j * 0.3).toFloat))
     }.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    Pq.clearCodebookCache()
+    Artifacts.clear()
     val books = Pq.trainCodebooks(spark, tmp, m = 8, k = 4)
     books.foreach(book => book.foreach(c => assert(c.length === 4)))
     val codes = Pq.encode(spark, tmp, m = 8, k = 4).collect()
@@ -262,6 +262,6 @@ class PqSpec extends SparkSpec {
     // reconstruction round-trips at the corpus dim
     val rec = Pq.reconstruct(books, codes.head.getSeq[Int](2).toArray)
     assert(rec.length === 32)
-    Pq.clearCodebookCache()
+    Artifacts.clear()
   }
 }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 class QualityModelSpec extends SparkSpec {
 
   test("training is deterministic and build-once cached") {
-    QualityModel.clearWeightCache()
+    Artifacts.clear()
     val w1 = QualityModel.trainWeights(spark, sfDir)
     assert(QualityModel.trainWeights(spark, sfDir) eq w1, "cache hit")
-    QualityModel.clearWeightCache()
+    Artifacts.clear()
     val w2 = QualityModel.trainWeights(spark, sfDir)
     // exact-decimal gradient sums → bit-identical weights on retrain
     assert(w1.toSeq === w2.toSeq)

@@ -106,7 +106,7 @@ class RangeJoinSpec extends SparkSpec {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    RangeJoin.clearGuardCache() // count this call's own pricing action
+    Artifacts.clear() // count this call's own pricing action
     try {
       // construction runs ONLY the guard (the join itself is lazy)
       RangeJoin.overlapJoin(a, col("alo"), col("ahi"),

@@ -246,7 +246,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("containment materialized: identical pairs, winnow-free plan") {
-    TextOps.clearFingerprintCache()
+    Artifacts.clear()
     try {
       val recompute = TextOps.containmentPairs(spark, sfDir)
       val mat = TextOps.containmentPairs(spark, sfDir, materialized = true)
@@ -276,7 +276,7 @@ class TextOpsSpec extends SparkSpec {
         s"warm plan must scan only the pruned index:\n$plan")
       assert(TextOps.containmentPairs(spark, sfDir)
         .queryExecution.executedPlan.toString.contains("winnow_fingerprints"))
-    } finally TextOps.clearFingerprintCache()
+    } finally Artifacts.clear()
   }
 
   test("containment fan-out guard: boilerplate saturation refuses before the df-squared join") {

@@ -620,7 +620,7 @@ class EventStreamSpec extends SparkSpec {
     assert(!replayed, "committed batch must not rewrite")
     assert(sketchIngestTotals(spark, out, k = 1024).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap === got)
-    graft.operators.Ivf.deleteRecursively(root.toFile)
+    graft.operators.Artifacts.deleteRecursively(root.toFile)
   }
 
   test("heavy-hitters ingest: per-batch MG rows through the idempotent " +
@@ -656,13 +656,13 @@ class EventStreamSpec extends SparkSpec {
     assert(!replayed, "committed batch must not rewrite")
     assert(hhIngestTotals(spark, out, k = 64, top = 2).collect()
       .map(r => (r.getString(1), r.getLong(2))).toSeq === got.toSeq)
-    graft.operators.Ivf.deleteRecursively(root.toFile)
+    graft.operators.Artifacts.deleteRecursively(root.toFile)
   }
 
   test("hhIngestBatchDemo matches exact per-type top users on the " +
       "fixture") {
     val events = graft.operators.Relational.events(spark, sfDir)
-    val got = hhIngestBatchDemo(spark, events, sfDir).collect()
+    val got = hhIngestBatchDemo(spark, events).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("event_type")
@@ -674,18 +674,18 @@ class EventStreamSpec extends SparkSpec {
       .select("event_type", "user_id", "n_events").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === want)
-    clearHhDemoCache()
+    graft.operators.Artifacts.clear()
   }
 
   test("sketchIngestBatchDemo totals equal exact per-type distincts " +
       "on the fixture") {
     val events = graft.operators.Relational.events(spark, sfDir)
-    val got = sketchIngestBatchDemo(spark, events, sfDir).collect()
+    val got = sketchIngestBatchDemo(spark, events).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = events.groupBy("event_type")
       .agg(countDistinct("user_id").as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === want)
-    clearSketchDemoCache()
+    graft.operators.Artifacts.clear()
   }
 }
