@@ -19,12 +19,13 @@ import graft.operators.{Dedup, GraphOps, Pipeline, Pq, TextOps}
   * }}}
   *
   * Arguments bind at analysis time (literals only, like the source TVFs);
-  * the returned plan is the operator's own lazy DataFrame plan, so
-  * Catalyst sees through the TVF — filters on the outer query push into
-  * the underlying parquet scans exactly as with the Scala factories.
-  * `corpus_pagerank`/`corpus_ann_probe` build their build-once edge
-  * table / IVF-PQ index AT analysis (session-cached, shared with the
-  * Scala API's `materialized = true` paths), mirroring
+  * the returned plan is the operator's own DataFrame plan, so Catalyst
+  * sees through the TVF — filters on the outer query push into the
+  * underlying parquet scans exactly as with the Scala factories. A TVF
+  * over a build-once operator (`corpus_clean`, `corpus_neardup_pairs`,
+  * `corpus_dedup_keep`, `corpus_pagerank`, `corpus_ann_probe`, …) builds
+  * its artifact AT analysis — the same [[graft.operators.Artifacts]]
+  * entry the Scala API serves — mirroring
   * [[SudanExtension.registerAnalytics]]'s documented trade. */
 object CorpusTableFunctions {
 
@@ -115,8 +116,7 @@ object CorpusTableFunctions {
         Set.empty)
       plan(Pipeline.cleanCorpus(SparkSession.active, reqDir(fn, bound),
         minWords = optNum(fn, bound, "min_words", 30).toInt,
-        threshold = optNum(fn, bound, "threshold", 0.5),
-        materialized = true))
+        threshold = optNum(fn, bound, "threshold", 0.5)))
     }
 
     tvf("corpus_stats",
@@ -188,8 +188,7 @@ object CorpusTableFunctions {
       val fn = "corpus_dedup_keep"
       val bound = bind(fn, args, Seq("dir", "threshold"), Set.empty)
       plan(Dedup.minHashKeep(SparkSession.active, reqDir(fn, bound),
-        threshold = optNum(fn, bound, "threshold", 0.5),
-        materialized = true))
+        threshold = optNum(fn, bound, "threshold", 0.5)))
     }
 
     tvf("corpus_repeated_spans",
@@ -287,7 +286,7 @@ object CorpusTableFunctions {
         "(build-once edge table; 10 power iterations).",
       "SELECT * FROM corpus_pagerank('/data/c1') ORDER BY pr DESC LIMIT 10;"
     )(dirOnly("corpus_pagerank")(
-      (s, d) => GraphOps.knnPageRank(s, d, materialized = true)))
+      (s, d) => GraphOps.knnPageRank(s, d)))
 
     tvf("corpus_decontaminate",
       "corpus_decontaminate(dir[, eval_max_id[, n]]) - Benchmark " +
@@ -315,8 +314,7 @@ object CorpusTableFunctions {
         Set.empty)
       plan(TextOps.evalContainment(SparkSession.active, reqDir(fn, bound),
         evalMaxId = optNum(fn, bound, "eval_max_id", 10).toLong,
-        minContainment = optNum(fn, bound, "threshold", 0.2),
-        materialized = true))
+        minContainment = optNum(fn, bound, "threshold", 0.2)))
     }
 
     tvf("corpus_dataset_card",

@@ -30,20 +30,15 @@ private[graft] object DedupEntries {
     "q_setsim_pairs" -> ((s, d) => Dedup.setSimPairs(s, d)),
     "q_jaccard" -> (Dedup.jaccardPairs _),
     "q_char_jaccard" -> ((s, d) => Dedup.charJaccardPairs(s, d)),
-    // the entries run the build-once/probe-many shape (signatures read
-    // from the materialized parquet table, not recomputed per join side —
-    // same principle as the IVF index; output spec-pinned identical to
-    // the recomputing form)
-    // the pair pipeline itself is build-once: every minhash consumer
-    // (keep, clusters, clean corpus, audits, source matrix) scans the
+    // the pair pipeline is build-once: every minhash consumer (keep,
+    // clusters, clean corpus, audits, source matrix) scans the
     // materialized (doc_a, doc_b, jaccard) table
-    "q_minhash_pairs" -> ((s, d) => Dedup.minHashPairsCached(s, d)),
-    "q_minhash_keep" -> ((s, d) => Dedup.minHashKeep(s, d, materialized = true)),
+    "q_minhash_pairs" -> ((s, d) => Dedup.minHashPairs(s, d)),
+    "q_minhash_keep" -> ((s, d) => Dedup.minHashKeep(s, d)),
     // transitive dedup: connected components over the near-dup pair graph;
     // the labels come from the build-once assignment table (CC runs once
     // per corpus snapshot — the report and the keep-filter both scan it)
-    "q_dedup_clusters" -> ((s, d) =>
-      Dedup.minHashClusters(s, d, materialized = true)),
+    "q_dedup_clusters" -> ((s, d) => Dedup.minHashClusters(s, d)),
     // incremental CC: history half labeled once, new half folded in via
     // label edges — history's EDGES never re-read, output ≡ one-shot
     "q_cc_incremental" -> ((s, d) =>
@@ -53,8 +48,7 @@ private[graft] object DedupEntries {
     // table) — the embedding-model training-data consumer of the graph
     "q_contrastive_pairs" -> ((s, d) =>
       Dedup.contrastivePairs(s, d)),
-    "q_cluster_keep" -> ((s, d) =>
-      Dedup.minHashClusterKeep(s, d, materialized = true)),
+    "q_cluster_keep" -> ((s, d) => Dedup.minHashClusterKeep(s, d)),
     // quality-weighted canonical selection: keep the LONGEST member of
     // each near-dup cluster (tie → min doc_id), not the min-id one
     "q_cluster_keep_best" -> ((s, d) => Dedup.clusterKeepBest(s, d)),

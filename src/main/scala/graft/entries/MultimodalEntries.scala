@@ -27,13 +27,11 @@ private[graft] object MultimodalEntries {
     "q_image_meta" -> (Multimodal.imageMeta _),
     "q_image_resize" -> ((s, d) => Multimodal.imageResize(s, d)),
     "q_image_dhash" -> (Multimodal.imageDHash _),
-    "q_image_neardup" -> ((s, d) =>
-      Multimodal.imageNearDupPairs(s, d, materialized = true)),
+    "q_image_neardup" -> ((s, d) => Multimodal.imageNearDupPairs(s, d)),
     // linear-scale dedup form: distinct-dHash band join + CC, one
     // canonical asset per transitive near-dup cluster (the pair set is
     // output-quadratic on duplication-heavy corpora — see scaladoc)
-    "q_image_keep" -> ((s, d) =>
-      Multimodal.imageNearDupKeep(s, d, materialized = true)),
+    "q_image_keep" -> ((s, d) => Multimodal.imageNearDupKeep(s, d)),
     // REAL audio codec path (JDK javax.sound.sampled WAV): same
     // codec-free-oracle contract as the image family
     "q_audio_meta" -> (Multimodal.audioMeta _),

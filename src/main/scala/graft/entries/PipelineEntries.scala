@@ -26,12 +26,12 @@ private[graft] object PipelineEntries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // LLM-pipeline: the flagship end-to-end cleaning composition
     "q_clean_corpus" -> ((s, d) =>
-      graft.operators.Pipeline.cleanCorpus(s, d, materialized = true)),
+      graft.operators.Pipeline.cleanCorpus(s, d)),
     "q_train_val_split" -> ((s, d) => graft.operators.Pipeline.trainValSplit(s, d)),
     // leakage-free variant: the split hash keys on the near-dup CLUSTER
     // (build-once CC labels), so no val/test doc has a near-dup in train
     "q_leakfree_split" -> ((s, d) =>
-      graft.operators.Pipeline.leakFreeSplit(s, d, materialized = true)),
+      graft.operators.Pipeline.leakFreeSplit(s, d)),
     // DSIR importance weights: target-vs-raw hashed-n-gram LLR, both
     // models 4096 md5-prefix cells (broadcast-sized by construction)
     "q_dsir_weights" -> ((s, d) => graft.operators.Pipeline.dsirWeights(s, d)),
@@ -90,7 +90,7 @@ private[graft] object PipelineEntries {
     "q_length_trim_lang" -> ((s, d) =>
       graft.operators.Pipeline.lengthTrimByLang(s, d)),
     "q_clean_audit" -> ((s, d) =>
-      graft.operators.Pipeline.cleanCorpusAudit(s, d, materialized = true)),
+      graft.operators.Pipeline.cleanCorpusAudit(s, d)),
     "q_source_report" -> ((s, d) => graft.operators.Pipeline.sourceReport(s, d)),
     "q_chunk_docs" -> ((s, d) => graft.operators.Pipeline.chunkDocuments(s, d)),
     "q_pack_sequences" -> ((s, d) => graft.operators.Pipeline.packSequences(s, d)),

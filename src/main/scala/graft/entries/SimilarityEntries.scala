@@ -49,8 +49,7 @@ private[graft] object SimilarityEntries {
       Similarity.semanticDecontaminate(s, d)),
     // third leakage modality: winnowed containment of each eval doc in
     // corpus docs (partial quotation/trimmed copies; broadcast eval side)
-    "q_eval_containment" -> ((s, d) =>
-      TextOps.evalContainment(s, d, materialized = true)),
+    "q_eval_containment" -> ((s, d) => TextOps.evalContainment(s, d)),
     // Matryoshka two-stage: 16-dim prefix shortlist → full-vector rerank
     "q_ann_matryoshka" -> ((s, d) =>
       Similarity.matryoshkaTopK(s, d, queryId = 0L)),
@@ -65,10 +64,9 @@ private[graft] object SimilarityEntries {
     // SemDeDup-style semantic clustering + keep over the same pair graph
     // (labels scanned from the build-once assignment table)
     "q_embed_clusters" -> ((s, d) =>
-      Similarity.embedClusters(s, d, numPlanes = 8, materialized = true)),
+      Similarity.embedClusters(s, d, numPlanes = 8)),
     "q_embed_cluster_keep" -> ((s, d) =>
-      Similarity.embedClusterKeep(s, d, numPlanes = 8,
-        materialized = true)),
+      Similarity.embedClusterKeep(s, d, numPlanes = 8)),
     "q_label_centroids" -> (Similarity.labelCentroidCosine _),
     // per-label centroid-distance outlier audit (mislabel detector)
     "q_embed_outliers" -> ((s, d) => Similarity.embedOutliers(s, d)),
@@ -90,18 +88,16 @@ private[graft] object SimilarityEntries {
     // all three graph entries scan the build-once k-NN edge table
     // (the pair pipeline runs once per corpus, not once per query)
     "q_graph_triangles" -> ((s, d) =>
-      graft.operators.GraphOps.knnTriangles(s, d, materialized = true)),
+      graft.operators.GraphOps.knnTriangles(s, d)),
     // oracle-compare rounding (4 dp) passed HERE, not defaulted in the
     // operator: rank resolution on big graphs is the API's business,
     // engine-boundary stability is the oracle's
     "q_graph_pagerank" -> ((s, d) =>
-      graft.operators.GraphOps.knnPageRank(s, d, roundTo = 4,
-        materialized = true)),
+      graft.operators.GraphOps.knnPageRank(s, d, roundTo = 4)),
     // seeded affinity: personalized PageRank teleporting to label-0
     // vectors — rank-by-connectivity-to-the-trusted-cohort
     "q_graph_ppr" -> ((s, d) =>
-      graft.operators.GraphOps.knnSeededRank(s, d, roundTo = 4,
-        materialized = true)),
+      graft.operators.GraphOps.knnSeededRank(s, d, roundTo = 4)),
   )
 
   val oracleSql: Map[String, String] = Map(

@@ -75,8 +75,7 @@ private[graft] object TextEntries {
     "q_top_terms" -> ((s, d) => TextOps.topTerms(s, d)),
     // fingerprints scanned from the build-once table, not re-winnowed
     // per self-join side (plan is winnow-free, spec-guarded)
-    "q_containment" -> ((s, d) =>
-      TextOps.containmentPairs(s, d, materialized = true)),
+    "q_containment" -> ((s, d) => TextOps.containmentPairs(s, d)),
   )
 
   val oracleSql: Map[String, String] = Map(

@@ -110,34 +110,15 @@ object AsOf {
     * `spark.sql.extensions=graft.functions.GraftExtensions` sessions
     * already carry it.
     *
-    * @param autoBroadcast OPT-IN (default false since r16 — the r15
-    *        default-on routing silently re-planned existing callers onto
-    *        the broadcast exec whenever the right side's LOGICAL-STATS
-    *        estimate fit `spark.sql.autoBroadcastJoinThreshold`, and
-    *        stats can badly underestimate after joins/aggregates with
-    *        unknown selectivity — a resource-failure mode, not a
-    *        semantics one, so it must be asked for). When true AND the
-    *        session conf [[AutoBroadcastConf]] is not "false", the
-    *        factory routes to the broadcast exec whenever the estimate
-    *        fits the threshold, and LOGS the decision with the estimated
-    *        size so an executor/driver OOM is attributable. The skew
-    *        story for the common 100 TB enrichment shape: AQE's
-    *        skew-split only matches SMJ/SHJ nodes, so a hot key on the
-    *        sort-merge exec is one straggler task, while the broadcast
-    *        form has no key-partitioned shuffle to skew at all.
-    *        KILL SWITCH: set [[AutoBroadcastConf]] ("spark.graft.asof.
-    *        autoBroadcast") to "false" to pin the merge path session-wide
-    *        even for opted-in callers. For measured routing across ALL
-    *        skew paths (broadcast / merge / salted / bucketed) use
-    *        [[asOfJoinAuto]]; for a LARGE right side with a known hot
-    *        key, [[asOfJoinSalted]]. */
+    * For measured routing across ALL skew paths (broadcast / merge /
+    * salted / bucketed) use [[asOfJoinAuto]]; for a LARGE right side
+    * with a known hot key, [[asOfJoinSalted]]. */
   def asOfJoinExec(left: DataFrame, right: DataFrame, keys: Seq[String],
       ts: String, payload: Seq[String], rename: String => String,
       direction: String = "backward",
-      tolerance: Option[Long] = None,
-      autoBroadcast: Boolean = false): DataFrame =
+      tolerance: Option[Long] = None): DataFrame =
     asOfJoinPlanned(left, right, keys, ts, payload, rename, direction,
-      broadcast = false, tolerance, autoBroadcast = autoBroadcast)
+      broadcast = false, tolerance)
 
   /** Broadcast as-of join ([[graft.plans.BroadcastAsOfJoinExec]]) — the
     * 100 TB enrichment shape: the SMALL right side (reference prices,
@@ -163,8 +144,7 @@ object AsOf {
   private def asOfJoinPlanned(left: DataFrame, right: DataFrame,
       keys: Seq[String], ts: String, payload: Seq[String],
       rename: String => String, direction: String,
-      broadcast: Boolean, tolerance: Option[Long] = None,
-      autoBroadcast: Boolean = false): DataFrame = {
+      broadcast: Boolean, tolerance: Option[Long] = None): DataFrame = {
     require(direction == "backward" || direction == "forward",
       s"direction must be 'backward' or 'forward', got '$direction'")
     tolerance.foreach(t => require(t >= 0, s"tolerance must be >= 0, got $t"))
@@ -229,41 +209,11 @@ object AsOf {
         s"key type mismatch: ${l.name} ${l.dataType} vs ${r.dataType}")
     }
     val carried = carriedNames.map(attr(rPlan, _))
-    // skew routing: AQE's OptimizeSkewedJoin matches only SMJ/SHJ
-    // nodes, so a hot key on the custom sort-merge exec is one
-    // straggler task it cannot split. When the right side's estimated
-    // size fits the session's broadcast threshold, the broadcast exec
-    // is strictly better placed: no key-partitioned shuffle exists to
-    // skew, and the left side streams map-side. Estimate-only check
-    // (logical stats, same signal Spark's own JoinSelection uses);
-    // unknown/huge estimates keep the merge path.
-    val routeBroadcast = broadcast || (autoBroadcast &&
-      spark.conf.get(AutoBroadcastConf, "true").toBoolean && {
-        val threshold = org.apache.spark.sql.internal.SQLConf.get
-          .autoBroadcastJoinThreshold
-        val estimate = rightProj.queryExecution.optimizedPlan.stats.sizeInBytes
-        val fits = threshold > 0 && estimate <= threshold
-        // the routing decision is a default-behavior change with a
-        // resource-failure mode (a stats UNDERestimate can broadcast a
-        // huge right side) — log it so an OOM is attributable, and name
-        // the kill switch (r15 advice)
-        if (fits) org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"asOfJoinExec: routing to BroadcastAsOfJoinExec - right side " +
-            s"stats estimate $estimate bytes <= threshold $threshold " +
-            s"(estimate-only; set $AutoBroadcastConf=false or pass " +
-            "autoBroadcast=false to pin the sort-merge exec)")
-        fits
-      })
     org.apache.spark.sql.graftshim.GraftSqlShim.ofRows(spark,
       graft.plans.AsOfJoinPlan(lPlan, rPlan, lKeys, rKeys, lTs, rTs,
         carried, forward = direction == "forward",
-        broadcast = routeBroadcast, tolerance = tolerance))
+        broadcast = broadcast, tolerance = tolerance))
   }
-
-  /** Session-conf kill switch for [[asOfJoinExec]]'s opt-in broadcast
-    * routing (`autoBroadcast = true`); also gates [[asOfJoinAuto]]'s
-    * broadcast path. */
-  val AutoBroadcastConf = "spark.graft.asof.autoBroadcast"
 
   /** The ts column as an exact Long in its internal unit (micros for
     * timestamps, days for DATE, the raw value for integrals) — the unit
@@ -343,7 +293,7 @@ object AsOf {
     val r = right.withColumn(saltCol,
       explode(sequence(lit(0), lit(salts - 1))))
     asOfJoinPlanned(l, r, keys :+ saltCol, ts, payload, rename, direction,
-      broadcast = false, tolerance, autoBroadcast = false)
+      broadcast = false, tolerance)
       .drop(saltCol)
   }
 
@@ -463,7 +413,7 @@ object AsOf {
       .select((keys :+ bucketCol).map(col) ++ (ts +: payload).map(col): _*)
       .unionByName(carries)
     asOfJoinExec(lb, rightSplit, keys :+ bucketCol, ts, payload, rename,
-      direction, tolerance, autoBroadcast = false)
+      direction, tolerance)
       .drop(bucketCol)
   }
 
@@ -586,10 +536,8 @@ object AsOf {
     val rightRows = row._3.map(scaled).getOrElse(0L)
     val threshold =
       org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    val broadcastFits =
-      spark.conf.get(AutoBroadcastConf, "true").toBoolean &&
-        threshold > 0 &&
-        right.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    val broadcastFits = threshold > 0 &&
+      right.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
     asOfRouteOf(leftRows, maxKey, rightRows, tsSpan, broadcastFits,
       bucketable = tsL.isDefined,
       partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
@@ -644,7 +592,7 @@ object AsOf {
           tolerance, bucketWidth = route.bucketWidth)
       case _ =>
         asOfJoinExec(left, right, keys, ts, payload, rename, direction,
-          tolerance, autoBroadcast = false)
+          tolerance)
     }
   }
 
@@ -657,13 +605,10 @@ object AsOf {
   /** Same workload through the PHYSICAL operator ([[asOfJoinExec]]) —
     * a second gate entry against the identical DuckDB ASOF oracle, so
     * the custom `SparkPlan`'s merge is oracle-checked end-to-end, not
-    * just spec-pinned against the compose form. `autoBroadcast=false`
-    * pins the SORT-MERGE exec: at gate scale the deduped purchases side
-    * fits the broadcast threshold, and without the pin the router would
-    * (correctly) collapse this entry onto q_asof_broadcast's plan. */
+    * just spec-pinned against the compose form. [[asOfJoinExec]] always
+    * plans the SORT-MERGE exec; [[asOfJoinAuto]] is the routed form. */
   def eventsAsOfLastPurchaseExec(spark: SparkSession, dir: String): DataFrame =
-    eventsAsOfVia(spark, dir, (l, r, k, t, p, rn) =>
-      asOfJoinExec(l, r, k, t, p, rn, autoBroadcast = false))
+    eventsAsOfVia(spark, dir, asOfJoinExec(_, _, _, _, _, _))
 
   /** The ROUTED workload (q_asof_auto): [[asOfJoinAuto]] — the full
     * measured router (r16; r15 routed only broadcast-vs-merge inside
@@ -705,8 +650,7 @@ object AsOf {
     * only spec-side); runs through the physical operator. */
   def eventsAsOfNextPurchase(spark: SparkSession, dir: String): DataFrame =
     eventsAsOfVia(spark, dir, (l, r, k, t, p, rn) =>
-      asOfJoinExec(l, r, k, t, p, rn, direction = "forward",
-        autoBroadcast = false))
+      asOfJoinExec(l, r, k, t, p, rn, direction = "forward"))
 
   /** Tolerance demo entry: purchases older than ONE HOUR are stale —
     * the nearest candidate beyond 3.6e9 microseconds becomes a NULL
@@ -714,8 +658,7 @@ object AsOf {
     * + an interval CASE. */
   def eventsAsOfRecentPurchase(spark: SparkSession, dir: String): DataFrame =
     eventsAsOfVia(spark, dir, (l, r, k, t, p, rn) =>
-      asOfJoinExec(l, r, k, t, p, rn, tolerance = Some(3600000000L),
-        autoBroadcast = false))
+      asOfJoinExec(l, r, k, t, p, rn, tolerance = Some(3600000000L)))
 
   private def eventsAsOfVia(spark: SparkSession, dir: String,
       join: (DataFrame, DataFrame, Seq[String], String, Seq[String],

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *    LSH ([[bucketPairs]]): ONE keyed shuffle collects each (band,
   *    band_key) bucket, and within-bucket pairs are emitted by an array
   *    expression — linear in data size, pairs only inside buckets.
-  *  - Signatures are computed in one narrow codegen pass (no shuffle),
-  *    or scanned from a build-once parquet table
-  *    ([[materializeSignatures]]).
+  *  - Signatures are computed in one narrow codegen pass (no shuffle)
+  *    into a build-once parquet table ([[materializeSignatures]]) that
+  *    both sides of the banded join scan.
   *  - Sorted bucket ids give `doc_a < doc_b` for free; `dropDuplicates`
   *    collapses multi-band hits.
   *  - Hot buckets (e.g. boilerplate/empty docs) are the classic skew killer

@@ -116,7 +116,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
   def materializeClusters(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): String = {
-    val pairs = minHashPairsCached(spark, dir, numHashes, bands, threshold,
+    val pairs = minHashPairs(spark, dir, numHashes, bands, threshold,
       maxBucket)
     Artifacts.dir("minhash_clusters", (), pairs) { path =>
       connectedComponents(pairs).write.mode("overwrite").parquet(path)
@@ -125,24 +125,24 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
 
   /** Near-dup clusters over the MinHash pair graph: (doc_id, cluster_id,
     * cluster_n) for every document that has at least one near-duplicate,
-    * cluster_id = min doc_id of the transitive component. Reads the
-    * build-once signature table ([[materializeSignatures]]); with
-    * `materialized = true` the CC labels themselves come from the
-    * build-once assignment table ([[materializeClusters]]) — output
-    * identical by construction (spec-pinned). */
+    * cluster_id = min doc_id of the transitive component. The CC labels
+    * come from the build-once assignment table ([[materializeClusters]]). */
   def minHashClusters(spark: SparkSession, dir: String, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000, materialized: Boolean = false): DataFrame = {
-    val labels =
-      if (materialized) ParquetInput.read(spark, materializeClusters(spark, dir,
-        numHashes, bands, threshold, maxBucket))
-      else connectedComponents(
-        minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
-          maxBucket))
+      maxBucket: Int = 1000): DataFrame =
+    withClusterN(ParquetInput.read(spark, materializeClusters(spark, dir,
+      numHashes, bands, threshold, maxBucket)))
+
+  /** Test reference for [[minHashClusters]]: CC recomputed over the
+    * recomputed pair graph, no artifact. */
+  private[operators] def minHashClustersRecompute(spark: SparkSession,
+      dir: String): DataFrame =
+    withClusterN(connectedComponents(minHashPairsRecompute(spark, dir)))
+
+  private def withClusterN(labels: DataFrame): DataFrame =
     labels.withColumn("cluster_n",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy("cluster_id")))
-  }
 
   /** Incremental connected-components MAINTENANCE: fold a new edge
     * batch into an existing label table without re-reading historical
@@ -180,7 +180,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
   def minHashClustersIncremental(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    val pairs = minHashPairsCached(spark, dir, numHashes, bands,
+    val pairs = minHashPairs(spark, dir, numHashes, bands,
       threshold, maxBucket)
     // the history labeling is a PERSISTED table (the real production
     // contract: last night's job wrote it; tonight's fold-in reads it)
@@ -191,10 +191,8 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
         .write.mode("overwrite").parquet(p)
     }
     val fresh = pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(2)) === 1)
-    incrementalComponents(ParquetInput.read(spark, prevPath), fresh)
-      .withColumn("cluster_n",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id")))
+    withClusterN(
+      incrementalComponents(ParquetInput.read(spark, prevPath), fresh))
   }
 
   /** Contrastive training pairs for embedding/reranker models — the
@@ -222,7 +220,7 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
     // a post-filter over the default-0.5 pair table would silently drop
     // true near-dups in [threshold, 0.5) from the positives AND let them
     // re-enter as label='neg' rows — actively wrong training labels.
-    val pairs = minHashPairsCached(spark, dir, threshold = threshold)
+    val pairs = minHashPairs(spark, dir, threshold = threshold)
       .filter(col("jaccard") >= threshold)
     val pos = pairs.select(col("doc_a"), col("doc_b"),
       lit("pos").as("label"), round(col("jaccard"), 4).as("score"))
@@ -258,19 +256,13 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
     * every near-dup component (plus all singletons) — the strictly
     * stronger form of [[minHashKeep]] (see [[connectedComponents]] for
     * why greedy pair drops under-delete). Anti-join on the non-canonical
-    * members; same bucketed shuffle class as the pair pipeline. With
-    * `materialized = true` the drop set scans the build-once assignment
-    * table instead of re-running CC. */
+    * members of the build-once assignment table ([[materializeClusters]]);
+    * same bucketed shuffle class as the pair pipeline. */
   def minHashClusterKeep(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000, materialized: Boolean = false): DataFrame = {
-    val labels =
-      if (materialized) ParquetInput.read(spark, materializeClusters(spark, dir,
+      maxBucket: Int = 1000): DataFrame = {
+    val drop = ParquetInput.read(spark, materializeClusters(spark, dir,
         numHashes, bands, threshold, maxBucket))
-      else connectedComponents(
-        minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
-          maxBucket))
-    val drop = labels
       .filter(col("cluster_id") =!= col("doc_id")).select("doc_id")
     docs(spark, dir).join(drop, Seq("doc_id"), "left_anti")
   }

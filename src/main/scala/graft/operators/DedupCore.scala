@@ -279,16 +279,6 @@ private[operators] trait DedupCore {
       graft.functions.MinHashExpression.native(col("text"), numHashes)
         .as("sig"))
 
-  /** MinHash-LSH near-duplicate pairs.
-    * signatures → band keys (explode bands×docs) → bucketed self-join on
-    * (band, band_hash) → exact Jaccard verify on the shingle sets.
-    * bands×rows = numHashes; threshold ≈ (1/bands)^(1/rows). */
-  /** @param persistSignatures cache the signature frame across the two
-    *   sides of the banded self-join. The plan otherwise recomputes the
-    *   shingle+minhash UDF on both sides (verified: two FileScan+UDF
-    *   branches). Default OFF: persisted frames outlive the query and
-    *   pollute later queries sharing the session (observed 4-5x bench
-    *   drift); at real scale, materialize signatures to parquet instead. */
   /** One row per (doc, band): band key = hash of the band's sig slice. */
   private[operators] def bandKeysOf(sigs: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
@@ -299,14 +289,5 @@ private[operators] trait DedupCore {
       .select(col("doc_id"), col("band"),
         hash(col("band"), slice(col("sig"), col("band") * rows + 1, lit(rows)))
           .as("band_key"))
-  }
-
-  private[operators] def minHashBandKeys(spark: SparkSession, dir: String,
-      numHashes: Int, bands: Int, persistSignatures: Boolean): DataFrame = {
-    val sigsRaw = minHashSignatures(spark, dir, numHashes)
-    val sigs = if (persistSignatures)
-      sigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sigsRaw
-    bandKeysOf(sigs, numHashes, bands)
   }
 }

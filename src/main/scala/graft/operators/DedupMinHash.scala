@@ -25,18 +25,6 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
         .write.mode("overwrite").parquet(path)
     }
 
-  /** [[minHashPairs]] reading a materialized signature table — the 100 TB
-    * shape (signatures scanned, not recomputed, on both self-join sides).
-    * Results are identical to the recomputing form (spec-pinned). */
-  def minHashPairsMaterialized(spark: SparkSession, dir: String,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame = {
-    val sigs = ParquetInput.read(spark,
-      materializeSignatures(spark, dir, numHashes))
-    verifyPairs(spark, dir,
-      bucketPairs(bandKeysOf(sigs, numHashes, bands), maxBucket), threshold)
-  }
-
   /** Build-once PAIR table — one step further than the signature
     * table: the banded candidate join + exact-Jaccard verify runs once
     * per corpus, and every downstream consumer (keep filter, cluster
@@ -46,7 +34,9 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
     * once, anti-join it into every downstream read" — the steady-state
     * 100 TB shape, where the pair table is corpus-sublinear by
     * construction (bucketed candidates, maxBucket-capped). Keyed on the
-    * signature table's read, which is new whenever the corpus is. */
+    * signature table's read, which is new whenever the corpus is. The
+    * build bands the signature TABLE (scanned, not recomputed, on both
+    * self-join sides). */
   def materializePairs(spark: SparkSession, dir: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): String = {
@@ -54,35 +44,43 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
       materializeSignatures(spark, dir, numHashes))
     Artifacts.dir("minhash_pairs", (bands, threshold, maxBucket), sigs) {
       path =>
-        minHashPairsMaterialized(spark, dir, numHashes, bands, threshold,
+        pairsOfSignatures(spark, dir, sigs, numHashes, bands, threshold,
           maxBucket).write.mode("overwrite").parquet(path)
     }
   }
 
-  /** [[minHashPairs]] served from the build-once pair table. Identical
-    * rows to the computing forms (deterministic pipeline; spec-pinned). */
-  def minHashPairsCached(spark: SparkSession, dir: String,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
+  /** MinHash-LSH near-duplicate pairs (doc_a, doc_b, jaccard), served
+    * from the build-once pair table ([[materializePairs]]).
+    * signatures → band keys (explode bands×docs) → bucketed self-join on
+    * (band, band_hash) → exact Jaccard verify on the shingle sets.
+    * bands×rows = numHashes; threshold ≈ (1/bands)^(1/rows). */
+  def minHashPairs(spark: SparkSession, dir: String, numHashes: Int = 64,
+      bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame =
     ParquetInput.read(spark, materializePairs(spark, dir, numHashes, bands,
       threshold, maxBucket))
+
+  /** Test reference for [[minHashPairs]]: the same pipeline with the
+    * signatures computed inline from the corpus, no artifact. */
+  private[operators] def minHashPairsRecompute(spark: SparkSession,
+      dir: String, numHashes: Int = 64, bands: Int = 16,
+      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
+    pairsOfSignatures(spark, dir, minHashSignatures(spark, dir, numHashes),
+      numHashes, bands, threshold, maxBucket)
+
+  /** The pair pipeline over a (doc_id, sig) frame. */
+  private[operators] def pairsOfSignatures(spark: SparkSession, dir: String,
+      sigs: DataFrame, numHashes: Int, bands: Int, threshold: Double,
+      maxBucket: Int): DataFrame =
+    verifyPairs(spark, dir,
+      bucketPairs(bandKeysOf(sigs, numHashes, bands), maxBucket), threshold)
 
   /** Audit query: the MinHash band buckets a `maxBucket` cap prunes
     * (band, band_key, bucket_n). Empty → the cap dropped nothing. */
   def minHashHotBuckets(spark: SparkSession, dir: String, numHashes: Int = 64,
       bands: Int = 16, maxBucket: Int = 1000): DataFrame =
-    hotBuckets(minHashBandKeys(spark, dir, numHashes, bands,
-      persistSignatures = false), maxBucket)
-
-  def minHashPairs(spark: SparkSession, dir: String, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5,
-      persistSignatures: Boolean = false,
-      maxBucket: Int = 1000): DataFrame =
-    verifyPairs(spark, dir,
-      bucketPairs(
-        minHashBandKeys(spark, dir, numHashes, bands, persistSignatures),
-        maxBucket),
-      threshold)
+    hotBuckets(bandKeysOf(minHashSignatures(spark, dir, numHashes),
+      numHashes, bands), maxBucket)
 
   /** Exact-Jaccard verify of a candidate pair frame: join texts back,
     * compute true n-gram Jaccard with the codegen'd array expressions
@@ -102,22 +100,15 @@ private[operators] trait DedupMinHash { self: DedupCore with DedupSpanGuard =>
   }
 
   /** End-to-end near-dedup filter: drop every document that near-duplicates
-    * a lower-id document (greedy keep-lowest-id over the MinHash pairs).
+    * a lower-id document (greedy keep-lowest-id over the MinHash pairs,
+    * read from the build-once pair table).
     * This is the operator a pretraining pipeline actually ends with; the
-    * anti-join is the same bucketed shape, no extra shuffle class.
-    * @param materialized read signatures from the build-once parquet table
-    *   ([[materializeSignatures]]) instead of recomputing them per join
-    *   side — the steady-state production shape. */
+    * anti-join is the same bucketed shape, no extra shuffle class. */
   def minHashKeep(spark: SparkSession, dir: String, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000, materialized: Boolean = false): DataFrame = {
-    val pairs =
-      if (materialized)
-        minHashPairsCached(spark, dir, numHashes, bands, threshold,
-          maxBucket)
-      else minHashPairs(spark, dir, numHashes, bands, threshold,
-        maxBucket = maxBucket)
-    val drop = pairs.select(col("doc_b").as("doc_id")).distinct()
+      maxBucket: Int = 1000): DataFrame = {
+    val drop = minHashPairs(spark, dir, numHashes, bands, threshold,
+      maxBucket).select(col("doc_b").as("doc_id")).distinct()
     docs(spark, dir).join(drop, Seq("doc_id"), "left_anti")
   }
 

@@ -183,33 +183,46 @@ private[operators] trait DedupSetSim { self: DedupCore =>
     * which bounds their buckets without breaking exactness).
     *
     * Stages (1)–(2) run ONCE per corpus via the build-once tables
-    * ([[materializeSetSimTables]], `materialized = true` default) —
-    * without that, the self-join + verify recompute the shingle
-    * explode on four plan branches (measured 17 s → ~1 s warm at
-    * sf0.1, the same trade every materialized table here makes). */
+    * ([[materializeSetSimTables]]) — without them, the self-join +
+    * verify recompute the shingle explode on four plan branches
+    * (measured 17 s → ~1 s warm at sf0.1, the same trade every
+    * build-once table here makes). */
   def setSimPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.5, shingleK: Int = 3,
-      materialized: Boolean = true,
       hotDf: Int = DefaultHotDf): DataFrame = {
+    requireSetSimParams(threshold, hotDf)
+    val p = materializeSetSimTables(spark, dir, threshold, shingleK, hotDf)
+    setSimJoin(spark, ParquetInput.read(spark, s"$p/sets"),
+      ParquetInput.read(spark, s"$p/prefix"),
+      ParquetInput.read(spark, s"$p/prefix2"), threshold)
+  }
+
+  /** Test reference for [[setSimPairs]]: the sets, prefix and prefix2
+    * frames computed inline from the corpus, no artifact. */
+  private[operators] def setSimPairsRecompute(spark: SparkSession,
+      dir: String, threshold: Double = 0.5, shingleK: Int = 3,
+      hotDf: Int = DefaultHotDf): DataFrame = {
+    requireSetSimParams(threshold, hotDf)
+    val s = docs(spark, dir).select(col("doc_id"),
+      shingleArray(col("text"), shingleK).as("ws"))
+      .withColumn("wh", sort_array(transform(col("ws"), x => xxhash64(x))))
+    val sorted = raritySorted(s, threshold - 0.001)
+    setSimJoin(spark, s, setSimPrefixes(sorted, hotDf),
+      setSimPrefixPairs(sorted, hotDf), threshold)
+  }
+
+  private def requireSetSimParams(threshold: Double, hotDf: Int): Unit = {
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must be in (0, 1]")
     require(hotDf > 0, "hotDf must be positive")
+  }
+
+  /** Candidate generation + verify of [[setSimPairs]] over the sets,
+    * prefix and prefix2 frames. */
+  private def setSimJoin(spark: SparkSession, sets: DataFrame,
+      prefixed: DataFrame, prefixPairs: DataFrame,
+      threshold: Double): DataFrame = {
     val tSlack = threshold - 0.001
-    val (sets, prefixed, prefixPairs) =
-      if (materialized) {
-        val p = materializeSetSimTables(spark, dir, threshold, shingleK,
-          hotDf)
-        (ParquetInput.read(spark, s"$p/sets"),
-          ParquetInput.read(spark, s"$p/prefix"),
-          ParquetInput.read(spark, s"$p/prefix2"))
-      } else {
-        val s = docs(spark, dir).select(col("doc_id"),
-          shingleArray(col("text"), shingleK).as("ws"))
-          .withColumn("wh",
-            sort_array(transform(col("ws"), x => xxhash64(x))))
-        val sorted = raritySorted(s, tSlack)
-        (s, setSimPrefixes(sorted, hotDf), setSimPrefixPairs(sorted, hotDf))
-      }
     // PRE-FLIGHT CANDIDATE GUARD (round-14, verdict task #2): the
     // candidate term Σ_key C(df,2) was MEASURED turning quadratic
     // under full domain saturation (warm ×28 at the second decade,

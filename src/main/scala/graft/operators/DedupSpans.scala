@@ -320,13 +320,13 @@ private[operators] trait DedupSpans { self: DedupCore with DedupMinHash =>
     * (unordered) source pair — the standard corpus-composition diagnostic
     * ("how much of source X is a copy of source Y?") that decides which
     * sources to drop or down-weight before training. Rides entirely on the
-    * build-once MinHash signature table ([[minHashPairsMaterialized]]);
+    * build-once MinHash pair table ([[minHashPairs]]);
     * the extra work over the pair query is two broadcast-size joins back
     * to (doc_id, source) and a tiny group-by — nothing new shuffles at
     * corpus scale. */
   def crossSourceDupMatrix(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame = {
-    val pairs = minHashPairsCached(spark, dir, threshold = threshold)
+    val pairs = minHashPairs(spark, dir, threshold = threshold)
     val src = docs(spark, dir).select(col("doc_id"), col("source"))
     pairs
       .join(src.select(col("doc_id").as("doc_a"),

@@ -231,33 +231,33 @@ object GraphOps {
       numPlanes: Int = 8): String = {
     val e = Tables.embeddings(spark, dir)
     Artifacts.dir("knn_edges", (k, numPlanes), e) { path =>
-      undirect(Similarity.knnJoin(spark, dir, k, numPlanes),
-        "vec_a", "vec_b")
+      knnEdgesRecompute(spark, dir, k, numPlanes)
         .write.mode("overwrite").parquet(path)
     }
   }
 
   private def knnEdges(spark: SparkSession, dir: String, k: Int,
-      numPlanes: Int, materialized: Boolean): DataFrame =
-    if (materialized)
-      ParquetInput.read(spark, materializeKnnEdges(spark, dir, k, numPlanes))
-    else undirect(Similarity.knnJoin(spark, dir, k, numPlanes),
-      "vec_a", "vec_b")
+      numPlanes: Int): DataFrame =
+    ParquetInput.read(spark, materializeKnnEdges(spark, dir, k, numPlanes))
+
+  /** The undirected k-NN edge list derived from the LSH pair pipeline,
+    * no artifact — the build body of [[materializeKnnEdges]] and the
+    * specs' reference for the graph queries below. */
+  private[operators] def knnEdgesRecompute(spark: SparkSession, dir: String,
+      k: Int = 5, numPlanes: Int = 8): DataFrame =
+    undirect(Similarity.knnJoin(spark, dir, k, numPlanes), "vec_a", "vec_b")
 
   /** Demo entries over the k-NN similarity graph ([[Similarity.knnJoin]]
-    * undirected) — the duplication-neighborhood QA report.
-    * @param materialized scan the build-once edge table
-    *   ([[materializeKnnEdges]]) instead of re-deriving the LSH pair
-    *   pipeline per query — the steady-state shape when more than one
-    *   graph query runs per corpus (identical output, spec-pinned). */
+    * undirected) — the duplication-neighborhood QA report. Each scans
+    * the build-once edge table ([[materializeKnnEdges]]), so the LSH
+    * pair pipeline runs once per corpus, not once per graph query. */
   def knnTriangles(spark: SparkSession, dir: String, k: Int = 5,
-      numPlanes: Int = 8, materialized: Boolean = false): DataFrame =
-    triangles(knnEdges(spark, dir, k, numPlanes, materialized))
+      numPlanes: Int = 8): DataFrame =
+    triangles(knnEdges(spark, dir, k, numPlanes))
 
   def knnPageRank(spark: SparkSession, dir: String, k: Int = 5,
-      numPlanes: Int = 8, iters: Int = 10, roundTo: Int = 9,
-      materialized: Boolean = false): DataFrame =
-    pageRank(knnEdges(spark, dir, k, numPlanes, materialized), iters,
+      numPlanes: Int = 8, iters: Int = 10, roundTo: Int = 9): DataFrame =
+    pageRank(knnEdges(spark, dir, k, numPlanes), iters,
       roundTo = roundTo)
 
   /** Seeded affinity over the k-NN graph: seeds = the vectors of
@@ -265,9 +265,9 @@ object GraphOps {
     * cohort", the label-propagation curation demo. */
   def knnSeededRank(spark: SparkSession, dir: String, seedLabel: Int = 0,
       k: Int = 5, numPlanes: Int = 8, iters: Int = 10,
-      roundTo: Int = 9, materialized: Boolean = false): DataFrame =
+      roundTo: Int = 9): DataFrame =
     personalizedPageRank(
-      knnEdges(spark, dir, k, numPlanes, materialized),
+      knnEdges(spark, dir, k, numPlanes),
       Tables.embeddings(spark, dir).filter(col("label") === seedLabel)
         .select(col("vec_id").as("node")),
       iters, roundTo = roundTo)

@@ -503,9 +503,7 @@ object Multimodal {
     * batch callers get exact pair dedup. */
   def streamImageNearDup(stream: DataFrame, spark: SparkSession,
       dir: String, maxHamming: Int = 2): DataFrame = {
-    require(maxHamming <= 3,
-      s"maxHamming=$maxHamming: with 4 bands the pigeonhole recall " +
-        "guarantee only holds for maxHamming <= 3")
+    requirePigeonhole(maxHamming)
     val hist =
       ParquetInput.read(spark, materializeDHashIndex(spark, dir))
     val histBands = hist
@@ -539,11 +537,9 @@ object Multimodal {
     * distance. Scale: candidate volume is bounded by band-bucket sizes;
     * the join reads the dHash table, never the payloads.
     *
-    * `materialized = true` joins against the build-once parquet index
-    * ([[materializeDHashIndex]]) — the steady-state 100 TB shape, same
-    * switch as `Dedup.minHashPairsMaterialized`. The default cuts
-    * lineage with a localCheckpoint (3 longs/asset in executor memory —
-    * right for one-shot jobs, not for a 10^11-asset corpus).
+    * The join reads the build-once parquet index
+    * ([[materializeDHashIndex]]) — the steady-state 100 TB shape, the
+    * image twin of `Dedup.minHashPairs`' pair table.
     *
     * On the synthetic corpus the pixel rule is periodic — assets with
     * id ≡ id' (mod 256) and equal dims are pixel-IDENTICAL (planted
@@ -564,20 +560,36 @@ object Multimodal {
     * rows are in BENCH_sf10_r14.json). This pairs entry stays because
     * it proves the band join exact. */
   def imageNearDupPairs(spark: SparkSession, dir: String,
-      maxHamming: Int = 2, materialized: Boolean = false): DataFrame = {
+      maxHamming: Int = 2): DataFrame = {
+    requirePigeonhole(maxHamming)
+    dHashPairs(spark, dir,
+      ParquetInput.read(spark, materializeDHashIndex(spark, dir)), maxHamming)
+  }
+
+  /** Test reference for [[imageNearDupPairs]]: the same band join over
+    * dHashes computed inline from the payloads, no index. The
+    * localCheckpoint keeps the self-join from re-running the codec UDF
+    * per side. */
+  private[operators] def imageNearDupPairsRecompute(spark: SparkSession,
+      dir: String, maxHamming: Int = 2): DataFrame = {
+    requirePigeonhole(maxHamming)
+    dHashPairs(spark, dir, imageDHash(spark, dir).localCheckpoint(),
+      maxHamming)
+  }
+
+  /** With 4 bands of 16 bits, Hamming ≤ 3 guarantees a shared band. */
+  private def requirePigeonhole(maxHamming: Int): Unit =
     require(maxHamming <= 3,
       s"maxHamming=$maxHamming: with 4 bands the pigeonhole recall " +
         "guarantee only holds for maxHamming <= 3")
-    // either way the self-join must not re-run the codec UDF per side
-    val hashes =
-      if (materialized)
-        ParquetInput.read(spark, materializeDHashIndex(spark, dir))
-      else imageDHash(spark, dir).localCheckpoint()
+
+  private def dHashPairs(spark: SparkSession, dir: String,
+      hashes: DataFrame, maxHamming: Int): DataFrame = {
     // PRE-FLIGHT CANDIDATE GUARD (round-14, completing the verdict-#2
     // trio): this row is OUTPUT-bound — on a dup-heavy corpus the
     // band buckets hold the Θ(n²) true-pair mass itself — so the
     // guard prices Σ_bucket cnt² from the dHash bands (one narrow agg
-    // over the index, cached per corpus on the materialized path) and
+    // over the hashes, cached per image table) and
     // refuses the regime whose ANSWER is too big to enumerate,
     // pointing at the keep form.
     PairGuard.check(spark, "imageNearDupPairs",
@@ -638,14 +650,9 @@ object Multimodal {
     * edges reach exactly the asset pairs the band join finds (the
     * dHash is the asset's whole signature). */
   def imageNearDupKeep(spark: SparkSession, dir: String,
-      maxHamming: Int = 2, materialized: Boolean = true): DataFrame = {
-    require(maxHamming <= 3,
-      s"maxHamming=$maxHamming: with 4 bands the pigeonhole recall " +
-        "guarantee only holds for maxHamming <= 3")
-    val hashes =
-      if (materialized)
-        ParquetInput.read(spark, materializeDHashIndex(spark, dir))
-      else imageDHash(spark, dir).localCheckpoint()
+      maxHamming: Int = 2): DataFrame = {
+    requirePigeonhole(maxHamming)
+    val hashes = ParquetInput.read(spark, materializeDHashIndex(spark, dir))
     // one row per DISTINCT hash; rep = min asset of the hash class is
     // unique across classes (an asset has exactly one hash)
     val dh = hashes.groupBy("dhash_hi", "dhash_lo")

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * Scale: stages 1-2 are the bucketed-join dedups (never all-pairs, hot
   * buckets capped); 3-4 are narrow column arithmetic fused into the scans.
   * Catalyst plans the whole chain together, so column pruning reaches
-  * every branch. At 100 TB each stage's output would be checkpointed to
-  * parquet between runs; the single-plan form is the correctness contract.
+  * every branch. Stage 2 scans the build-once MinHash pair table
+  * ([[Dedup.materializePairs]]), which is built when the operator is
+  * called; the other stages stay lazy.
   */
 object Pipeline {
 
@@ -56,12 +57,9 @@ object Pipeline {
     * the same narrow md5 gate — split of a 100 TB corpus stays a column,
     * not a job. */
   def leakFreeSplit(spark: SparkSession, dir: String,
-      salt: String = "graft-v1", materialized: Boolean = false): DataFrame = {
+      salt: String = "graft-v1"): DataFrame = {
     val labels =
-      (if (materialized)
-        ParquetInput.read(spark, Dedup.materializeClusters(spark, dir))
-      else Dedup.connectedComponents(
-        Dedup.minHashPairsMaterialized(spark, dir)))
+      ParquetInput.read(spark, Dedup.materializeClusters(spark, dir))
         .select(col("doc_id"), col("cluster_id"))
     val bucket = substring(
       md5(concat(col("cluster_id").cast("string"), lit(salt))), 1, 1)
@@ -831,17 +829,14 @@ object Pipeline {
   }
 
   def cleanCorpus(spark: SparkSession, dir: String, minWords: Int = 30,
-      threshold: Double = 0.5, materialized: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     // stage 1: canonical representative per distinct text — THE
     // Dedup.exactKeep operator, not a re-derivation (one keep rule)
     val kept = Dedup.exactKeep(spark, dir)
-    // stage 2: near-dup drop set (greedy keep-lowest-id); `materialized`
-    // reads the build-once signature table (steady-state shape)
-    val pairs =
-      if (materialized)
-        Dedup.minHashPairsCached(spark, dir, threshold = threshold)
-      else Dedup.minHashPairs(spark, dir, threshold = threshold)
-    val nearDrops = pairs.select(col("doc_b").as("doc_id")).distinct()
+    // stage 2: near-dup drop set (greedy keep-lowest-id) from the
+    // build-once pair table
+    val nearDrops = Dedup.minHashPairs(spark, dir, threshold = threshold)
+      .select(col("doc_b").as("doc_id")).distinct()
     // the corpus-wide word-count definition (one semantics everywhere)
     val nWords = TextOps.nWords
     kept
@@ -905,17 +900,11 @@ object Pipeline {
     * operators and precedence as cleanCorpus, so
     * audit ∪ cleanCorpus ≡ documents (spec-pinned). */
   def cleanCorpusAudit(spark: SparkSession, dir: String, minWords: Int = 30,
-      threshold: Double = 0.5, materialized: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val nWords = TextOps.nWords
     val exactKept = Dedup.exactKeep(spark, dir).select("doc_id")
       .withColumn("_ek", lit(1))
-    // `materialized` reads the build-once signature table — the
-    // steady-state shape, same switch as cleanCorpus
-    val pairs =
-      if (materialized)
-        Dedup.minHashPairsCached(spark, dir, threshold = threshold)
-      else Dedup.minHashPairs(spark, dir, threshold = threshold)
-    val nearDrops = pairs
+    val nearDrops = Dedup.minHashPairs(spark, dir, threshold = threshold)
       .select(col("doc_b").as("doc_id")).distinct()
       .withColumn("_nd", lit(1))
     Tables.documents(spark, dir)

@@ -390,12 +390,11 @@ object Similarity {
     * shares no n-grams, which is exactly the regime MinHash misses.
     * Same distributed min-label propagation ([[Dedup.connectedComponents]]);
     * the pair graph is LSH-bucketed, never all-pairs, so the whole
-    * pipeline is keyed shuffles at 100 TB. */
+    * pipeline is keyed shuffles at 100 TB. The labels come from the
+    * build-once table ([[materializeEmbedClusters]]). */
   def embedClusters(spark: SparkSession, dir: String,
-      minCosine: Double = 0.3, numPlanes: Int = AutoPlanes,
-      materialized: Boolean = false): DataFrame =
-    embedLabels(spark, dir, minCosine,
-      resolvePlanes(spark, dir, numPlanes), materialized)
+      minCosine: Double = 0.3, numPlanes: Int = AutoPlanes): DataFrame =
+    embedLabels(spark, dir, minCosine, numPlanes)
       .withColumn("cluster_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("cluster_id")))
@@ -414,22 +413,25 @@ object Similarity {
     // so two cap settings must not share one materialized label table
     Artifacts.dir("embed_clusters", (minCosine, numPlanes, maxBucket),
         embeddings(spark, dir)) { path =>
-      Dedup.connectedComponents(
-          nearDupPairs(spark, dir, minCosine, numPlanes, maxBucket),
-          aCol = "vec_a", bCol = "vec_b")
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
+      embedLabelsRecompute(spark, dir, minCosine, numPlanes, maxBucket)
         .write.mode("overwrite").parquet(path)
     }
   }
 
   private def embedLabels(spark: SparkSession, dir: String,
-      minCosine: Double, numPlanes: Int, materialized: Boolean): DataFrame =
-    if (materialized)
-      ParquetInput.read(spark, 
-        materializeEmbedClusters(spark, dir, minCosine, numPlanes))
-    else Dedup.connectedComponents(
-      nearDupPairs(spark, dir, minCosine, numPlanes),
-      aCol = "vec_a", bCol = "vec_b")
+      minCosine: Double, numPlanes: Int): DataFrame =
+    ParquetInput.read(spark,
+      materializeEmbedClusters(spark, dir, minCosine, numPlanes))
+
+  /** (vec_id, cluster_id): CC over the embedding near-dup graph, no
+    * artifact — the build body of [[materializeEmbedClusters]] and the
+    * specs' reference for [[embedClusters]]. */
+  private[operators] def embedLabelsRecompute(spark: SparkSession,
+      dir: String, minCosine: Double = 0.3, numPlanes: Int = AutoPlanes,
+      maxBucket: Int = 1000): DataFrame =
+    Dedup.connectedComponents(
+        nearDupPairs(spark, dir, minCosine, numPlanes, maxBucket),
+        aCol = "vec_a", bCol = "vec_b")
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
 
   /** Semantic dedup keep-filter: every embedding except non-canonical
@@ -437,10 +439,8 @@ object Similarity {
     * cluster; vectors with no near-dup pass through untouched). The
     * SemDeDup (Abbas et al., 2023) pruning step as a left-anti join. */
   def embedClusterKeep(spark: SparkSession, dir: String,
-      minCosine: Double = 0.3, numPlanes: Int = AutoPlanes,
-      materialized: Boolean = false): DataFrame = {
-    val drop = embedLabels(spark, dir, minCosine,
-      resolvePlanes(spark, dir, numPlanes), materialized)
+      minCosine: Double = 0.3, numPlanes: Int = AutoPlanes): DataFrame = {
+    val drop = embedLabels(spark, dir, minCosine, numPlanes)
       .filter(col("cluster_id") =!= col("vec_id"))
       .select("vec_id")
     embeddings(spark, dir).join(drop, Seq("vec_id"), "left_anti")

@@ -714,17 +714,15 @@ object TextOps {
     * same hot-bucket cap as Dedup: a gram in thousands of docs carries no
     * pair signal but O(df²) join cost. Sizes use the pruned universe so
     * numerator and denominator agree (exact dups still score 1.0).
-    * @param materialized read the build-once PRUNED fingerprint index
-    *   ([[materializePrunedFingerprints]]: (fp_hash, doc_id, n_fp),
-    *   hot hashes dropped, per-doc pruned sizes inline) — the
-    *   steady-state production shape: the warm plan is ONE self-join
-    *   plus ONE aggregate (winnow-free and full-stream-agg-free,
-    *   spec-guarded output-identical to the declarative form below;
-    *   the recomputing form re-winnows per consumer branch and exists
-    *   for one-shot exploration). */
+    *
+    * Served from the build-once PRUNED fingerprint index
+    * ([[materializePrunedFingerprints]]: (fp_hash, doc_id, n_fp), hot
+    * hashes dropped, per-doc pruned sizes inline) — the production
+    * shape: the warm plan is ONE self-join plus ONE aggregate
+    * (winnow-free and full-stream-agg-free, spec-guarded
+    * output-identical to [[containmentPairsRecompute]]). */
   def containmentPairs(spark: SparkSession, dir: String,
-      maxDf: Int = 100, minContainment: Double = 0.5,
-      materialized: Boolean = false): DataFrame = {
+      maxDf: Int = 100, minContainment: Double = 0.5): DataFrame = {
     // pre-flight (r15, verdict task #6): price the df² join before it
     // runs; a saturated corpus refuses with the remedy named instead of
     // paying for the enumeration. Skips itself when the budget is off.
@@ -735,25 +733,30 @@ object TextOps {
           "maxDf²/2 - the boilerplate band between your current cap and " +
           "the signal-bearing tail is what saturated), or use " +
           "minHashPairs for near-dup recall at scale")
-    if (materialized) {
-      // index rows carry (fp_hash, doc_id, n_fp) with the prune and
-      // sizes baked in at build time: both join sides bring their own
-      // denominator, so the pair aggregate is the whole plan
-      val idx = ParquetInput.read(spark,
-        materializePrunedFingerprints(spark, dir, maxDf))
-      val a = idx.select(col("fp_hash"), col("doc_id").as("doc_a"),
-        col("n_fp").as("n_a"))
-      val b = idx.select(col("fp_hash"), col("doc_id").as("doc_b"),
-        col("n_fp").as("n_b"))
-      return a.join(b, Seq("fp_hash")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(count(lit(1)).as("shared"))
-        .select(col("doc_a"), col("doc_b"), col("shared"),
-          round(col("shared").cast("double") /
-            least(col("n_a"), col("n_b")).cast("double"), 4)
-            .as("containment"))
-        .filter(col("containment") >= minContainment)
-    }
+    // index rows carry (fp_hash, doc_id, n_fp) with the prune and
+    // sizes baked in at build time: both join sides bring their own
+    // denominator, so the pair aggregate is the whole plan
+    val idx = ParquetInput.read(spark,
+      materializePrunedFingerprints(spark, dir, maxDf))
+    val a = idx.select(col("fp_hash"), col("doc_id").as("doc_a"),
+      col("n_fp").as("n_a"))
+    val b = idx.select(col("fp_hash"), col("doc_id").as("doc_b"),
+      col("n_fp").as("n_b"))
+    a.join(b, Seq("fp_hash")).filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b", "n_a", "n_b")
+      .agg(count(lit(1)).as("shared"))
+      .select(col("doc_a"), col("doc_b"), col("shared"),
+        round(col("shared").cast("double") /
+          least(col("n_a"), col("n_b")).cast("double"), 4)
+          .as("containment"))
+      .filter(col("containment") >= minContainment)
+  }
+
+  /** Test reference for [[containmentPairs]]: the declarative form,
+    * re-winnowing the corpus per call, no artifact. */
+  private[operators] def containmentPairsRecompute(spark: SparkSession,
+      dir: String, maxDf: Int = 100,
+      minContainment: Double = 0.5): DataFrame = {
     // Plan shape (round-8 rewrite, was two COUNT WINDOWS): the windowed
     // form shuffled the FULL fingerprint stream twice (fp_hash window,
     // then doc_id window) and — because both self-join branches hang off
@@ -812,18 +815,14 @@ object TextOps {
     * broadcast join → keyed agg over the HITS only (a tiny fraction of
     * the stream). No full-stream shuffle anywhere. */
   def evalContainment(spark: SparkSession, dir: String,
-      evalMaxId: Long = 10L, minContainment: Double = 0.2,
-      materialized: Boolean = false): DataFrame = {
-    val fps =
-      if (materialized)
-        ParquetInput.read(spark, materializeFingerprints(spark, dir))
-      else fingerprints(spark, dir)
+      evalMaxId: Long = 10L, minContainment: Double = 0.2): DataFrame = {
+    val fps = ParquetInput.read(spark, materializeFingerprints(spark, dir))
     // NO forced broadcast hints: the eval side is benchmark-sized in
     // the intended use, but `evalMaxId` is caller-controlled (the SQL
     // TVF exposes it), so a forced build could OOM on a huge "eval"
     // slice. AQE broadcasts the small side at runtime (the common case,
     // spec-asserted) and degrades to a shuffle join when it is not —
-    // the same convention as containmentPairs' hot-hash prune.
+    // the same convention as the containment hot-hash prune.
     val eval = fps.filter(col("doc_id") < evalMaxId)
       .select(col("doc_id").as("eval_id"), col("fp_hash"))
     val evalSizes = eval.groupBy("eval_id")

@@ -99,8 +99,7 @@ object AsOfSkewProbe {
             bucketWidth = bucketW)
         case _ =>
           AsOf.asOfJoinExec(l, r, Seq("k"), "ts",
-            payload = Seq("r_ts", "rv"), rename = "m_" + _,
-            autoBroadcast = false)
+            payload = Seq("r_ts", "rv"), rename = "m_" + _)
       }
 
     val (lu, ru) = (side(leftRows, skewed = false, seed = 11).cache(),

@@ -14,7 +14,7 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   test("corpus_clean / corpus_stats / corpus_lang_id match Scala factories") {
     ready
     val sqlClean = spark.sql(s"SELECT * FROM corpus_clean('$sfDir')")
-    val scalaClean = Pipeline.cleanCorpus(spark, sfDir, materialized = true)
+    val scalaClean = Pipeline.cleanCorpus(spark, sfDir)
     assert(sqlClean.count() === scalaClean.count())
     assert(sqlClean.columns.toSeq === scalaClean.columns.toSeq)
     val sqlStats = spark.sql(
@@ -138,8 +138,8 @@ class CorpusTableFunctionsSpec extends SparkSpec {
     assert(spark.sql(
       s"SELECT * FROM corpus_eval_containment('$sfDir', 10, 0.1)")
       .count() ===
-      graft.operators.TextOps.evalContainment(spark, sfDir, 10L, 0.1,
-        materialized = true).count())
+      graft.operators.TextOps.evalContainment(spark, sfDir, 10L, 0.1)
+        .count())
   }
 
   test("corpus_sketch_sources / corpus_sketch_snapshot_merge bind, " +

@@ -24,7 +24,7 @@ class ArtifactsSpec extends SparkSpec {
     assert(Dedup.materializeClusters(spark, sfDir) === p)
     val labels = ParquetInput.read(spark, p)
     assert(labels.count() ===
-      Dedup.minHashClusters(spark, sfDir, materialized = false).count())
+      Dedup.minHashClustersRecompute(spark, sfDir).count())
   }
 
   test("two threads asking for one key run the build once") {

@@ -85,7 +85,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH plan contains no cartesian product (scale guard)") {
-    val plan = Dedup.minHashPairs(spark, sfDir)
+    val plan = Dedup.minHashPairsRecompute(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       s"candidate generation must be a bucketed equi-join, got:\n$plan")
@@ -151,10 +151,12 @@ class DedupSpec extends SparkSpec {
 
     val uncapped = Dedup.minHashPairs(spark, tmp, maxBucket = 0).collect()
     assert(uncapped.length === 100 * 99 / 2 + 1) // O(hot²) — the scale killer
-    val cappedDf = Dedup.minHashPairs(spark, tmp, maxBucket = 16)
+    val cappedDf = Dedup.minHashPairsRecompute(spark, tmp, maxBucket = 16)
     val capped = cappedDf.collect()
     assert(capped.length === 1) // boilerplate cluster pruned entirely...
     assert(capped(0).getLong(0) === 200L && capped(0).getLong(1) === 201L)
+    assert(Dedup.minHashPairs(spark, tmp, maxBucket = 16).collect().toSeq ===
+      capped.toSeq)
 
     // the prune counter fires INLINE (observe metric on the same query):
     // 16 bands × one 100-doc boilerplate bucket each
@@ -226,9 +228,11 @@ class DedupSpec extends SparkSpec {
 
   test("materialized signatures: identical pairs, no recompute in plan") {
     Artifacts.clear()
-    val recomputed = Dedup.minHashPairs(spark, sfDir).collect()
+    val recomputed = Dedup.minHashPairsRecompute(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val mat = Dedup.minHashPairsMaterialized(spark, sfDir)
+    val mat = Dedup.pairsOfSignatures(spark, sfDir,
+      ParquetInput.read(spark, Dedup.materializeSignatures(spark, sfDir)),
+      numHashes = 64, bands = 16, threshold = 0.5, maxBucket = 1000)
     val materialized = mat.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(materialized === recomputed)
@@ -247,10 +251,10 @@ class DedupSpec extends SparkSpec {
       "(no band pipeline in the plan)") {
     Artifacts.clear()
     try {
-      val recompute = Dedup.minHashPairs(spark, sfDir).collect()
+      val recompute = Dedup.minHashPairsRecompute(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2))
-      val cached = Dedup.minHashPairsCached(spark, sfDir)
+      val cached = Dedup.minHashPairs(spark, sfDir)
       assert(cached.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq === recompute.toSeq)
@@ -259,7 +263,7 @@ class DedupSpec extends SparkSpec {
       val plan = cached.queryExecution.executedPlan.toString
       assert(!plan.contains("minhash_signature") &&
         !plan.contains("Generate"), plan.take(2000))
-      val keepPlan = Dedup.minHashKeep(spark, sfDir, materialized = true)
+      val keepPlan = Dedup.minHashKeep(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(!keepPlan.contains("minhash_signature"), keepPlan.take(2000))
     } finally Artifacts.clear()
@@ -649,7 +653,7 @@ class DedupSpec extends SparkSpec {
       s"best-keep must keep the longest member + the singleton: $kept")
     // min-id keep on the same corpus keeps 1 — the policies differ
     // exactly on the representative
-    val keptMin = Dedup.minHashClusterKeep(spark, tmp, materialized = true)
+    val keptMin = Dedup.minHashClusterKeep(spark, tmp)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptMin === Set(1L, 9L))
     // soft dedup: members of the 3-cluster weigh 1/3, singleton 1;
@@ -724,22 +728,21 @@ class DedupSpec extends SparkSpec {
   }
 
   test("materialized cluster labels equal the recomputed CC output") {
-    val recomputed = Dedup.minHashClusters(spark, sfDir).collect()
+    val recomputed = Dedup.minHashClustersRecompute(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val materialized = Dedup.minHashClusters(spark, sfDir,
-        materialized = true).collect()
+    val materialized = Dedup.minHashClusters(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(materialized === recomputed)
-    val keepRe = Dedup.minHashClusterKeep(spark, sfDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val keepMat = Dedup.minHashClusterKeep(spark, sfDir,
-        materialized = true)
+    val nonCanonical = recomputed.filter(t => t._1 != t._2).map(_._1)
+    val keepRe = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id").collect().map(_.getLong(0)).toSet -- nonCanonical
+    val keepMat = Dedup.minHashClusterKeep(spark, sfDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keepMat === keepRe)
   }
 
   test("cross-source dup matrix: pair counts roll up the MinHash pairs") {
-    val pairs = Dedup.minHashPairsMaterialized(spark, sfDir).collect()
+    val pairs = Dedup.minHashPairsRecompute(spark, sfDir).collect()
     val src = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "source").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -988,8 +991,8 @@ class DedupSpec extends SparkSpec {
       s"candidate generation must be the prefix equi-join, got:\n$plan")
     // materialized (default) ≡ recomputing form — the standard pin for
     // every build-once table here
-    val recomputed = Dedup.setSimPairs(spark, tmp, threshold = 0.5,
-      materialized = false).collect()
+    val recomputed = Dedup.setSimPairsRecompute(spark, tmp, threshold = 0.5)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(recomputed === got, "materialized form diverged")
   }
@@ -1016,8 +1019,8 @@ class DedupSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("setsimhot").toString
     (randomDocs ++ planted).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    def run(hotDf: Int) = Dedup.setSimPairs(spark, tmp, threshold = 0.5,
-        materialized = false, hotDf = hotDf).collect()
+    def run(hotDf: Int) = Dedup.setSimPairsRecompute(spark, tmp,
+        threshold = 0.5, hotDf = hotDf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val refined = run(3)            // everything shared is hot
     val classic = run(Int.MaxValue) // pure single-token path
@@ -1253,7 +1256,7 @@ class DedupSpec extends SparkSpec {
         r.getDouble(3)))
     val pos = out.filter(_._3 == "pos")
     val neg = out.filter(_._3 == "neg")
-    val truePairs = Dedup.minHashPairsCached(spark, sfDir)
+    val truePairs = Dedup.minHashPairs(spark, sfDir)
       .filter(col("jaccard") >= 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pos.map(p => (p._1, p._2)).toSet === truePairs)
@@ -1314,7 +1317,7 @@ class DedupSpec extends SparkSpec {
     val inc = Dedup.minHashClustersIncremental(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
-    val oneShot = Dedup.minHashClusters(spark, sfDir, materialized = true)
+    val oneShot = Dedup.minHashClusters(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(inc === oneShot)

@@ -112,9 +112,10 @@ class GraphOpsSpec extends SparkSpec {
       "absent from the consuming plan") {
     Artifacts.clear()
     try {
-      val direct = GraphOps.knnTriangles(spark, sfDir).collect()
+      val edges = GraphOps.knnEdgesRecompute(spark, sfDir)
+      val direct = GraphOps.triangles(edges).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-      val mat = GraphOps.knnTriangles(spark, sfDir, materialized = true)
+      val mat = GraphOps.knnTriangles(spark, sfDir)
       assert(mat.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq ===
         direct.toSeq)
@@ -122,9 +123,9 @@ class GraphOpsSpec extends SparkSpec {
       // must be GONE: the consumer scans the build-once edge parquet
       val plan = mat.queryExecution.executedPlan.toString
       assert(!plan.contains("hyperplane"), plan.take(2000))
-      val pr = GraphOps.knnPageRank(spark, sfDir, materialized = true)
+      val pr = GraphOps.knnPageRank(spark, sfDir)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      val prDirect = GraphOps.knnPageRank(spark, sfDir)
+      val prDirect = GraphOps.pageRank(edges)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
       // same edge SET but different physical partitionings: double
       // summation order can differ in the low bits, so compare with a

@@ -217,7 +217,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("image near-dup: planted identical pairs surface at hamming 0; " +
       "candidates come from a banded equi-join, not a cartesian product") {
-    val pairs = Multimodal.imageNearDupPairs(spark, sfDir, maxHamming = 2)
+    val pairs = Multimodal.imageNearDupPairsRecompute(spark, sfDir,
+      maxHamming = 2)
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // every id pair 256 apart (same image) must appear with hamming 0
     val planted = got.filter(p => p._2 - p._1 === 256L)
@@ -232,8 +233,7 @@ class MultimodalSpec extends SparkSpec {
     // pairs, reuses its directory across calls, and never re-decodes:
     // its plan carries no codec UDF, only the parquet scan of the index
     Artifacts.clear()
-    val mat = Multimodal.imageNearDupPairs(spark, sfDir, maxHamming = 2,
-      materialized = true)
+    val mat = Multimodal.imageNearDupPairs(spark, sfDir, maxHamming = 2)
     assert(mat.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq === got.sorted.toSeq)
     assert(!mat.queryExecution.sparkPlan.toString.contains("UDF"),
@@ -249,7 +249,7 @@ class MultimodalSpec extends SparkSpec {
       "and the quadratic side lives on DISTINCT hashes only") {
     try {
       val pairs = Multimodal.imageNearDupPairs(spark, sfDir,
-        maxHamming = 2, materialized = true)
+        maxHamming = 2)
       val assets = Multimodal.imageDHash(spark, sfDir)
         .select("asset_id").collect().map(_.getLong(0)).toSet
       // reference: asset-level CC, drop non-min members

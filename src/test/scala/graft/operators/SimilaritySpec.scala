@@ -322,16 +322,18 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("materialized embed-cluster labels equal the recomputed CC output") {
-    val recomputed = Similarity.embedClusters(spark, sfDir).collect()
+    val recomputed = Similarity.embedLabelsRecompute(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val materialized = Similarity.embedClusters(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val materialized = Similarity.embedClusters(spark, sfDir,
-        materialized = true).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(materialized === recomputed)
-    val keepRe = Similarity.embedClusterKeep(spark, sfDir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val keepMat = Similarity.embedClusterKeep(spark, sfDir,
-        materialized = true)
+    assert(materialized.map(t => t._1 -> t._2).toMap === recomputed)
+    val sizes = recomputed.values.groupBy(identity).view
+      .mapValues(_.size.toLong).toMap
+    assert(materialized.forall(t => t._3 === sizes(t._2)))
+    val keepRe = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id").collect().map(_.getLong(0))
+      .filter(v => recomputed.getOrElse(v, v) == v).toSet
+    val keepMat = Similarity.embedClusterKeep(spark, sfDir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(keepMat === keepRe)
   }

@@ -6,8 +6,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Build-once artifacts never outlive their input: a corpus file
-  * rewritten in place is a new [[Artifacts]] key, so every cached form
-  * answers what its recomputing form answers over the new contents.
+  * rewritten in place is a new [[Artifacts]] key, so every operator
+  * served from an artifact answers what its private reference function
+  * (the `*Recompute` form) answers over the new contents.
   * And an unchanged input is a hit: warm calls return the artifact the
   * first call built. */
 class StaleInputSpec extends SparkSpec {
@@ -33,20 +34,62 @@ class StaleInputSpec extends SparkSpec {
     df.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("setSimPairs and minHashPairsCached rebuild after documents.parquet " +
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSet
+
+  test("setSimPairs and minHashPairs rebuild after documents.parquet " +
       "is rewritten in place") {
     val dir = copyCorpus("documents.parquet")
     try {
       val setSimBefore = pairs(Dedup.setSimPairs(spark, dir))
-      val minHashBefore = pairs(Dedup.minHashPairsCached(spark, dir))
+      val minHashBefore = pairs(Dedup.minHashPairs(spark, dir))
       assert(setSimBefore.nonEmpty && minHashBefore.nonEmpty)
       rewrite(dir, "documents.parquet", col("doc_id") % 2 === 0)
       val setSim = pairs(Dedup.setSimPairs(spark, dir))
-      assert(setSim ===
-        pairs(Dedup.setSimPairs(spark, dir, materialized = false)))
-      val minHash = pairs(Dedup.minHashPairsCached(spark, dir))
-      assert(minHash === pairs(Dedup.minHashPairs(spark, dir)))
+      assert(setSim === pairs(Dedup.setSimPairsRecompute(spark, dir)))
+      val minHash = pairs(Dedup.minHashPairs(spark, dir))
+      assert(minHash === pairs(Dedup.minHashPairsRecompute(spark, dir)))
       assert(setSim != setSimBefore && minHash != minHashBefore,
+        "the rewrite must change the answer for the check to mean anything")
+    } finally Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("clusters, pruned fingerprints and the dHash index rebuild after " +
+      "documents.parquet is rewritten in place") {
+    val dir = copyCorpus("documents.parquet")
+    def clusters() = rows(Dedup.minHashClusters(spark, dir))
+    def containment() = rows(TextOps.containmentPairs(spark, dir))
+    def images() = rows(Multimodal.imageNearDupPairs(spark, dir))
+    try {
+      val before = (clusters(), containment(), images())
+      assert(before._1.nonEmpty && before._2.nonEmpty && before._3.nonEmpty)
+      rewrite(dir, "documents.parquet", col("doc_id") % 2 === 0)
+      val after = (clusters(), containment(), images())
+      assert(after._1 === rows(Dedup.minHashClustersRecompute(spark, dir)))
+      assert(after._2 === rows(TextOps.containmentPairsRecompute(spark, dir)))
+      assert(after._3 ===
+        rows(Multimodal.imageNearDupPairsRecompute(spark, dir)))
+      assert(after._1 != before._1 && after._2 != before._2 &&
+        after._3 != before._3,
+        "the rewrite must change the answer for the check to mean anything")
+    } finally Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("k-NN edges and embedding clusters rebuild after " +
+      "embeddings.parquet is rewritten in place") {
+    val dir = copyCorpus("embeddings.parquet")
+    def triangles() = rows(GraphOps.knnTriangles(spark, dir))
+    def embed() = rows(Similarity.embedClusters(spark, dir)
+      .select("vec_id", "cluster_id"))
+    try {
+      val before = (triangles(), embed())
+      assert(before._1.nonEmpty && before._2.nonEmpty)
+      rewrite(dir, "embeddings.parquet", col("vec_id") % 2 === 0)
+      val after = (triangles(), embed())
+      assert(after._1 ===
+        rows(GraphOps.triangles(GraphOps.knnEdgesRecompute(spark, dir))))
+      assert(after._2 === rows(Similarity.embedLabelsRecompute(spark, dir)))
+      assert(after._1 != before._1 && after._2 != before._2,
         "the rewrite must change the answer for the check to mean anything")
     } finally Artifacts.deleteRecursively(new java.io.File(dir))
   }

@@ -248,8 +248,8 @@ class TextOpsSpec extends SparkSpec {
   test("containment materialized: identical pairs, winnow-free plan") {
     Artifacts.clear()
     try {
-      val recompute = TextOps.containmentPairs(spark, sfDir)
-      val mat = TextOps.containmentPairs(spark, sfDir, materialized = true)
+      val recompute = TextOps.containmentPairsRecompute(spark, sfDir)
+      val mat = TextOps.containmentPairs(spark, sfDir)
       val key = (r: org.apache.spark.sql.Row) =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
       assert(mat.collect().map(key).sortBy(t => (t._1, t._2)).toSeq ===
@@ -274,8 +274,8 @@ class TextOpsSpec extends SparkSpec {
       val scanPaths = plan.split('\n').filter(_.contains("FileScan"))
       assert(scanPaths.forall(_.contains("winnow_fps_pruned")),
         s"warm plan must scan only the pruned index:\n$plan")
-      assert(TextOps.containmentPairs(spark, sfDir)
-        .queryExecution.executedPlan.toString.contains("winnow_fingerprints"))
+      assert(recompute.queryExecution.executedPlan.toString
+        .contains("winnow_fingerprints"))
     } finally Artifacts.clear()
   }
 
@@ -316,10 +316,6 @@ class TextOpsSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("containmentPairs"))
       assert(e.getMessage.contains("maxDf"))
-      // the materialized form is guarded too
-      intercept[IllegalStateException] {
-        TextOps.containmentPairs(spark, boiler, materialized = true)
-      }
       assert(TextOps.containmentPairs(spark, distinct).count() === 0L)
     } finally spark.conf.unset(PairGuard.BudgetConf)
     // and with the default budget the boilerplate fixture (tiny in

@@ -18,22 +18,6 @@ class AsOfJoinExecSpec extends SparkSpec {
 
   import spark.implicits._
 
-  // Pin the factory to the SORT-MERGE exec for the whole suite: every
-  // fixture here is tiny, so the r15 auto-broadcast router would
-  // otherwise silently re-point all merge-path assertions (and their
-  // parity coverage) at the broadcast exec. The routing tests below
-  // flip the conf back on locally. Only this suite reads the conf, so
-  // the shared-session mutation cannot race other forked suites.
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.conf.set(AsOf.AutoBroadcastConf, "false")
-  }
-
-  override def afterAll(): Unit = {
-    spark.conf.unset(AsOf.AutoBroadcastConf)
-    super.afterAll()
-  }
-
   private def sorted(df: DataFrame): Seq[Row] = {
     val cols = df.columns.toSeq
     df.orderBy(cols.map(col): _*).collect().toSeq
@@ -355,35 +339,6 @@ class AsOfJoinExecSpec extends SparkSpec {
     }
   }
 
-  test("auto-broadcast routing: small right side routes to the broadcast exec; pins and kill switches hold") {
-    def planOf(autoBc: Boolean): SparkPlan = withStaticPlans {
-      executed(AsOf.asOfJoinExec(trades, quotes, Seq("sym"), "ts",
-        payload = Seq("px"), rename = _ => "r_px", autoBroadcast = autoBc))
-    }
-    spark.conf.set(AsOf.AutoBroadcastConf, "true")
-    try {
-      // default: quotes' estimate is far under the 10MB threshold → route
-      assert(planOf(true).collect {
-        case b: BroadcastAsOfJoinExec => b }.size == 1)
-      // explicit pin beats the conf (the gate entries' contract)
-      assert(planOf(false).collect { case e: AsOfJoinExec => e }.size == 1)
-      // Spark's broadcast threshold disabled → merge path
-      val tBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try assert(planOf(true).collect { case e: AsOfJoinExec => e }.size == 1)
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", tBefore)
-      // graft kill switch → merge path
-      spark.conf.set(AsOf.AutoBroadcastConf, "false")
-      assert(planOf(true).collect { case e: AsOfJoinExec => e }.size == 1)
-      // routed rows equal the compose form (semantics unchanged by route)
-      spark.conf.set(AsOf.AutoBroadcastConf, "true")
-      val routed = AsOf.asOfJoinExec(trades, quotes, Seq("sym"), "ts",
-        payload = Seq("px"), rename = _ => "r_px")
-      assert(sorted(routed) == sorted(AsOf.asOfJoin(trades, quotes,
-        Seq("sym"), "ts", payload = Seq("px"), rename = _ => "r_px")))
-    } finally spark.conf.set(AsOf.AutoBroadcastConf, "false")
-  }
-
   test("salted as-of: exact parity on a 90%-hot-key corpus, both directions, with tolerance") {
     // the skew path for a LARGE right side AQE can't split on a custom
     // node: left salted, right replicated ×salts, join key (key, salt)
@@ -401,7 +356,7 @@ class AsOfJoinExecSpec extends SparkSpec {
         tolerance = tol, salts = 8, saltBy = Some("pay"))
       val compose0 = AsOf.asOfJoinExec(left, right, Seq("k"), "ts",
         payload = Seq("pay"), rename = _ => "r_pay", direction = d,
-        tolerance = tol, autoBroadcast = false)
+        tolerance = tol)
       assert(salted.columns.toSeq == compose0.columns.toSeq,
         "salt column must not leak into the output")
       assert(sorted(salted) == sorted(compose0), s"direction=$d tol=$tol")
@@ -454,7 +409,7 @@ class AsOfJoinExecSpec extends SparkSpec {
         tolerance = tol, bucketWidth = w)
       val exec = AsOf.asOfJoinExec(left, right, Seq("k"), "ts",
         payload = Seq("pay"), rename = _ => "r_pay", direction = d,
-        tolerance = tol, autoBroadcast = false)
+        tolerance = tol)
       assert(bucketed.columns.toSeq == exec.columns.toSeq,
         "bucket column must not leak into the output")
       assert(sorted(bucketed) == sorted(exec), s"d=$d w=$w tol=$tol")
@@ -480,8 +435,7 @@ class AsOfJoinExecSpec extends SparkSpec {
     assert(got === Map("t1" -> 2.0, "t2" -> 2.0, "t3" -> null))
     // parity with the exec on the same data
     assert(sorted(out) == sorted(AsOf.asOfJoinExec(trades, quotes,
-      Seq("sym"), "ts", payload = Seq("px"), rename = _ => "r_px",
-      autoBroadcast = false)))
+      Seq("sym"), "ts", payload = Seq("px"), rename = _ => "r_px")))
   }
 
   test("bucketed as-of: DATE ts buckets on the day number") {
@@ -498,8 +452,7 @@ class AsOfJoinExecSpec extends SparkSpec {
       (if (r.isNullAt(3)) null else Double.box(r.getDouble(3)))).toMap
     assert(got === Map(1L -> 10.0, 2L -> 40.0, 3L -> null))
     assert(sorted(out) == sorted(AsOf.asOfJoinExec(left, right, Seq("k"),
-      "day", payload = Seq("v"), rename = _ => "r_v",
-      autoBroadcast = false)))
+      "day", payload = Seq("v"), rename = _ => "r_v")))
   }
 
   test("bucketed as-of: argument guards") {

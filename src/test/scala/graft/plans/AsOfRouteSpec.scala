@@ -100,7 +100,7 @@ class AsOfRouteSpec extends SparkSpec {
     val auto = AsOf.asOfJoinAuto(left, right, Seq("k"), "ts",
       payload = Seq("pay"), rename = p => s"r_$p", probeFraction = 1.0)
     val pinned = AsOf.asOfJoinExec(left, right, Seq("k"), "ts",
-      payload = Seq("pay"), rename = p => s"r_$p", autoBroadcast = false)
+      payload = Seq("pay"), rename = p => s"r_$p")
     assert(auto.columns.toSeq === pinned.columns.toSeq)
     assert(sortedRows(auto) === sortedRows(pinned),
       s"path $wantPath must stay exact")
@@ -141,7 +141,7 @@ class AsOfRouteSpec extends SparkSpec {
       assert(executed(auto).collect {
         case b: BroadcastAsOfJoinExec => b }.size === 1)
       val pinned = AsOf.asOfJoinExec(left, right, Seq("k"), "ts",
-        payload = Seq("pay"), rename = p => s"r_$p", autoBroadcast = false)
+        payload = Seq("pay"), rename = p => s"r_$p")
       assert(sortedRows(auto) === sortedRows(pinned))
     } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }

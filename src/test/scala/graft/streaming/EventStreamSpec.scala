@@ -195,7 +195,7 @@ class EventStreamSpec extends SparkSpec {
         lefts.toDF(), rights.toDF().select(col("user_id"), col("ts"),
           col("ts").as("p_ts"), col("value")),
         Seq("user_id"), "ts", payload = Seq("value"),
-        rename = _ => "m_value", autoBroadcast = false)
+        rename = _ => "m_value")
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(5)) null else r.getDouble(5))).toMap
       assert(batch === got)
@@ -266,8 +266,7 @@ class EventStreamSpec extends SparkSpec {
             col("ts").as("q_ts"), col("price")),
         Seq("sym", "venue"), "ts", payload = Seq("q_ts", "price"),
         rename = { case "q_ts" => "quote_ts"; case o => o },
-        direction = "forward", tolerance = Some(tol),
-        autoBroadcast = false)
+        direction = "forward", tolerance = Some(tol))
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(6)) null else r.getDouble(6))).toMap
       assert(batch === got)
