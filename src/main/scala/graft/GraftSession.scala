@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's recommended SparkSession configuration —
   * the operational half of the 100 TB design (PLANS.md has the plan
-  * half). `Verify`/`Bench` and the packaged-jar examples all build
-  * sessions here so the tuning story is a single audited artifact.
+  * half). `Verify`/`Bench`, perfbench, `GenData`, the specs and the
+  * packaged-jar examples all build sessions here so the tuning story is
+  * a single audited artifact. A session built here carries graft's
+  * whole surface ([[graft.functions.GraftExtensions.install]]).
   *
   * Knob rationale (local defaults; the cluster column is what changes):
   *
@@ -49,36 +51,15 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Local session sized by the SPARK_GRAFT_CPUS convention the driver
-    * mains use (UI off — these are headless runs). */
+    * mains use (UI off — these are headless runs), with graft's
+    * functions, table functions, rules and strategy installed. */
   def local(cpus: String): SparkSession = {
     val spark = builder(cpus.toInt)
       .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    installPlanExtensions(spark)
+    graft.functions.GraftExtensions.install(spark)
     spark
-  }
-
-  /** Idempotently install the library's optimizer rules and planner
-    * strategy into a STOCK session — the harness-level half of what
-    * `spark.sql.extensions=graft.functions.GraftExtensions` does at
-    * session build time (a `getOrCreate`'d session cannot add
-    * extensions after the fact). Query entries stay pure queries; the
-    * session carries the plan surface (r14 verdict: an entry mutating
-    * `experimental.extraOptimizations` was the one impure entry). */
-  def installPlanExtensions(spark: SparkSession): Unit = spark match {
-    case c: org.apache.spark.sql.classic.SparkSession =>
-      val ex = c.experimental
-      if (!ex.extraOptimizations.contains(graft.plans.LevenshteinPruneRule))
-        ex.extraOptimizations =
-          ex.extraOptimizations :+ graft.plans.LevenshteinPruneRule
-      if (!ex.extraOptimizations.contains(graft.plans.RangeBinJoinRule))
-        ex.extraOptimizations =
-          ex.extraOptimizations :+ graft.plans.RangeBinJoinRule
-      if (!ex.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-        ex.extraStrategies =
-          ex.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    case _ => () // Connect sessions must carry GraftExtensions config
   }
 }

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -99,7 +99,9 @@ object CorpusTableFunctions {
     plan(build(SparkSession.active, reqDir(fn, bound)))
   }
 
-  private lazy val defs: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = {
+  /** The corpus TVF definitions; sessions get them through
+    * [[graft.functions.GraftExtensions]]. */
+  private[graft] lazy val defs: Seq[graft.functions.GraftExtensions.TableFunctionDef] = {
     val out = Seq.newBuilder[(FunctionIdentifier, ExpressionInfo, Builder)]
     def tvf(name: String, usage: String, example: String)(b: Builder): Unit =
       out += ((FunctionIdentifier(name), info(name, usage,
@@ -729,13 +731,4 @@ object CorpusTableFunctions {
 
     out.result()
   }
-
-  /** Extension-time registration (from [[graft.functions.GraftExtensions]]). */
-  def register(ext: SparkSessionExtensions): Unit =
-    defs.foreach(ext.injectTableFunction)
-
-  /** Runtime registration onto a live session (idempotent; no-op on
-    * non-classic sessions — see [[SudanTableFunctions.registerRuntime]]). */
-  def registerRuntime(spark: SparkSession): Unit =
-    SudanTableFunctions.runtimeRegister(spark, defs)
 }

@@ -1,31 +1,30 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.udf
-import graft.functions.GeoCode
+import graft.functions.GraftExtensions
 import graft.geo.SudanGeo
 
 /** SQL surface registration — the Spark analogue of the reference's
   * extension entry point (sudan_extension.cpp:21-31): makes the documented
   * SQL runnable verbatim-modulo-naming in `spark.sql`.
   *
-  * The PRIMARY spelling is the TVF surface ([[SudanTableFunctions]] /
-  * [[CorpusTableFunctions]], registered below at runtime): the
-  * reference's own call syntax, `SELECT * FROM SUDAN_WorldBank(...)`.
-  * The view/UDF registrations remain for tools that enumerate catalog
-  * views rather than functions:
+  * [[registerAll]] is [[GraftExtensions.install]] — the TVF surface
+  * ([[SudanTableFunctions]] / [[CorpusTableFunctions]]: the reference's
+  * own call syntax, `SELECT * FROM SUDAN_WorldBank(...)`), the native
+  * scalar functions (`SUDAN_GeoCode`, `simhash`, `minhash_signature`,
+  * `winnow_fingerprints`, `hyperplane_bucket`) and the plan rules — plus
+  * temp views for tools that enumerate catalog views rather than
+  * functions:
   *   SUDAN_States()            → also temp view `sudan_states`
   *   SUDAN_Boundaries('x')     → also views `sudan_boundaries_{country,state,locality}`
   *   SUDAN_Providers()         → also temp view `sudan_providers`
-  *   SUDAN_GeoCode(name)       → SQL scalar function SUDAN_GeoCode (UDF)
   */
 object SudanExtension {
 
-  /** Register the offline surface: the full TVF set, geo temp views,
-    * and the GeoCode UDF. */
+  /** Register the offline surface: everything [[GraftExtensions]]
+    * defines, plus the geo temp views. */
   def registerAll(spark: SparkSession): Unit = {
-    SudanTableFunctions.registerRuntime(spark)
-    CorpusTableFunctions.registerRuntime(spark)
+    GraftExtensions.install(spark)
     SudanGeo.states(spark).createOrReplaceTempView("sudan_states")
     SudanGeo.providers(spark).createOrReplaceTempView("sudan_providers")
     SudanGeo.boundariesDf(spark, "country")
@@ -34,16 +33,6 @@ object SudanExtension {
       .createOrReplaceTempView("sudan_boundaries_state")
     SudanGeo.boundariesDf(spark, "locality")
       .createOrReplaceTempView("sudan_boundaries_locality")
-    spark.udf.register("SUDAN_GeoCode", udf((name: String) => GeoCode.lookup(name)))
-    // pipeline scalar functions for stock sessions (the GraftExtensions
-    // path registers the codegen'd native forms of the same functions)
-    spark.udf.register("simhash",
-      udf((t: String) => graft.operators.Dedup.simHash64(t)))
-    spark.udf.register("minhash_signature",
-      udf((t: String) => graft.operators.Dedup.minHashSignature(
-        graft.operators.Dedup.shingles(t), 64)))
-    spark.udf.register("winnow_fingerprints",
-      udf((t: String) => graft.operators.TextOps.fingerprintSet(t).sorted))
   }
 
   /** Scala-facing factories (the idiomatic API, SURVEY §7.3). */

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, ExpressionInfo, NamedArgumentExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -13,7 +13,8 @@ import graft.geo.SudanGeo
 /** SQL table-valued functions — the reference's PRIMARY surface
   * (`SELECT * FROM SUDAN_WorldBank('SP.POP.TOTL', countries := [...])`,
   * wb_functions.cpp:315, sudan_extension.cpp:21-31), re-expressed as
-  * Spark `injectTableFunction` registrations so the SQL-only user runs
+  * Spark table-function registrations (installed with the rest of the
+  * surface by [[graft.functions.GraftExtensions]]) so the SQL-only user runs
   * the documented queries verbatim modulo the named-argument spelling:
   * DuckDB's `name := value` is Spark's `name => value`, and DuckDB's
   * `['SDN','EGY']` list literal is Spark's `array('SDN','EGY')`.
@@ -144,10 +145,9 @@ object SudanTableFunctions {
 
   private type Builder = Seq[Expression] => LogicalPlan
 
-  /** The 11 function definitions, built once — registered either at
-    * session build ([[register(ext*]]) or onto a LIVE session
-    * ([[registerRuntime]]). */
-  private lazy val defs: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = {
+  /** The 11 function definitions, built once; sessions get them through
+    * [[graft.functions.GraftExtensions]]. */
+  private[graft] lazy val defs: Seq[graft.functions.GraftExtensions.TableFunctionDef] = {
     val out = Seq.newBuilder[(FunctionIdentifier, ExpressionInfo, Builder)]
     def tvf(name: String, usage: String, examples: String)(
         builder: Builder): Unit =
@@ -258,35 +258,5 @@ object SudanTableFunctions {
         fetcher(spark)))
     }
     out.result()
-  }
-
-  // -------------------------------------------------------- registration
-
-  /** Register all 11 table functions at session build time. Called from
-    * [[graft.functions.GraftExtensions]] (`spark.sql.extensions`). */
-  def register(ext: SparkSessionExtensions): Unit =
-    defs.foreach(ext.injectTableFunction)
-
-  /** Register onto a LIVE session (no extensions config needed) — the
-    * runtime twin of [[register(ext*]], for sessions the caller did not
-    * build (notebooks, the Verify harness). Idempotent: re-registration
-    * replaces the same definitions. No-op on a non-classic session
-    * (e.g. Spark Connect), whose function registry is not reachable at
-    * runtime — there, build the session with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` instead. */
-  def registerRuntime(spark: SparkSession): Unit =
-    runtimeRegister(spark, defs)
-
-  /** Shared runtime-registration plumbing (also used by
-    * [[CorpusTableFunctions]]). */
-  private[api] def runtimeRegister(spark: SparkSession,
-      fns: Seq[(FunctionIdentifier, ExpressionInfo,
-        Seq[Expression] => LogicalPlan)]): Unit = spark match {
-    case classic: org.apache.spark.sql.classic.SparkSession =>
-      val reg = classic.sessionState.tableFunctionRegistry
-      fns.foreach { case (id, fnInfo, builder) =>
-        reg.registerFunction(id, fnInfo, builder)
-      }
-    case _ => () // non-classic (Connect): TVFs require the extensions config
   }
 }

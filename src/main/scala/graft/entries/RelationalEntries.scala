@@ -108,8 +108,8 @@ private[graft] object RelationalEntries {
     // the SQL band join through RangeBinJoinRule: the optimizer rewrite
     // gives the SQL user the binned equi-join the Scala API builds by
     // hand. The rule is carried by the SESSION (GraftExtensions config,
-    // or GraftSession.installPlanExtensions for stock sessions — the
-    // Verify/Bench harness path), so this entry is a pure query.
+    // or GraftExtensions.install for stock sessions — the Verify/Bench
+    // harness path), so this entry is a pure query.
     "q_sql_range_join" -> ((s, d) => {
       Relational.events(s, d).createOrReplaceTempView("graft_events_rbj")
       s.sql("SELECT e.event_id AS error_id, c.event_id AS click_id, " +

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -61,149 +59,4 @@ object GeoCodeExpression {
   def native(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       GeoCodeExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-/** SparkSessionExtensions hook: enable with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")` —
-  * registers SUDAN_GeoCode as a NATIVE function (codegen'd expression), in
-  * contrast to SudanExtension.registerAll's UDF registration which works on
-  * any stock session. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // the 11 SQL table functions (SUDAN_WorldBank(...), SUDAN_States(), …)
-    graft.api.SudanTableFunctions.register(ext)
-    // corpus-pipeline TVFs (corpus_clean('/dir'), corpus_ann_probe(...), …)
-    graft.api.CorpusTableFunctions.register(ext)
-    // auto-inject the char-bag reject ahead of raw levenshtein(a,b)<=k
-    // predicates (exact — see LevenshteinPruneRule's safety gates)
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinPruneRule)
-    // auto-rewrite band joins (x BETWEEN y-k1 AND y+k2, no equi key)
-    // from BNLJ/cartesian into the binned equi-join (exact; gated —
-    // see RangeBinJoinRule's scaladoc; spark.graft.rangeBinJoin.enabled)
-    ext.injectOptimizerRule(_ => graft.plans.RangeBinJoinRule)
-    // physical as-of join (custom LogicalPlan -> SparkPlan tier); the
-    // Scala factory also self-installs via experimental.extraStrategies
-    // so stock sessions work — this registration covers SQL-configured
-    // sessions (spark.sql.extensions=graft.functions.GraftExtensions)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // catalog-visible docs, mirroring the reference's per-function
-    // description/example metadata (function_builder.hpp:10-41,
-    // sudan_extension.cpp:21-31): DESCRIBE FUNCTION [EXTENDED] shows them
-    ext.injectFunction((
-      FunctionIdentifier("SUDAN_GeoCode"),
-      new ExpressionInfo(
-        classOf[GeoCodeExpression].getName,
-        null,
-        "SUDAN_GeoCode",
-        "SUDAN_GeoCode(name) - Returns the ISO 3166-2:SD code for a Sudanese " +
-          "state name (Arabic exact match or English case-insensitive); " +
-          "returns '' when the name is unknown or NULL.",
-        """
-    Examples:
-      > SELECT SUDAN_GeoCode('Khartoum');
-       SD-KH
-      > SELECT SUDAN_GeoCode('الخرطوم');
-       SD-KH
-  """),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "SUDAN_GeoCode takes exactly one argument")
-        GeoCodeExpression(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(
-        classOf[SimHashExpression].getName,
-        null,
-        "simhash",
-        "simhash(text) - Returns the 64-bit SimHash of the text's " +
-          "whitespace tokens (near-duplicate signature; NULL yields 0).",
-        """
-    Examples:
-      > SELECT simhash('the quick brown fox');
-       [64-bit signature]
-  """),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash takes exactly one argument")
-        SimHashExpression(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(
-        classOf[MinHashExpression].getName,
-        null,
-        "minhash_signature",
-        "minhash_signature(text[, numHashes]) - Returns the MinHash " +
-          "signature (array of numHashes bigints, default 64) of the " +
-          "text's word 3-shingles; NULL yields the empty-set signature.",
-        """
-    Examples:
-      > SELECT minhash_signature('the quick brown fox', 16);
-       [array of 16 signature values]
-  """),
-      (children: Seq[Expression]) => children match {
-        case Seq(text) => MinHashExpression(text, 64)
-        case Seq(text, n) =>
-          require(n.foldable, "numHashes must be a literal integer")
-          n.eval(null) match {
-            case v: Number => MinHashExpression(text, v.intValue())
-            case other => throw new IllegalArgumentException(
-              s"numHashes must be a literal integer, got $other")
-          }
-        case _ => throw new IllegalArgumentException(
-          "minhash_signature takes (text[, numHashes])")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(
-        classOf[WinnowExpression].getName,
-        null,
-        "winnow_fingerprints",
-        "winnow_fingerprints(text) - Returns the sorted winnowing " +
-          "fingerprint set (Schleimer et al. SIGMOD'03; k=8 char grams, " +
-          "window 4) of the text; NULL or short text yields [].",
-        """
-    Examples:
-      > SELECT winnow_fingerprints('the quick brown fox jumps');
-       [array of rolling-hash fingerprints]
-  """),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          "winnow_fingerprints takes exactly one argument")
-        WinnowExpression(children.head, 8, 4)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_bucket"),
-      new ExpressionInfo(
-        classOf[HyperplaneBucketExpression].getName,
-        null,
-        "hyperplane_bucket",
-        "hyperplane_bucket(embedding[, numPlanes[, dim]]) - Returns the " +
-          "random-hyperplane LSH bucket id (bit i = sign of the dot " +
-          "product with deterministic plane i) of an ARRAY<FLOAT> " +
-          "embedding; defaults: 12 planes, dim 64. NULL yields NULL.",
-        """
-    Examples:
-      > SELECT hyperplane_bucket(embedding, 8) FROM embeddings;
-       [bucket ids in 0..255]
-  """),
-      (children: Seq[Expression]) => {
-        def litInt(e: Expression, what: String): Int = {
-          require(e.foldable, s"$what must be a literal integer")
-          e.eval(null) match {
-            case v: Number => v.intValue()
-            case other => throw new IllegalArgumentException(
-              s"$what must be a literal integer, got $other")
-          }
-        }
-        children match {
-          case Seq(emb) => HyperplaneBucketExpression(emb, 12, 64)
-          case Seq(emb, n) =>
-            HyperplaneBucketExpression(emb, litInt(n, "numPlanes"), 64)
-          case Seq(emb, n, d) => HyperplaneBucketExpression(emb,
-            litInt(n, "numPlanes"), litInt(d, "dim"))
-          case _ => throw new IllegalArgumentException(
-            "hyperplane_bucket takes (embedding[, numPlanes[, dim]])")
-        }
-      }))
-  }
 }

@@ -105,10 +105,8 @@ object AsOf {
     * either side is already hash-partitioned on the keys (the planner
     * then skips that side's exchange entirely — spec-pinned).
     *
-    * The strategy is installed idempotently into
-    * `spark.experimental.extraStrategies` so stock sessions work;
-    * `spark.sql.extensions=graft.functions.GraftExtensions` sessions
-    * already carry it.
+    * The strategy comes with [[graft.functions.GraftExtensions]],
+    * installed idempotently here so stock sessions work.
     *
     * For measured routing across ALL skew paths (broadcast / merge /
     * salted / bucketed) use [[asOfJoinAuto]]; for a LARGE right side
@@ -160,7 +158,7 @@ object AsOf {
     require(carriedNames.distinct.size == carriedNames.size,
       s"rename maps two payload columns to the same name: $carriedNames")
     val spark = left.sparkSession
-    installStrategy(spark)
+    graft.functions.GraftExtensions.install(spark)
     // fresh right-side projection: aliasing keys/ts/payload mints new
     // exprIds, so a self-join (left and right from the same Dataset)
     // cannot produce ambiguous attributes inside the custom node
@@ -295,18 +293,6 @@ object AsOf {
     asOfJoinPlanned(l, r, keys :+ saltCol, ts, payload, rename, direction,
       broadcast = false, tolerance)
       .drop(saltCol)
-  }
-
-  /** Idempotently add [[graft.plans.AsOfJoinStrategy]] to the session's
-    * experimental strategies (first in planner order, so the custom
-    * node always plans). No-op for Connect sessions — those must carry
-    * the GraftExtensions config. */
-  private def installStrategy(spark: SparkSession): Unit = spark match {
-    case c: org.apache.spark.sql.classic.SparkSession =>
-      val ex = c.experimental
-      if (!ex.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-        ex.extraStrategies = ex.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    case _ => ()
   }
 
   /** TS-RANGE-SPLIT (bucketed) as-of join — the skew path for the case

@@ -103,15 +103,12 @@ private[operators] trait DedupCore {
       maxBucket: Int): DataFrame = {
     val sized = bandKeys.groupBy("band", "band_key")
       .agg(array_sort(collect_list("doc_id")).as("ids"))
-    val metricsOn = bandKeys.sparkSession.conf
-      .get("spark.graft.dedup.pruneMetrics", "true").toBoolean
     val capped =
-      if (maxBucket > 0 && metricsOn) {
+      if (maxBucket > 0) {
         // inline prune accounting: an `observe` (CollectMetrics) node —
         // the declarative form of a LongAccumulator, zero extra passes.
         // Unique name per call site: observation names must not collide
         // within one query (e.g. clean-corpus composes several dedups).
-        // Kill switch: spark.graft.dedup.pruneMetrics=false.
         ensurePruneListener(bandKeys.sparkSession)
         val name = pruneMetricName()
         val over = size(col("ids")) > maxBucket
@@ -122,8 +119,6 @@ private[operators] trait DedupCore {
               .otherwise(0L)), lit(0L)).as("pruned_docs"))
           .filter(size(col("ids")).between(2, maxBucket))
       }
-      else if (maxBucket > 0)
-        sized.filter(size(col("ids")).between(2, maxBucket))
       else sized.filter(size(col("ids")) >= 2)
     val ids = col("ids")
     capped.select(explode(flatten(transform(ids, (a, i) =>

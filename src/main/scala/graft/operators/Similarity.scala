@@ -191,19 +191,14 @@ object Similarity {
       val spark = bucketed.sparkSession
       val sizes = bucketed.groupBy("bucket")
         .agg(count(lit(1)).as("bucket_n"))
-      val metricsOn = spark.conf
-        .get("spark.graft.dedup.pruneMetrics", "true").toBoolean
       val over = col("bucket_n") > maxBucket
-      val keep =
-        if (metricsOn) {
-          Dedup.ensurePruneListener(spark)
-          sizes.observe(Dedup.pruneMetricName(),
-              coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L))
-                .as("pruned_buckets"),
-              coalesce(sum(when(over, col("bucket_n")).otherwise(0L)),
-                lit(0L)).as("pruned_docs"))
-            .filter(col("bucket_n") <= maxBucket)
-        } else sizes.filter(col("bucket_n") <= maxBucket)
+      Dedup.ensurePruneListener(spark)
+      val keep = sizes.observe(Dedup.pruneMetricName(),
+          coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L))
+            .as("pruned_buckets"),
+          coalesce(sum(when(over, col("bucket_n")).otherwise(0L)),
+            lit(0L)).as("pruned_docs"))
+        .filter(col("bucket_n") <= maxBucket)
       bucketed.join(broadcast(keep.select("bucket")), Seq("bucket"))
     }
 

@@ -73,8 +73,9 @@ case class AsOfJoinPlan(
 /** Planner strategy: [[AsOfJoinPlan]] → [[AsOfJoinExec]]. Registered
   * via [[graft.functions.GraftExtensions]] (`injectPlannerStrategy`)
   * for `spark.sql.extensions` sessions, and installed idempotently into
-  * `spark.experimental.extraStrategies` by the
-  * [[graft.operators.AsOf.asOfJoinExec]] factory for stock sessions. */
+  * `spark.experimental.extraStrategies` by `GraftExtensions.install`,
+  * which the [[graft.operators.AsOf.asOfJoinExec]] factory calls for
+  * stock sessions. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lts, rts, carried, fwd, bcast, tol) =>

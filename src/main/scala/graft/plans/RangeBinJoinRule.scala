@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, JoinHint, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, DayTimeIntervalType, IntegerType, LongType, ShortType, TimestampType}
 
 /** Optimizer rule: rewrite BAND JOINS — inner joins whose only join
@@ -64,9 +63,10 @@ import org.apache.spark.sql.types.{ByteType, DayTimeIntervalType, IntegerType, L
   *    (literal ± k, or a day-time interval literal on a timestamp —
   *    normalized through `unix_micros`; calendar intervals with months
   *    are untouched, their length is not constant).
-  *  - deterministic point expressions only; kill switch
-  *    `spark.graft.rangeBinJoin.enabled`; idempotent (the generated
-  *    bin attribute marks a rewritten right side).
+  *  - deterministic point expressions only; idempotent (the generated
+  *    bin attribute marks a rewritten right side). Spark's own
+  *    `spark.sql.optimizer.excludedRules=graft.plans.RangeBinJoinRule`
+  *    switches the rule off.
   */
 object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -80,9 +80,6 @@ object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     case g: Generate => g.generatorOutput.exists(_.name == BinName)
     case _ => false
   }
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.rangeBinJoin.enabled", "true") == "true"
 
   private def integral(e: Expression): Boolean = e.dataType match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -238,8 +235,7 @@ object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     Join(pres, gen, jt, Some(newCond), hint)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case j @ Join(left, right, jt, Some(cond), hint)
           if (jt == Inner || jt == Cross || jt == LeftOuter ||
@@ -294,5 +290,4 @@ object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             }
         }
     }
-  }
 }

@@ -48,13 +48,7 @@ object GenData {
     val outDir = args(0)
     val scale = if (args.length > 1) args(1).toDouble else 10.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus)
     write(spark, outDir, scale)
     spark.stop()
   }

@@ -5,14 +5,12 @@ import graft.operators.{Dedup, Pipeline, TextOps}
 
 /** Corpus TVFs: same results as the Scala factories over the same dir,
   * transparent to Catalyst (outer predicates reach the parquet scan),
-  * binder errors at analysis. Registered at RUNTIME on the shared spec
-  * session — the path Verify/Bench and notebook users take. */
+  * binder errors at analysis. Installed at RUNTIME on the shared spec
+  * session ([[graft.functions.GraftExtensions.install]]) — the path
+  * Verify/Bench and notebook users take. */
 class CorpusTableFunctionsSpec extends SparkSpec {
 
-  private lazy val ready: Unit = CorpusTableFunctions.registerRuntime(spark)
-
   test("corpus_clean / corpus_stats / corpus_lang_id match Scala factories") {
-    ready
     val sqlClean = spark.sql(s"SELECT * FROM corpus_clean('$sfDir')")
     val scalaClean = Pipeline.cleanCorpus(spark, sfDir)
     assert(sqlClean.count() === scalaClean.count())
@@ -26,7 +24,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("outer predicates push through the TVF into the parquet scan") {
-    ready
     val plan = spark.sql(
       s"SELECT doc_id FROM corpus_stats('$sfDir') WHERE doc_id = 7")
       .queryExecution.executedPlan.toString
@@ -35,7 +32,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_neardup_pairs threshold arg binds (positional and named)") {
-    ready
     val sqlPairs = spark.sql(
       s"SELECT * FROM corpus_neardup_pairs('$sfDir', 0.8)").collect()
     val scalaPairs = Dedup.minHashPairs(spark, sfDir, threshold = 0.8).collect()
@@ -46,7 +42,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_ann_probe returns k neighbours of the query vector") {
-    ready
     val r = spark.sql(
       s"SELECT * FROM corpus_ann_probe('$sfDir', 3, k => 5)").collect()
     assert(r.length === 5)
@@ -57,7 +52,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_dataset_card and corpus_mixture_plan bind and match Scala") {
-    ready
     val card = spark.sql(s"SELECT * FROM corpus_dataset_card('$sfDir')")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(card("n_docs") ===
@@ -78,7 +72,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("corpus_keep_best / corpus_soft_dedup / corpus_mixture_schedule " +
       "bind and match the Scala factories") {
-    ready
     val bestSql = spark.sql(
       s"SELECT doc_id FROM corpus_keep_best('$sfDir')")
       .collect().map(_.getLong(0)).toSet
@@ -107,7 +100,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("corpus_repeated_spans / corpus_span_excise bind, match the Scala " +
       "factories, and reject degenerate k") {
-    ready
     val spansSql = spark.sql(
       s"SELECT * FROM corpus_repeated_spans('$sfDir', 6)").collect()
     val spansScala = graft.operators.Dedup
@@ -130,7 +122,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("decontamination TVFs bind and match the Scala factories") {
-    ready
     assert(spark.sql(
       s"SELECT * FROM corpus_decontaminate('$sfDir', eval_max_id => 10)")
       .count() ===
@@ -144,7 +135,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("corpus_sketch_sources / corpus_sketch_snapshot_merge bind, " +
       "match Scala, and validate k") {
-    ready
     val sqlSrc = spark.sql(
       s"SELECT * FROM corpus_sketch_sources('$sfDir')").collect()
     val scalaSrc = graft.operators.SketchOps
@@ -165,7 +155,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_sketch_delta binds, matches Scala, and validates k") {
-    ready
     val sql = spark.sql(
       s"SELECT * FROM corpus_sketch_delta('$sfDir', k => 65536)").collect()
     val scala = graft.operators.SketchOps.snapshotDelta(spark, sfDir)
@@ -189,7 +178,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("corpus_quantile_drift binds, matches Scala, and validates " +
       "threshold") {
-    ready
     val sql = spark.sql(
       s"SELECT * FROM corpus_quantile_drift('$sfDir', threshold => 0.5)")
       .collect()
@@ -207,7 +195,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_heavy_hitters binds, matches Scala, and validates params") {
-    ready
     val sql = spark.sql(
       s"SELECT * FROM corpus_heavy_hitters('$sfDir', top => 5)").collect()
     val scala = graft.operators.SketchOps
@@ -226,7 +213,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("corpus_priority_totals / corpus_bloom_guard bind, match Scala, " +
       "and validate params") {
-    ready
     val sqlPri = spark.sql(
       s"SELECT * FROM corpus_priority_totals('$sfDir')").collect()
     val scalaPri = graft.operators.SketchOps
@@ -270,7 +256,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
 
   test("r10-family TVFs (scd2 / apply_changes / token_windows / " +
       "join_estimate / expectations) bind, match Scala, validate params") {
-    ready
     assert(spark.sql(s"SELECT * FROM corpus_scd2('$sfDir')").collect()
       .toSet === graft.operators.Pipeline.scd2Demo(spark, sfDir)
       .collect().toSet)
@@ -299,7 +284,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("corpus_kanon / corpus_noisy_hist match Scala factories + binders") {
-    ready
     val sqlRel = spark.sql(
       s"SELECT * FROM corpus_kanon('$sfDir', 5, l => 3)").collect()
     val scalaRel = graft.operators.Privacy
@@ -314,7 +298,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("as-of TVFs match Scala factories (custom SparkPlan behind SQL)") {
-    ready
     assert(spark.sql(s"SELECT * FROM corpus_asof_purchase('$sfDir')")
       .collect().toSet ===
       graft.operators.AsOf.eventsAsOfLastPurchaseExec(spark, sfDir)
@@ -342,7 +325,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("tokenizer TVFs match Scala factories + binders") {
-    ready
     assert(spark.sql(s"SELECT * FROM corpus_bpe_merges('$sfDir', 5)")
       .collect().toSeq ===
       TextOps.learnBpeMerges(spark, sfDir, numMerges = 5).collect().toSeq)
@@ -360,7 +342,6 @@ class CorpusTableFunctionsSpec extends SparkSpec {
   }
 
   test("binder errors: missing dir / unknown param") {
-    ready
     val missing = intercept[Exception](spark.sql(
       "SELECT * FROM corpus_ann_probe(query_id => 3)"))
     assert(missing.getMessage.contains("requires the corpus 'dir'"),

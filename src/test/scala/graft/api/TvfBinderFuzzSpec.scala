@@ -12,11 +12,6 @@ import org.scalacheck.Test.{check, Parameters, Passed, Result}
   * error contract: malformed SQL gets a named, actionable message. */
 class TvfBinderFuzzSpec extends SparkSpec {
 
-  private lazy val ready: Unit = {
-    SudanTableFunctions.registerRuntime(spark)
-    CorpusTableFunctions.registerRuntime(spark)
-  }
-
   // BOTH registries, complete: the 11 SUDAN_* source TVFs and every
   // corpus_* pipeline TVF — the corpus family's num/numSeq binders have
   // malformed-literal paths the source TVFs never exercise
@@ -60,7 +55,6 @@ class TvfBinderFuzzSpec extends SparkSpec {
     Gen.zip(keyGen, valueGen).map { case (k, v) => s"$k => $v" })
 
   test("any argument shape binds or fails with the SUDAN: binder error") {
-    ready
     val prop = Prop.forAll(
       Gen.oneOf(fns),
       Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, argGen))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.col
 
 class GeoCodeExpressionSpec extends SparkSpec {
@@ -27,34 +27,21 @@ class GeoCodeExpressionSpec extends SparkSpec {
   }
 
   test("SparkSessionExtensions registers SUDAN_GeoCode as native SQL function") {
-    val shared = spark // ensure the shared session exists first
-    // getOrCreate returns the active session and would skip extensions —
-    // clear, build a fresh session (same SparkContext), then restore
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      val r = s2.sql("SELECT SUDAN_GeoCode('الخرطوم') AS a, SUDAN_GeoCode('x') AS b")
-        .collect()(0)
-      assert(r.getString(0) === "SD-KH")
-      assert(r.getString(1) === "")
-      // native registration: the plan contains the expression, not a UDF
-      val plan = s2.sql("SELECT SUDAN_GeoCode('x')").queryExecution
-        .analyzed.toString
-      // catalog docs parity (function_builder.hpp): usage visible in SQL
-      val desc = s2.sql("DESCRIBE FUNCTION EXTENDED SUDAN_GeoCode")
-        .collect().map(_.getString(0)).mkString("\n")
-      assert(desc.contains("ISO 3166-2:SD"), desc)
-      assert(desc.contains("SUDAN_GeoCode('Khartoum')"), desc)
-      // analysis-time implicit cast: non-string input coerces, not crashes
-      assert(s2.sql("SELECT SUDAN_GeoCode(123) AS c").collect()(0)
-        .getString(0) === "")
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
+    val r = spark.sql("SELECT SUDAN_GeoCode('الخرطوم') AS a, SUDAN_GeoCode('x') AS b")
+      .collect()(0)
+    assert(r.getString(0) === "SD-KH")
+    assert(r.getString(1) === "")
+    // native registration: the plan contains the expression, not a UDF
+    val plan = spark.sql("SELECT SUDAN_GeoCode('x')").queryExecution
+      .analyzed.toString
+    assert(plan.contains("sudan_geocode(") && !plan.contains("UDF"), plan)
+    // catalog docs parity (function_builder.hpp): usage visible in SQL
+    val desc = spark.sql("DESCRIBE FUNCTION EXTENDED SUDAN_GeoCode")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(desc.contains("ISO 3166-2:SD"), desc)
+    assert(desc.contains("SUDAN_GeoCode('Khartoum')"), desc)
+    // analysis-time implicit cast: non-string input coerces, not crashes
+    assert(spark.sql("SELECT SUDAN_GeoCode(123) AS c").collect()(0)
+      .getString(0) === "")
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 class MinHashExpressionSpec extends SparkSpec {
@@ -37,27 +36,15 @@ class MinHashExpressionSpec extends SparkSpec {
   }
 
   test("extension-registered SQL function with optional numHashes") {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      val v = s2.sql("SELECT minhash_signature('the quick brown fox', 16) AS s")
-        .collect()(0).getSeq[Long](0)
-      assert(v === Dedup.minHashSignature(
-        Dedup.shingles("the quick brown fox"), 16).toSeq)
-      val v64 = s2.sql("SELECT minhash_signature('a b c') AS s")
-        .collect()(0).getSeq[Long](0)
-      assert(v64.length === 64)
-      val desc = s2.sql("DESCRIBE FUNCTION minhash_signature")
-        .collect().map(_.getString(0)).mkString("\n")
-      assert(desc.contains("MinHash"), desc)
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
+    val v = spark.sql("SELECT minhash_signature('the quick brown fox', 16) AS s")
+      .collect()(0).getSeq[Long](0)
+    assert(v === Dedup.minHashSignature(
+      Dedup.shingles("the quick brown fox"), 16).toSeq)
+    val v64 = spark.sql("SELECT minhash_signature('a b c') AS s")
+      .collect()(0).getSeq[Long](0)
+    assert(v64.length === 64)
+    val desc = spark.sql("DESCRIBE FUNCTION minhash_signature")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(desc.contains("MinHash"), desc)
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 class SimHashExpressionSpec extends SparkSpec {
@@ -37,23 +36,11 @@ class SimHashExpressionSpec extends SparkSpec {
   }
 
   test("extension-registered SQL function simhash(...) with catalog docs") {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      val v = s2.sql("SELECT simhash('the quick brown fox') AS h")
-        .collect()(0).getLong(0)
-      assert(v === Dedup.simHash64("the quick brown fox"))
-      val desc = s2.sql("DESCRIBE FUNCTION simhash")
-        .collect().map(_.getString(0)).mkString("\n")
-      assert(desc.contains("SimHash"), desc)
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
+    val v = spark.sql("SELECT simhash('the quick brown fox') AS h")
+      .collect()(0).getLong(0)
+    assert(v === Dedup.simHash64("the quick brown fox"))
+    val desc = spark.sql("DESCRIBE FUNCTION simhash")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(desc.contains("SimHash"), desc)
   }
 }

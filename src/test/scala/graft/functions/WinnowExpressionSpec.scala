@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 class WinnowExpressionSpec extends SparkSpec {
@@ -37,24 +36,12 @@ class WinnowExpressionSpec extends SparkSpec {
   }
 
   test("extension-registered SQL function winnow_fingerprints with docs") {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      val v = s2.sql(
-          "SELECT winnow_fingerprints('the quick brown fox jumps') AS f")
-        .collect()(0).getSeq[Long](0)
-      assert(v === TextOps.fingerprintSet("the quick brown fox jumps").sorted)
-      val desc = s2.sql("DESCRIBE FUNCTION winnow_fingerprints")
-        .collect().map(_.getString(0)).mkString("\n")
-      assert(desc.contains("winnowing") || desc.contains("fingerprint"), desc)
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
+    val v = spark.sql(
+        "SELECT winnow_fingerprints('the quick brown fox jumps') AS f")
+      .collect()(0).getSeq[Long](0)
+    assert(v === TextOps.fingerprintSet("the quick brown fox jumps").sorted)
+    val desc = spark.sql("DESCRIBE FUNCTION winnow_fingerprints")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(desc.contains("winnowing") || desc.contains("fingerprint"), desc)
   }
 }

@@ -64,32 +64,20 @@ class SimilaritySpec extends SparkSpec {
 
   test("extension-registered SQL function hyperplane_bucket(...) matches " +
       "the Column API") {
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .getOrCreate()
-    try {
-      s2.read.parquet(s"$sfDir/embeddings.parquet")
-        .createOrReplaceTempView("emb")
-      val viaSql = s2.sql(
-        "SELECT vec_id, hyperplane_bucket(embedding, 8) AS b FROM emb")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaApi = s2.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), graft.functions.HyperplaneBucketExpression
-          .native(col("embedding"), 8).as("b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaSql === viaApi)
-      assert(viaSql.values.forall(b => b >= 0L && b < 256L))
-      val desc = s2.sql("DESCRIBE FUNCTION hyperplane_bucket")
-        .collect().map(_.getString(0)).mkString("\n")
-      assert(desc.contains("hyperplane_bucket"), desc)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .createOrReplaceTempView("emb")
+    val viaSql = spark.sql(
+      "SELECT vec_id, hyperplane_bucket(embedding, 8) AS b FROM emb")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaApi = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), graft.functions.HyperplaneBucketExpression
+        .native(col("embedding"), 8).as("b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaSql === viaApi)
+    assert(viaSql.values.forall(b => b >= 0L && b < 256L))
+    val desc = spark.sql("DESCRIBE FUNCTION hyperplane_bucket")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(desc.contains("hyperplane_bucket"), desc)
   }
 
   test("LSH finds planted near-neighbors (recall where locality exists)") {
@@ -204,15 +192,6 @@ class SimilaritySpec extends SparkSpec {
       maxBucket = 10)
       .select("vec_a").distinct().collect().map(_.getLong(0)).toSet
     assert(knn === Set(100L, 101L), s"got $knn")
-    // kill switch: metrics off → same pruned pairs, no observation node
-    spark.conf.set("spark.graft.dedup.pruneMetrics", "false")
-    try {
-      val quiet = Similarity.nearDupPairs(spark, tmp, minCosine = 0.99,
-        numPlanes = 8, maxBucket = 10)
-      assert(quiet.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        === Seq((100L, 101L)))
-      assert(quiet.queryExecution.observedMetrics.isEmpty)
-    } finally spark.conf.set("spark.graft.dedup.pruneMetrics", "true")
   }
 
   test("diversity sample: dense buckets thin toward target, sparse pass " +

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   * bands, and leaves every gated shape untouched. */
 class RangeBinJoinRuleSpec extends SparkSpec {
 
-  private def withRule[A](body: => A): A = {
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ RangeBinJoinRule
+  /** The shared session carries the rule; a baseline of the unrewritten
+    * (nested-loop) plan switches it off with Spark's own
+    * `spark.sql.optimizer.excludedRules`. */
+  private def withoutRule[A](body: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", RangeBinJoinRule.ruleName)
     try body
-    finally spark.experimental.extraOptimizations = before
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   private def optimized(df: DataFrame): String =
@@ -31,18 +33,16 @@ class RangeBinJoinRuleSpec extends SparkSpec {
         |  ON e.event_type = 'error' AND c.event_type = 'click'
         | AND c.ts BETWEEN e.ts - INTERVAL 30 MINUTE
         |                AND e.ts + INTERVAL 30 MINUTE""".stripMargin
-    val without = spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(without.nonEmpty, "fixture must produce matches")
-    withRule {
-      val df = spark.sql(sql)
-      val opt = optimized(df)
-      assert(opt.contains("__graft_range_bin"), opt)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-        s"rewritten plan must not nested-loop:\n$plan")
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === without)
-    }
+    val df = spark.sql(sql)
+    val opt = optimized(df)
+    assert(opt.contains("__graft_range_bin"), opt)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
+      s"rewritten plan must not nested-loop:\n$plan")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === without)
   }
 
   test("integral band join (long columns, asymmetric band, strict bounds)") {
@@ -54,13 +54,11 @@ class RangeBinJoinRuleSpec extends SparkSpec {
       "a_v >= b_v - 15 AND a_v <= b_v + 20",   // inclusive asymmetric
       "a_v > b_v - 16 AND a_v < b_v + 21")) {  // strict, same band
       val sql = s"SELECT a_id, b_id FROM rb_a JOIN rb_b ON $cond"
-      val without = spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(without === Set((1L, 10L), (2L, 11L)))
-      withRule {
-        val df = spark.sql(sql)
-        assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-        assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
-      }
+      val df = spark.sql(sql)
+      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
     }
   }
 
@@ -68,16 +66,14 @@ class RangeBinJoinRuleSpec extends SparkSpec {
     import spark.implicits._
     Seq((1L, 5L)).toDF("a_id", "a_v").createOrReplaceTempView("rb_z1")
     Seq((2L, 8L)).toDF("b_id", "b_v").createOrReplaceTempView("rb_z2")
-    withRule {
-      val df = spark.sql(
-        "SELECT a_id, b_id FROM rb_z1 JOIN rb_z2 ON a_v >= b_v - 3 AND a_v <= b_v - 3")
-      val opt = optimized(df)
-      assert(!opt.contains("__graft_range_bin"), opt)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-        s"zero-width band must plan as a hash/merge join:\n$plan")
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L)))
-    }
+    val df = spark.sql(
+      "SELECT a_id, b_id FROM rb_z1 JOIN rb_z2 ON a_v >= b_v - 3 AND a_v <= b_v - 3")
+    val opt = optimized(df)
+    assert(!opt.contains("__graft_range_bin"), opt)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
+      s"zero-width band must plan as a hash/merge join:\n$plan")
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L)))
   }
 
   test("gates: equi-conjunct present, outer join, non-foldable bound — all untouched") {
@@ -85,27 +81,24 @@ class RangeBinJoinRuleSpec extends SparkSpec {
     val a = Seq((1L, 5L, 1L)).toDF("a_id", "a_v", "a_k")
     val b = Seq((2L, 6L, 1L, 2L)).toDF("b_id", "b_v", "b_k", "b_w")
     a.createOrReplaceTempView("rb_g1"); b.createOrReplaceTempView("rb_g2")
-    withRule {
-      // equi-conjunct already extractable → no rewrite
-      val equi = spark.sql("SELECT a_id FROM rb_g1 JOIN rb_g2 ON a_k = b_k " +
-        "AND a_v BETWEEN b_v - 5 AND b_v + 5")
-      assert(!optimized(equi).contains("__graft_range_bin"), optimized(equi))
-      assert(equi.count() == 1)
-      // every outer type rewrites since r16 — see the dedicated
-      // parity tests below for RIGHT and FULL
-      // non-foldable bound (column width) → untouched
-      val dyn = spark.sql("SELECT a_id FROM rb_g1 JOIN rb_g2 " +
-        "ON a_v BETWEEN b_v - b_w AND b_v + b_w")
-      assert(!optimized(dyn).contains("__graft_range_bin"), optimized(dyn))
-      assert(dyn.count() == 1)
-      // kill switch
-      spark.conf.set("spark.graft.rangeBinJoin.enabled", "false")
-      try {
-        val off = spark.sql("SELECT a_id FROM rb_g1 JOIN rb_g2 " +
-          "ON a_v BETWEEN b_v - 5 AND b_v + 5")
-        assert(!optimized(off).contains("__graft_range_bin"), optimized(off))
-      } finally spark.conf.unset("spark.graft.rangeBinJoin.enabled")
-    }
+    // equi-conjunct already extractable → no rewrite
+    val equi = spark.sql("SELECT a_id FROM rb_g1 JOIN rb_g2 ON a_k = b_k " +
+      "AND a_v BETWEEN b_v - 5 AND b_v + 5")
+    assert(!optimized(equi).contains("__graft_range_bin"), optimized(equi))
+    assert(equi.count() == 1)
+    // every outer type rewrites since r16 — see the dedicated
+    // parity tests below for RIGHT and FULL
+    // non-foldable bound (column width) → untouched
+    val dyn = spark.sql("SELECT a_id FROM rb_g1 JOIN rb_g2 " +
+      "ON a_v BETWEEN b_v - b_w AND b_v + b_w")
+    assert(!optimized(dyn).contains("__graft_range_bin"), optimized(dyn))
+    assert(dyn.count() == 1)
+    // Spark's excludedRules switches the rule off, and only while set
+    val band = "SELECT a_id FROM rb_g1 JOIN rb_g2 " +
+      "ON a_v BETWEEN b_v - 5 AND b_v + 5"
+    val off = withoutRule(optimized(spark.sql(band)))
+    assert(!off.contains("__graft_range_bin"), off)
+    assert(optimized(spark.sql(band)).contains("__graft_range_bin"))
   }
 
   test("LEFT OUTER band join: rewrite fires, null-extension exact vs the BNLJ plan on the adversarial fixture") {
@@ -125,23 +118,21 @@ class RangeBinJoinRuleSpec extends SparkSpec {
     for (jt <- Seq("LEFT JOIN", "LEFT OUTER JOIN")) {
       val sql = s"SELECT a_id, b_id FROM rb_lo_a $jt rb_lo_b " +
         "ON a_v >= b_v - 15 AND a_v <= b_v + 20"
-      val without = spark.sql(sql).collect()
+      val without = withoutRule(spark.sql(sql).collect())
         .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
       // the fixture must exercise every adversarial shape
       assert(without.keySet.exists(_._2 == null), "needs unmatched lefts")
       assert(without.keySet.count(_._1 == 2L) == 2, "left 2 has two matches")
-      withRule {
-        val df = spark.sql(sql)
-        assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-          s"rewritten LEFT OUTER band join must not nested-loop:\n$plan")
-        val got = df.collect()
-          .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
-          .groupBy(identity).view.mapValues(_.length).toMap
-        assert(got === without)
-      }
+      val df = spark.sql(sql)
+      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
+        s"rewritten LEFT OUTER band join must not nested-loop:\n$plan")
+      val got = df.collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      assert(got === without)
     }
   }
 
@@ -167,16 +158,14 @@ class RangeBinJoinRuleSpec extends SparkSpec {
         .map(r => (if (r.isNullAt(0)) null else r.getLong(0),
           if (r.isNullAt(1)) null else r.getLong(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
-      val without = bag(spark.sql(sql).collect())
+      val without = bag(withoutRule(spark.sql(sql).collect()))
       assert(without.keySet.exists(_._1 == null), "needs unmatched rights")
-      withRule {
-        val df = spark.sql(sql)
-        assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-          s"rewritten $jt band join must not nested-loop:\n$plan")
-        assert(bag(df.collect()) === without, jt)
-      }
+      val df = spark.sql(sql)
+      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
+        s"rewritten $jt band join must not nested-loop:\n$plan")
+      assert(bag(df.collect()) === without, jt)
     }
   }
 
@@ -190,55 +179,30 @@ class RangeBinJoinRuleSpec extends SparkSpec {
       ("LEFT ANTI JOIN", Set(3L)))) {
       val sql = s"SELECT a_id FROM rb_sa_a $jt rb_sa_b " +
         "ON a_v >= b_v - 15 AND a_v <= b_v + 20"
-      assert(spark.sql(sql).collect().map(_.getLong(0)).toSet === want)
-      withRule {
-        val df = spark.sql(sql)
-        assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-        // semi/anti emit each left AT MOST ONCE even though left 2
-        // matches two right rows across bin copies
-        assert(df.collect().map(_.getLong(0)).toSet === want)
-        assert(df.count() === want.size)
-      }
+      assert(withoutRule(spark.sql(sql).collect()).map(_.getLong(0)).toSet === want)
+      val df = spark.sql(sql)
+      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+      // semi/anti emit each left AT MOST ONCE even though left 2
+      // matches two right rows across bin copies
+      assert(df.collect().map(_.getLong(0)).toSet === want)
+      assert(df.count() === want.size)
     }
   }
 
   test("idempotent under repeated application; GraftExtensions sessions carry the rule") {
     events.createOrReplaceTempView("ev_rule_test2")
-    withRule {
-      val df = spark.sql("SELECT e.event_id FROM ev_rule_test2 e JOIN " +
-        "ev_rule_test2 c ON c.ts BETWEEN e.ts - INTERVAL 60 SECOND " +
-        "AND e.ts + INTERVAL 60 SECOND AND e.event_type = 'error' " +
-        "AND c.event_type = 'click'")
-      val opt = df.queryExecution.optimizedPlan
-      // exactly ONE generated bin attribute even though the optimizer
-      // batch runs to fixed point
-      val bins = opt.collect {
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate
-          if g.generatorOutput.exists(_.name == "__graft_range_bin") => g
-      }
-      assert(bins.size == 1, opt.toString)
+    val df = spark.sql("SELECT e.event_id FROM ev_rule_test2 e JOIN " +
+      "ev_rule_test2 c ON c.ts BETWEEN e.ts - INTERVAL 60 SECOND " +
+      "AND e.ts + INTERVAL 60 SECOND AND e.event_type = 'error' " +
+      "AND c.event_type = 'click'")
+    val opt = df.queryExecution.optimizedPlan
+    // exactly ONE generated bin attribute even though the optimizer
+    // batch runs to fixed point
+    val bins = opt.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+        if g.generatorOutput.exists(_.name == "__graft_range_bin") => g
     }
-  }
-
-  test("GraftSession.installPlanExtensions carries the rule (the Verify/Bench harness path)") {
-    // q_sql_range_join is a PURE query since r15: it relies on the
-    // SESSION carrying the rule — GraftExtensions config, or this
-    // harness-level installer for stock/getOrCreate'd sessions
-    val before = spark.experimental.extraOptimizations
-    try {
-      graft.GraftSession.installPlanExtensions(spark)
-      assert(spark.experimental.extraOptimizations.contains(RangeBinJoinRule))
-      // idempotent: a second install adds nothing
-      graft.GraftSession.installPlanExtensions(spark)
-      assert(spark.experimental.extraOptimizations.count(_ == RangeBinJoinRule) == 1)
-      import spark.implicits._
-      Seq((1L, 100L)).toDF("a_id", "a_v").createOrReplaceTempView("rb_h1")
-      Seq((2L, 103L)).toDF("b_id", "b_v").createOrReplaceTempView("rb_h2")
-      val df = spark.sql("SELECT a_id, b_id FROM rb_h1 JOIN rb_h2 " +
-        "ON a_v BETWEEN b_v - 5 AND b_v + 5")
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.count() === 1)
-    } finally spark.experimental.extraOptimizations = before
+    assert(bins.size == 1, opt.toString)
   }
 
   test("comma-join + WHERE clause shape: pushdown delivers the band to the join and the rule fires") {
@@ -247,13 +211,11 @@ class RangeBinJoinRuleSpec extends SparkSpec {
       .createOrReplaceTempView("rb_w1")
     Seq((10L, 103L), (11L, 900L)).toDF("b_id", "b_v")
       .createOrReplaceTempView("rb_w2")
-    withRule {
-      val df = spark.sql("SELECT a_id, b_id FROM rb_w1, rb_w2 " +
-        "WHERE a_v BETWEEN b_v - 5 AND b_v + 5")
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
-        Seq((1L, 10L)))
-    }
+    val df = spark.sql("SELECT a_id, b_id FROM rb_w1, rb_w2 " +
+      "WHERE a_v BETWEEN b_v - 5 AND b_v + 5")
+    assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((1L, 10L)))
   }
 
   test("INT/SHORT column band join: rewrite resolves (Long-domain widening) and rows match") {
@@ -267,19 +229,17 @@ class RangeBinJoinRuleSpec extends SparkSpec {
       .createOrReplaceTempView("rb_i2")
     val sql = "SELECT a_id, b_id FROM rb_i1 JOIN rb_i2 " +
       "ON a_v >= b_v - 15 AND a_v <= b_v + 20"
-    val without = spark.sql(sql).collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(without === Set((1, 10), (2, 11)))
-    withRule {
-      val df = spark.sql(sql)
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.collect().map(r => (r.getInt(0), r.getInt(1))).toSet === without)
-      // SHORT columns + the zero-width (equality) path also resolve
-      Seq((1, 5.toShort)).toDF("s_id", "s_v").createOrReplaceTempView("rb_s1")
-      Seq((2, 8.toShort)).toDF("t_id", "t_v").createOrReplaceTempView("rb_s2")
-      val zw = spark.sql("SELECT s_id, t_id FROM rb_s1 JOIN rb_s2 " +
-        "ON s_v >= t_v - 3 AND s_v <= t_v - 3")
-      assert(zw.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq === Seq((1, 2)))
-    }
+    val df = spark.sql(sql)
+    assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+    assert(df.collect().map(r => (r.getInt(0), r.getInt(1))).toSet === without)
+    // SHORT columns + the zero-width (equality) path also resolve
+    Seq((1, 5.toShort)).toDF("s_id", "s_v").createOrReplaceTempView("rb_s1")
+    Seq((2, 8.toShort)).toDF("t_id", "t_v").createOrReplaceTempView("rb_s2")
+    val zw = spark.sql("SELECT s_id, t_id FROM rb_s1 JOIN rb_s2 " +
+      "ON s_v >= t_v - 3 AND s_v <= t_v - 3")
+    assert(zw.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq === Seq((1, 2)))
   }
 
   test("exact bins above 2^53: values a double floor would mis-bin keep their true matches") {
@@ -301,14 +261,12 @@ class RangeBinJoinRuleSpec extends SparkSpec {
       .toDF("b_id", "b_v").createOrReplaceTempView("rb_53b")
     val sql = "SELECT a_id, b_id FROM rb_53a JOIN rb_53b " +
       "ON a_v BETWEEN b_v - 1000 AND b_v + 1000"
-    val without = spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     // every a value has at least one in-band b partner by construction
     assert(without.map(_._1) === aVals.indices.map(_.toLong).toSet)
-    withRule {
-      val df = spark.sql(sql)
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
-    }
+    val df = spark.sql(sql)
+    assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
   }
 
   test("negative domain + null points: exact floor handles both sides of zero; null right rows drop") {
@@ -320,13 +278,11 @@ class RangeBinJoinRuleSpec extends SparkSpec {
     a.createOrReplaceTempView("rb_n1"); b.createOrReplaceTempView("rb_n2")
     val sql = "SELECT a_id, b_id FROM rb_n1 JOIN rb_n2 " +
       "ON a_v BETWEEN b_v - 7 AND b_v + 7"
-    val without = spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(without === Set((1L, 10L), (2L, 11L), (3L, 11L)))
-    withRule {
-      val df = spark.sql(sql)
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
-    }
+    val df = spark.sql(sql)
+    assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
   }
 
   test("randomized parity: binned rows equal nested-loop rows on adversarial data") {
@@ -341,12 +297,10 @@ class RangeBinJoinRuleSpec extends SparkSpec {
     mk("b").createOrReplaceTempView("rb_r2")
     val sql = "SELECT a_id, b_id FROM rb_r1 JOIN rb_r2 " +
       "ON a_v BETWEEN b_v - 17 AND b_v + 4"
-    val without = spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    withRule {
-      val df = spark.sql(sql)
-      assert(optimized(df).contains("__graft_range_bin"), optimized(df))
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
-    }
+    val without = withoutRule(spark.sql(sql).collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
+    val df = spark.sql(sql)
+    assert(optimized(df).contains("__graft_range_bin"), optimized(df))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === without)
     assert(without.nonEmpty)
   }
 }
