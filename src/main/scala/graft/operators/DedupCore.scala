@@ -202,10 +202,30 @@ private[operators] trait DedupCore {
     else (a & b).size.toDouble / (a | b).size.toDouble
 
   /** Column twin of [[shingles]]: word k-gram shingle set as a pure array
-    * expression (split → transform/slice → array_distinct) — codegen'd, no
-    * UDF, and expressible verbatim in any engine with list functions (the
-    * `q_jaccard` DuckDB oracle is the same computation). */
+    * expression, no UDF, and expressible verbatim in any engine with list
+    * functions (the `q_jaccard` DuckDB oracle is the same computation).
+    *
+    * Linear per document. `transform` is interpreted (`CodegenFallback`)
+    * and re-evaluates every outer column its lambda references once per
+    * element, so a lambda over `words` would re-run the regex split once
+    * per shingle. Here the lambda reads only its own element: the k-grams
+    * are the rows of `arrays_zip` over k equal-length shifted slices of
+    * `words` (slice j starts at word j+1), each joined with spaces. */
   def shingleArray(textCol: Column, k: Int = 3): Column = {
+    require(k >= 1, s"shingle width k must be >= 1, got $k")
+    val words = filter(split(textCol, "\\s+"), w => length(w) > 0)
+    val n = size(words)
+    val shifted = (0 until k).map(j => slice(words, lit(j + 1), n - (k - 1)))
+    array_distinct(
+      when(n < k, array(concat_ws(" ", words)))
+        .otherwise(transform(arrays_zip(shifted: _*), s =>
+          concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))))
+  }
+
+  /** Test reference for [[shingleArray]]: the same shingles from a lambda
+    * that slices `words` itself, quadratic per document. */
+  private[operators] def shingleArrayRecompute(textCol: Column,
+      k: Int = 3): Column = {
     val words = filter(split(textCol, "\\s+"), w => length(w) > 0)
     val n = size(words)
     array_distinct(
@@ -220,6 +240,7 @@ private[operators] trait DedupCore {
     * word shingles fail. substring is 1-based; texts shorter than n
     * collapse to a single whole-text shingle. */
   def charShingleArray(textCol: Column, n: Int = 5): Column = {
+    require(n >= 1, s"shingle width n must be >= 1, got $n")
     val len = length(textCol)
     array_distinct(
       when(len <= n, array(textCol))

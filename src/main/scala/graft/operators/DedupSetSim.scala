@@ -36,12 +36,22 @@ private[operators] trait DedupSetSim { self: DedupCore =>
           shingleArray(col("text"), shingleK).as("ws"))
         .withColumn("wh", sort_array(transform(col("ws"), x => xxhash64(x))))
       sets.write.mode("overwrite").parquet(s"$path/sets")
+      // computed once for the two writes below: the second would
+      // otherwise recompute the explode, df group-by, join and per-doc
+      // sort. A local checkpoint, not persist(): a cached plan keeps its
+      // final shuffle's spark.sql.shuffle.partitions partitions, so each
+      // write would emit that many files where AQE coalesces to a few.
       val sorted = raritySorted(ParquetInput.read(spark, s"$path/sets"),
-        threshold - 0.001)
-      setSimPrefixes(sorted, hotDf)
-        .write.mode("overwrite").parquet(s"$path/prefix")
-      setSimPrefixPairs(sorted, hotDf)
-        .write.mode("overwrite").parquet(s"$path/prefix2")
+        threshold - 0.001).localCheckpoint()
+      try {
+        setSimPrefixes(sorted, hotDf)
+          .write.mode("overwrite").parquet(s"$path/prefix")
+        setSimPrefixPairs(sorted, hotDf)
+          .write.mode("overwrite").parquet(s"$path/prefix2")
+      } finally sorted.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+        case _ => ()
+      }
     }
   }
 
@@ -60,21 +70,22 @@ private[operators] trait DedupSetSim { self: DedupCore =>
     * join runs: a self-join on key enumerates exactly Σ_key df(key)²
     * ordered rows (~2× the `doc_a < doc_b` survivors) — summed over
     * the single-token stream (`tok`) and the hot-pair stream (`key`).
-    * One map-side group-by + sum per stream over the build-once
-    * prefix tables; doubles because a saturated corpus's Σ df² is
+    * One group-by + sum over the union of both streams, each key tagged
+    * with its stream so a `tok` and a `key` that print alike stay two
+    * buckets; doubles because a saturated corpus's Σ df² is
     * precisely the number too big for the join (the estimate needs
     * magnitude, not exactness). */
   def setSimCandidateEstimate(prefixed: DataFrame,
       prefixPairs: DataFrame): Double =
     Artifacts("setsim_estimate", (), prefixed, prefixPairs) {
-      def sumSq(rows: DataFrame, key: String): Double = {
-        val r = rows.groupBy(col(key)).count()
-          .agg(sum(col("count").cast("double") * col("count")
-            .cast("double")))
-          .collect()(0)
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      }
-      sumSq(prefixed, "tok") + sumSq(prefixPairs, "key")
+      val keys = prefixed.select(lit(0).as("side"), col("tok").as("k"))
+        .unionByName(prefixPairs.select(lit(1).as("side"),
+          col("key").cast("string").as("k")))
+      val r = keys.groupBy(col("side"), col("k")).count()
+        .agg(sum(col("count").cast("double") * col("count")
+          .cast("double")))
+        .collect()(0)
+      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     }
 
   /** EXACT set-similarity self-join via prefix filtering (the

@@ -4,9 +4,15 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** The per-file (path, length, modification time) listing of a file
@@ -31,17 +37,30 @@ private[operators] object FileSnapshot {
   * infers the schema on every call, and Spark runs that inference as a
   * one-task job (`ParquetFileFormat.mergeSchemasInParallel`): a
   * scheduler round-trip per input before an entry's plan exists. Here
-  * the schema is inferred on the first read of a path only; later reads
-  * pass it back with `.schema(s)`, which skips the job but still lists
-  * the files.
+  * no read of a flat input runs a job:
+  *
+  *  - First read. For a flat input (no reader options, schema merging
+  *    off, no subdirectories, no `_metadata`/`_common_metadata` summary
+  *    file), the footer of the first data file is read on the driver
+  *    and converted the way Spark's non-merging inference converts it
+  *    (`ParquetUtils.inferSchema` touches exactly that file when there
+  *    is no summary file). The schema is passed with `.schema(s)` and
+  *    kept only if the FileIndex of the returned DataFrame lists exactly
+  *    the files the footer was picked from.
+  *  - Later reads pass the memoized schema back with `.schema(s)`, which
+  *    skips inference but still lists the files.
+  *  - Fallback. Any other layout (reader options such as `mergeSchema`,
+  *    `batch=`-style partition directories, summary files, globs, a
+  *    non-classic session) or any error reading the footer uses Spark's
+  *    own inference, which runs the one-task job.
   *
   * Key: the paths, the reader options and the session's parquet
   * inference confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`:
   * `nanosAsLong` and `inferTimestampNTZ.enabled` change column types).
   * Validity: a memoized schema is served only while the input's
   * [[FileSnapshot]], taken from the FileIndex the returned DataFrame
-  * scans, equals the snapshot it was inferred from. Otherwise the
-  * schema is inferred again and the entry replaced, so a directory
+  * scans, equals the snapshot it was derived from. Otherwise the
+  * schema is derived again and the entry replaced, so a directory
   * rewritten in place is never read with a stale schema. */
 object ParquetInput {
 
@@ -61,16 +80,71 @@ object ParquetInput {
     // a DataFrameReader is mutable: `.schema(s)` must not leak into the
     // inferring read
     def reader = spark.read.options(options)
-    val memoized = Option(schemas.get(key)).flatMap { e =>
+    def withSchema(e: Entry): Option[DataFrame] = {
       val df = reader.schema(e.schema).parquet(paths: _*)
       if (snapshot(df).contains(e.snapshot)) Some(df) else None
     }
-    memoized.getOrElse {
+    Option(schemas.get(key)).flatMap(withSchema).orElse {
+      footerEntry(spark, options, paths).flatMap { e =>
+        val df = withSchema(e)
+        df.foreach(_ => schemas.put(key, e))
+        df
+      }
+    }.getOrElse {
       val df = reader.parquet(paths: _*)
       snapshot(df).foreach(s => schemas.put(key, Entry(df.schema, s)))
       df
     }
   }
+
+  /** The schema and expected snapshot of a flat input, from the footer
+    * of its first data file (sorted by path, as Spark's inference sorts
+    * its listing). The expected snapshot is this listing: a DataFrame
+    * whose FileIndex lists anything else falls back to inference. */
+  private def footerEntry(spark: SparkSession, options: Map[String, String],
+      paths: Seq[String]): Option[Entry] = spark match {
+    case c: org.apache.spark.sql.classic.SparkSession
+        if options.isEmpty && !c.sessionState.conf.isParquetSchemaMergingEnabled =>
+      try {
+        val conf = c.sessionState.newHadoopConf()
+        val files = paths.flatMap { p =>
+          val path = new Path(p)
+          path.getFileSystem(conf).listStatus(path).toSeq
+        }.filterNot(s => hidden(s.getPath.getName))
+          .sortBy(_.getPath.toString)
+        if (files.isEmpty || files.exists(s => s.isDirectory ||
+            summary(s.getPath.getName))) None
+        else {
+          val first = files.head
+          val footer = new Footer(first.getPath, ParquetFooterReader
+            .readFooter(HadoopInputFile.fromStatus(first, conf),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS))
+          val sql = c.sessionState.conf
+          // the converter `mergeSchemasInParallel` builds: these five
+          // flags from the session, the rest at their defaults
+          val converter = new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = sql.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+            nanosAsLong = sql.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              sql.parquetReaderRespectUnknownTypeAnnotation)
+          Some(Entry(ParquetFileFormat.readSchemaFromFooter(footer, converter),
+            files.map(f => (f.getPath.toString, f.getLen,
+              f.getModificationTime)).toVector))
+        }
+      } catch { case NonFatal(_) => None }
+    case _ => None
+  }
+
+  /** Names a FileIndex skips (`HadoopFSUtils.shouldFilterOutPathName`),
+    * except the summary files, which it keeps. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=") && !summary(name)) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+
+  private def summary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   /** The plan of a plain read is one relation over its FileIndex. */
   private def snapshot(df: DataFrame): Option[FileSnapshot.Snapshot] =

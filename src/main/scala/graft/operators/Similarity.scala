@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *    candidate set is ~N/2^H per probe instead of N. The all-pairs
   *    near-dup join is a bucketed equi-join — never a cartesian product.
   *
-  * Dot products use the codegen'd higher-order functions
-  * (`zip_with` + `aggregate`), not a UDF, so the whole pipeline stays
-  * inside WholeStageCodegen.
+  * Dot products use the native [[graft.functions.DotProductExpression]]
+  * (codegen'd), not a UDF and not `zip_with` + `aggregate`, whose
+  * lambdas Spark interprets (`CodegenFallback`).
   */
 object Similarity {
 

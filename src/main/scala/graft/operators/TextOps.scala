@@ -92,7 +92,8 @@ object TextOps {
     * (1 − distinct/total words), the boilerplate/spam signal in
     * Gopher-style quality rule sets: machine-generated and template text
     * repeats tokens far above prose rates. Pure array expressions over
-    * one split — codegen'd, shuffle-free. */
+    * one split, shuffle-free; the `filter` lambda is interpreted
+    * (`CodegenFallback`), once per word. */
   def repetition(spark: SparkSession, dir: String): DataFrame = {
     val words = filter(split(col("text"), "\\s+"), w => length(w) > 0)
     val n = size(words)

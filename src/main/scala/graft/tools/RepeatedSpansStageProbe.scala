@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.ParquetInput
 
 /** Stage decomposition of [[graft.operators.Dedup.repeatedSpans]] (r16
-  * optimization evidence, the [[SetSimStageProbe]] protocol): times the
-  * anchor-hash pass alone, the repeated-hash aggregate, the candidate
-  * semi-join + string regroup, and the full query, so the round's notes
-  * can attribute the warm cost. Median of 3 after one untimed pass.
+  * optimization evidence): times the anchor-hash pass alone, the
+  * repeated-hash aggregate, the candidate semi-join + string regroup,
+  * and the full query, so the round's notes can attribute the warm
+  * cost. Median of 3 after one untimed pass.
   *
   *   sbt "runMain graft.tools.RepeatedSpansStageProbe [dir]"
   */

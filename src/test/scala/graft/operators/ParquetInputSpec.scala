@@ -1,50 +1,15 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types._
 
-/** Pins the schema memo of [[ParquetInput]]: a warm read of an unchanged
-  * input runs no Spark job and sees exactly the inferred schema, while a
-  * rewritten input or a changed inference conf is inferred again. */
+/** Pins the schema memo of [[ParquetInput]]: a first read of a flat
+  * input and a warm read of an unchanged input run no Spark job and see
+  * exactly the inferred schema, while a rewritten input or a changed
+  * inference conf is derived again, and a partitioned or merging read
+  * falls back to Spark's inference. */
 class ParquetInputSpec extends SparkSpec {
-
-  private val TagKey = "graft.spec.parquetInput"
-
-  /** Runs `body` and counts the Spark jobs it submitted from this
-    * thread. Listener events arrive asynchronously, so a marker job is
-    * submitted afterwards and awaited: events reach a listener in order,
-    * so once the marker is seen every earlier job start has been too. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"run-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(TagKey)))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(TagKey, tag)
-      val out = body
-      sc.setLocalProperty(TagKey, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "marker job never reached listener")
-      (out, seen.asScala.count(_ == tag))
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
@@ -87,7 +52,7 @@ class ParquetInputSpec extends SparkSpec {
       .toDF("id", "v", "vec").write.mode("overwrite").parquet(dir)
     val inferred = spark.read.parquet(dir).schema
     val (cold, coldJobs) = jobsDuring(ParquetInput.read(spark, dir))
-    assert(coldJobs > 0, "the first read infers the schema")
+    assert(coldJobs === 0, "the first read takes the schema from a footer")
     val (warm, warmJobs) = jobsDuring(ParquetInput.read(spark, dir))
     assert(warmJobs === 0, "the warm read must not run schema inference")
     assert(cold.schema === inferred)
@@ -107,7 +72,7 @@ class ParquetInputSpec extends SparkSpec {
     Seq((3L, "z", 0.5)).toDF("id", "v", "w")
       .write.mode("overwrite").parquet(dir)
     val (df, jobs) = jobsDuring(ParquetInput.read(spark, dir))
-    assert(jobs > 0, "a changed snapshot must be inferred again")
+    assert(jobs === 0, "a changed snapshot is read from the new footer")
     assert(df.schema === spark.read.parquet(dir).schema)
     assert(df.schema("id").dataType === LongType)
     assert(df.columns.toSeq === Seq("id", "v", "w"))
@@ -164,5 +129,83 @@ class ParquetInputSpec extends SparkSpec {
     assert(rows(warm) === rows(inferred))
     assert(rows(warm.filter($"p" === "a").select("id")) ===
       Set(Seq(1L), Seq(3L)))
+  }
+
+  /** Fresh copies of fixture tables under a new directory: paths no
+    * earlier read has memoized, so the next read is a first read. */
+  private def fixtureCopy(prefix: String, tables: String*): String = {
+    val dir = java.nio.file.Paths.get(tmpDir(prefix))
+    tables.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sfDir, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir.toString
+  }
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p))
+        java.nio.file.Files.createDirectories(dst)
+      else java.nio.file.Files.copy(p, dst)
+    } finally walk.close()
+  }
+
+  /** A first read runs no job and sees exactly `spark.read.parquet`'s
+    * schema and rows. */
+  private def assertFirstRead(path: String): Unit = {
+    val (df, jobs) = jobsDuring(ParquetInput.read(spark, path))
+    assert(jobs === 0, s"first read of $path")
+    val inferred = spark.read.parquet(path)
+    assert(df.schema === inferred.schema, path)
+    assert(rows(df) === rows(inferred), path)
+  }
+
+  test("the first read of a flat fixture input runs no job: documents, " +
+      "embeddings, events with nanosAsLong on and off") {
+    val dir = fixtureCopy("pqin_first", "documents", "embeddings", "events")
+    assertFirstRead(s"$dir/documents.parquet")
+    assertFirstRead(s"$dir/embeddings.parquet")
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    Seq("true", "false").foreach { v =>
+      withConf(nanos, v)(assertFirstRead(s"$dir/events.parquet"))
+    }
+    // a TIMESTAMP(NANOS) column converts under the session's conf
+    val ns = writeEvents("pqin_first_ns", "NANOS", 1704110400000000000L)
+    withConf(nanos, "true") {
+      assertFirstRead(s"$ns/events.parquet")
+      assert(ParquetInput.read(spark, s"$ns/events.parquet")
+        .schema("ts").dataType === LongType)
+    }
+  }
+
+  test("the first read of each written set-similarity artifact runs no " +
+      "job: sets, prefix, prefix2") {
+    val built = Dedup.materializeSetSimTables(spark,
+      fixtureCopy("pqin_setsim", "documents"))
+    val copy = tmpDir("pqin_setsim_copy")
+    Seq("sets", "prefix", "prefix2").foreach { t =>
+      copyTree(s"$built/$t", s"$copy/$t")
+      assertFirstRead(s"$copy/$t")
+    }
+  }
+
+  test("a batch=-partitioned sink and a mergeSchema read fall back to " +
+      "Spark's inference and keep the partition column in place") {
+    import spark.implicits._
+    val dir = tmpDir("pqin_batches")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/batch=0")
+    Seq((2L, "b", 0.5)).toDF("id", "v", "w").write.parquet(s"$dir/batch=1")
+    val (df, jobs) = jobsDuring(ParquetInput.read(spark, dir))
+    assert(jobs > 0, "a partitioned layout is inferred by Spark")
+    assert(df.schema === spark.read.parquet(dir).schema)
+    assert(df.columns.toSeq === Seq("id", "v", "batch"))
+    val merge = Map("mergeSchema" -> "true")
+    val (merged, mergeJobs) =
+      jobsDuring(ParquetInput.read(spark, merge, dir))
+    assert(mergeJobs > 0, "a mergeSchema read is inferred by Spark")
+    assert(merged.schema === spark.read.options(merge).parquet(dir).schema)
+    assert(merged.columns.toSeq === Seq("id", "v", "w", "batch"))
+    assert(rows(merged) === Set(Seq(1L, "a", null, 0), Seq(2L, "b", 0.5, 1)))
   }
 }
