@@ -326,7 +326,9 @@ object AsOf {
     *
     * Requires an integral-backed ts (timestamp/date/integer — the
     * same contract as `tolerance`); timestamps bucket on their
-    * internal micros. */
+    * internal micros. Spark's CacheManager owns the persisted bucket
+    * grain: a repeated call on the same plan reuses its one cache entry,
+    * and `spark.catalog.clearCache()` releases it. */
   def asOfJoinBucketed(left: DataFrame, right: DataFrame,
       keys: Seq[String], ts: String, payload: Seq[String],
       rename: String => String, direction: String = "backward",
@@ -363,13 +365,12 @@ object AsOf {
     // ordered by ts first — one row per occupied right bucket. The
     // grain feeds the spine AND the carry join; it is SMALL by
     // construction (bucket grain, not rows), so persist it rather than
-    // re-running the right-side pipeline per consumer — ProbeRegistry
-    // bounds the cache across calls (the Privacy-family pattern)
+    // re-running the right-side pipeline per consumer (the two consumers
+    // shuffle it differently, so AQE has no exchange to reuse)
     val rowStruct = struct((col(ts) +: payload.map(col)): _*)
     val grainAgg = if (forward) min(rowStruct) else max(rowStruct)
     val grain = rb.groupBy((keys :+ bucketCol).map(col): _*)
       .agg(grainAgg.as("_extreme")).persist()
-    Relational.ProbeRegistry.register(grain)
     // bucket spine: every (keys, bucket) either side occupies, so a
     // left bucket with no in-bucket rights still receives its carry.
     // ONE distinct over the union (a distinct per side would add a

@@ -241,10 +241,10 @@ private[operators] trait DedupClusters { self: DedupCore with DedupMinHash =>
         col("doc_a").as("pb")))
     val neg = a.join(b, Seq("shard", "pr"))
       .filter(col("doc_a") =!= col("doc_b"))
-      // pair-table-sized, not corpus² — but pair-table size is data-
-      // dependent (a dup-heavy corpus can blow it up), so the broadcast
-      // is size-gated and degrades to a shuffle anti-join above bound
-      .join(Relational.broadcastIfUnder(undirected),
+      // pair-table-sized, not corpus², but data-dependent (a dup-heavy
+      // corpus can blow it up): AQE broadcasts it under the adaptive
+      // threshold and keeps a shuffle anti-join above it
+      .join(undirected,
         col("doc_a") === col("pa") && col("doc_b") === col("pb"),
         "left_anti")
       .select(col("doc_a"), col("doc_b"), lit("neg").as("label"),

@@ -35,70 +35,6 @@ private[operators] trait DedupCore {
     * [[minHashHotBuckets]] / [[simHashHotBuckets]] to audit what a cap
     * dropped. Measured at sf0.1: ~2× faster than the self-join form, and
     * one pass over the signatures instead of three. */
-  private val pruneMetricSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Fresh observation name for a bucket-prune metric — shared with the
-    * embedding-LSH caps in [[Similarity]] so ONE listener surfaces every
-    * cap's pruning, text and embedding alike. */
-  private[operators] def pruneMetricName(): String =
-    s"graft_bucket_prune_${pruneMetricSeq.incrementAndGet()}"
-
-  /** Last prune counts per observation name — (pruned_buckets,
-    * pruned_docs), updated asynchronously by the per-session listener
-    * [[ensurePruneListener]] installs. Test hook + ops surface. Bounded
-    * to the most recent [[MaxPruneEntries]] observations (each
-    * `bucketPairs` call mints a fresh name, so a long-lived driver would
-    * otherwise grow this map forever). */
-  private val MaxPruneEntries = 256
-
-  private[operators] val lastPrune: java.util.Map[String, (Long, Long)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long)](16, 0.75f, false) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long)]): Boolean =
-          size() > MaxPruneEntries
-      })
-
-  /** Weak keys: the set must not pin a closed SparkSession (its
-    * listenerManager — and our listener with it — dies with the
-    * session; only this install-once guard could otherwise leak it). */
-  private val pruneListenerInstalled =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Install (once per session) the listener that surfaces hot-bucket
-    * pruning INLINE: when a capped dedup query finishes and its
-    * `graft_bucket_prune_*` observation shows the `maxBucket` cap
-    * actually dropped buckets, WARN with the counts — production runs
-    * see the recall trade without running a second audit query. */
-  private[operators] def ensurePruneListener(spark: SparkSession): Unit =
-    if (pruneListenerInstalled.add(spark)) {
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith("graft_bucket_prune")) {
-                val buckets = row.getAs[Long]("pruned_buckets")
-                val docsDropped = row.getAs[Long]("pruned_docs")
-                lastPrune.put(name, (buckets, docsDropped))
-                if (buckets > 0)
-                  log.warn(s"$name: maxBucket cap pruned $buckets LSH " +
-                    s"bucket(s) holding $docsDropped docs — near-dup " +
-                    "recall was traded for boundedness on those buckets " +
-                    "(run minHashHotBuckets/simHashHotBuckets to see which)")
-              }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-    }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   private[operators] def bucketPairs(bandKeys: DataFrame,
       maxBucket: Int): DataFrame = {
     val sized = bandKeys.groupBy("band", "band_key")
@@ -106,17 +42,12 @@ private[operators] trait DedupCore {
     val capped =
       if (maxBucket > 0) {
         // inline prune accounting: an `observe` (CollectMetrics) node —
-        // the declarative form of a LongAccumulator, zero extra passes.
-        // Unique name per call site: observation names must not collide
-        // within one query (e.g. clean-corpus composes several dedups).
-        ensurePruneListener(bandKeys.sparkSession)
-        val name = pruneMetricName()
+        // the declarative form of a LongAccumulator, zero extra passes
         val over = size(col("ids")) > maxBucket
-        sized.observe(name,
-            coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L))
-              .as("pruned_buckets"),
+        Observations.observe(sized, Observations.BucketPrune,
+            coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L)),
             coalesce(sum(when(over, size(col("ids")).cast("long"))
-              .otherwise(0L)), lit(0L)).as("pruned_docs"))
+              .otherwise(0L)), lit(0L)))
           .filter(size(col("ids")).between(2, maxBucket))
       }
       else sized.filter(size(col("ids")) >= 2)

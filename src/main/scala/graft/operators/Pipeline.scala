@@ -547,22 +547,19 @@ object Pipeline {
     * maintenance twin of [[corpusDiff]]: apply a CDC change batch
     * (op ∈ I/U/D, one op per key — upstream CDC compaction's contract)
     * to an immutable snapshot. Deletes and updates anti-join their keys
-    * out; updates and inserts union in. The change batch is broadcast
-    * via the size-gated [[Relational.broadcastIfUnder]] (CDC batches
-    * are deltas — tiny next to the snapshot — but only by convention),
-    * so the 100 TB snapshot is ONE map-side anti-join plus a
+    * out; updates and inserts union in. AQE picks the anti-join once
+    * the touched-key set's shuffle stage has run: a delta-sized batch
+    * (under `spark.sql.adaptive.autoBroadcastJoinThreshold`) becomes a
+    * broadcast, so the 100 TB snapshot is ONE map-side anti-join plus a
     * union: never shuffled, never rewritten in place — the output is
     * the next snapshot, written alongside (the Delta/Iceberg MERGE
-    * plan shape, minus the format). */
+    * plan shape, minus the format). A backfill-sized batch above the
+    * threshold stays a shuffle join instead of OOMing the driver. */
   def applyChanges(snapshot: DataFrame, changes: DataFrame,
       keyCol: String = "doc_id"): DataFrame = {
     val touched = changes.filter(col("op").isin("U", "D"))
       .select(col(keyCol)).distinct()
-    // size-gated: a CDC batch is delta-sized by CONVENTION, not by
-    // construction — a backfill-shaped batch must degrade to a shuffle
-    // join, not OOM the driver mid-broadcast.
-    snapshot.join(Relational.broadcastIfUnder(touched), Seq(keyCol),
-        "left_anti")
+    snapshot.join(touched, Seq(keyCol), "left_anti")
       .unionByName(changes.filter(col("op").isin("U", "I")).drop("op"))
   }
 
@@ -644,23 +641,19 @@ object Pipeline {
     * append; untouched docs' rows pass through bit-identical.
     *
     * Scale shape: the touched-key set is transition-sized (a diff, not
-    * a corpus), so the close is a size-gated broadcast join against the
-    * history ([[Relational.broadcastIfUnder]] — a pathological full-
-    * churn transition degrades to a shuffle join instead of OOMing)
-    * and the appended rows are change-batch-sized — accretion costs the
-    * diff of the new transition, never a history rewrite. Chain law
+    * a corpus), so AQE turns the close into a broadcast join against
+    * the history once the diff's size is known (a pathological full-
+    * churn transition, above the adaptive broadcast threshold, stays a
+    * shuffle join instead of OOMing) and the appended rows are
+    * change-batch-sized — accretion costs the diff of the new
+    * transition, never a history rewrite. Chain law
     * (spec-pinned): accreting v1→v2→…→vN transition by transition
     * yields a history whose "as of v" slice reproduces snapshot v
     * exactly, for every v. */
   def scd2Accrete(history: DataFrame, oldSnap: DataFrame,
       newSnap: DataFrame, vNew: Long): DataFrame = {
-    // size-gated broadcast: transition-sized by construction, but a
-    // pathological full-corpus churn transition would broadcast
-    // millions of keys — above the bound both joins degrade to plain
-    // shuffle joins and the operator stays total.
-    val touchedRaw = corpusDiff(oldSnap, newSnap)
+    val touched = corpusDiff(oldSnap, newSnap)
       .filter(col("status") =!= "unchanged").select(col("doc_id"))
-    val touched = Relational.broadcastIfUnder(touchedRaw)
     val closed = history
       .join(touched.withColumn("touched", lit(true)),
         Seq("doc_id"), "left")

@@ -93,9 +93,9 @@ object Privacy {
     * frames bounded by types × time buckets; the failed-cell key sets
     * broadcast (they cannot exceed types × hours in the retention
     * window, regardless of event volume). The grain and both stats
-    * frames are persisted (each feeds two branches) and registered
-    * with [[Relational.ProbeRegistry]], so repeated calls in a
-    * long-lived session keep a bounded cache.
+    * frames are persisted (each feeds two branches). Spark's
+    * CacheManager owns them: a repeated call on the same plan reuses
+    * their cache entries, and `spark.catalog.clearCache()` releases them.
     */
   def kAnonymize(spark: SparkSession, dir: String,
                  k: Int = 5, l: Int = 3): DataFrame =
@@ -120,18 +120,11 @@ object Privacy {
     // the grain feeds three ladder levels and each stats frame feeds a
     // released + failed branch: persist all three (grain once per raw
     // scan; the stats frames are group-level — kilobytes at any scale)
-    // and hand their lifecycle to ProbeRegistry so a long-lived session
-    // holds a bounded cache, not one frame per historical call
-    def keep(df: DataFrame): DataFrame = {
-      val p = df.persist()
-      Relational.ProbeRegistry.register(p)
-      p
-    }
-    val g = keep(grain(events, sensWidth))
-    val hourStats = keep(g.groupBy("event_type", "day", "hour")
+    val g = grain(events, sensWidth).persist()
+    val hourStats = g.groupBy("event_type", "day", "hour")
       .agg(sum("n").as("n_rows"),
         countDistinct("user_id").as("n_users"),
-        countDistinct("sens").as("n_values")))
+        countDistinct("sens").as("n_values")).persist()
     val relHour = hourStats.filter(col("n_users") >= k)
     val failHourKeys = hourStats.filter(col("n_users") < k)
       .select("event_type", "day", "hour")
@@ -139,10 +132,10 @@ object Privacy {
     // the key set is bounded by types × hours, not by data volume)
     val dayGrain = g.join(broadcast(failHourKeys),
       Seq("event_type", "day", "hour"))
-    val dayStats = keep(dayGrain.groupBy("event_type", "day")
+    val dayStats = dayGrain.groupBy("event_type", "day")
       .agg(sum("n").as("n_rows"),
         countDistinct("user_id").as("n_users"),
-        countDistinct("sens").as("n_values")))
+        countDistinct("sens").as("n_values")).persist()
     val relDay = dayStats.filter(col("n_users") >= k)
     val failDayKeys = dayStats.filter(col("n_users") < k)
       .select("event_type", "day")

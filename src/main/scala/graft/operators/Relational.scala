@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,213 +26,6 @@ object Relational {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     ParquetInput.read(spark, s"$dir/$name.parquet")
-
-  /** Size-gated broadcast hint for DATA-DEPENDENT small sides (diff
-    * sets, touched-key sets, pair tables): below `maxRows` the frame is
-    * `broadcast()`-hinted; at/above it the hint is withheld and the
-    * join falls back to a plain shuffle join — making the operator
-    * TOTAL instead of correct-until-a-pathological-input OOMs the
-    * driver. The probe is `limit(maxRows+1).count()`, which short-
-    * circuits once the bound is exceeded (never materializes the full
-    * set just to decide) — one cheap extra job on the hinted path,
-    * bounded work on the fallback path. Constant-sized small sides
-    * (dimension tables, 1-row aggregates) should keep the plain hint;
-    * this gate is for sets whose size is a function of the DATA, where
-    * "transition-sized by construction" is an assumption, not a bound.
-    * Default 4M rows ≈ 32 MB of bare keys — comfortably broadcastable,
-    * far under Spark's 8 GB hard cap.
-    *
-    * The probe REUSES its work (round-12 fix): the probed frame is
-    * persisted before counting, and on the hinted path — where
-    * `limit` did not truncate, so the probed frame IS the full set —
-    * the broadcast consumes the cached rows. The input lineage
-    * (possibly a corpus-wide diff/distinct) is therefore computed
-    * exactly ONCE per call instead of once for the probe and again
-    * per consuming join (the r11-measured 1.7× on q_cdc_merge). The
-    * persist is bounded at maxRows+1 rows by construction; on the
-    * fallback path it is dropped immediately (the truncated frame is
-    * useless there) and the join recomputes the full lineage — the
-    * unavoidable cost of having refused the broadcast. Persisting the
-    * probed frame also closes the plan-time-probe vs execution-time-
-    * join TOCTOU for non-deterministic lineages: the joined rows are
-    * the counted rows.
-    *
-    * LIFECYCLE (round-13 fix, round-14 consumption tracking): each
-    * hinted call used to leave its persisted probe cached for the life
-    * of the session — bounded per call but unbounded per SESSION
-    * (cdcMerge/SCD2 call this per invocation; a long-lived service
-    * accumulates MEMORY_AND_DISK blocks with no release). Hinted
-    * probes are registered in [[ProbeRegistry]], which evicts beyond
-    * [[ProbeRegistry.Cap]] live probes — but ONLY probes that have
-    * been CONSUMED (observed inside a completed query, via a
-    * QueryExecutionListener). The r13 FIFO evicted at hint time, so
-    * >Cap hinted-but-not-yet-executed frames in one plan could
-    * unpersist a probe before its join ran; for a non-deterministic
-    * lineage the recomputed `limit(maxRows+1)` frame could then
-    * silently truncate — reopening the exact TOCTOU the persist
-    * exists to close. Unconsumed probes are never silently dropped:
-    * past [[ProbeRegistry.HardCap]] the oldest is evicted with a loud
-    * stderr warning naming the recompute risk (unbounded cache growth
-    * in a long-lived service is also an incident). [[releaseProbes]]
-    * drops everything eagerly (end-of-job hook). */
-  def broadcastIfUnder(df: DataFrame, maxRows: Long = 4000000L): DataFrame = {
-    // maxRows >= Int.MaxValue would cap the probe at Int.MaxValue rows:
-    // count() == cap would "pass" the gate while the truncated frame
-    // silently dropped rows from the join. No sane broadcast is 2^31
-    // rows, so refuse the parameter instead of special-casing it.
-    require(maxRows < Int.MaxValue.toLong,
-      s"broadcastIfUnder: maxRows=$maxRows must be < Int.MaxValue - the " +
-        "limit probe is capped at Int.MaxValue rows and a larger bound " +
-        "could silently truncate the broadcast side.")
-    val probed = df.limit((maxRows + 1L).toInt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (ProbeRegistry.gateCount(probed) <= maxRows) {
-      ProbeRegistry.register(probed); broadcast(probed)
-    } else { probed.unpersist(false); df }
-  }
-
-  /** Registry of live persisted probe/guard frames: callers of
-    * [[broadcastIfUnder]] (and [[SketchOps.overlapMatrix]]'s guard
-    * persist) register here so a long session holds a bounded number
-    * of cached frames instead of one per historical call.
-    *
-    * CONSUMPTION-AWARE EVICTION (round-14 advice fix): a probe frame
-    * is persisted precisely so the rows the gate COUNTED are the rows
-    * the join CONSUMES (the non-deterministic-lineage TOCTOU). A
-    * session-level QueryExecutionListener marks a probe consumed the
-    * first time a completed query's analyzed plan contains the
-    * probe's plan as a subtree — the probe's own gate count is
-    * excluded by tagging its aggregate output [[GateTag]]. Eviction
-    * beyond [[Cap]] removes the oldest CONSUMED probe only (once
-    * consumed, an evicted probe's recompute can no longer change any
-    * result the caller already holds... the residual exposure — a
-    * caller re-running the SAME returned frame after eviction — is
-    * Spark's ordinary recompute contract and was never covered);
-    * unconsumed probes are kept even above Cap, with a [[HardCap]]
-    * forced-eviction backstop that WARNS loudly, because a plan
-    * holding >HardCap unconsumed persisted probes is itself a leak.
-    * Thread-safe; eviction unpersists non-blocking. */
-  private[graft] object ProbeRegistry {
-    val Cap = 16
-    val HardCap = 64
-    /** Output name tagging a probe's own gate count so the listener
-      * never mistakes the gate for a consumer. */
-    val GateTag = "__graft_probe_gate"
-    private final class Entry(
-        val df: Dataset[_],
-        val plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) {
-      @volatile var consumed = false
-    }
-    private val live = new java.util.ArrayDeque[Entry]()
-    private val hooked = new java.util.WeakHashMap[SparkSession, AnyRef]()
-
-    /** Count a probe frame through a GateTag-named aggregate: rows
-      * reach the caller like `count()`, but the listener can tell this
-      * gate apart from a real consumer of the probe's lineage. */
-    def gateCount(df: Dataset[_]): Long =
-      df.groupBy().agg(count(lit(1)).as(GateTag)).collect()(0).getLong(0)
-
-    def register(df: Dataset[_]): Unit = {
-      ensureListener(df.sparkSession)
-      val e = new Entry(df, df.queryExecution.analyzed)
-      val (evicted, after) = live.synchronized {
-        live.addLast(e)
-        (evictEligibleLocked(), live.size)
-      }
-      evicted.foreach(_.df.unpersist(false))
-      val forced = evicted.count(!_.consumed)
-      if (after > Cap || forced > 0)
-        System.err.println(s"[graft] ProbeRegistry holds $after live " +
-          s"probe frames (Cap=$Cap) because the oldest are not yet " +
-          "consumed - they will be evicted on first consumption" +
-          (if (forced > 0) s"; HardCap=$HardCap exceeded, force-evicted " +
-            s"$forced UNCONSUMED probe(s) (a later consumer recomputes " +
-            "lineage and may see different rows on non-deterministic " +
-            "input)"
-          else ""))
-    }
-
-    /** Evict, while size > Cap, oldest consumed entries; then, while
-      * size > HardCap, oldest entries regardless. Call under `live`
-      * lock; returns what to unpersist (outside the lock). */
-    private def evictEligibleLocked(): List[Entry] = {
-      val out = collection.mutable.ListBuffer.empty[Entry]
-      var removed = true
-      while (live.size > Cap && removed) {
-        removed = false
-        val it = live.iterator()
-        while (it.hasNext && !removed) {
-          val e = it.next()
-          if (e.consumed) { it.remove(); out += e; removed = true }
-        }
-      }
-      while (live.size > HardCap) out += live.pollFirst()
-      out.toList
-    }
-
-    private def ensureListener(spark: SparkSession): Unit =
-      hooked.synchronized {
-        if (!hooked.containsKey(spark)) {
-          spark.listenerManager.register(
-            new org.apache.spark.sql.util.QueryExecutionListener {
-              override def onSuccess(funcName: String,
-                  qe: org.apache.spark.sql.execution.QueryExecution,
-                  durationNs: Long): Unit = markConsumed(qe)
-              override def onFailure(funcName: String,
-                  qe: org.apache.spark.sql.execution.QueryExecution,
-                  exception: Exception): Unit = ()
-            })
-          hooked.put(spark, java.lang.Boolean.TRUE)
-        }
-      }
-
-    /** Listener body: any completed query whose analyzed plan contains
-      * a live probe's plan marks that probe consumed (gate counts are
-      * excluded by [[GateTag]]); newly-eligible evictions then restore
-      * the Cap. Defensive: a listener must never throw. */
-    private def markConsumed(
-        qe: org.apache.spark.sql.execution.QueryExecution): Unit = try {
-      val out = qe.analyzed.output
-      if (out.length == 1 && out.head.name == GateTag) return
-      val pending = live.synchronized {
-        val xs = new java.util.ArrayList[Entry]()
-        live.forEach(e => if (!e.consumed) xs.add(e))
-        xs
-      }
-      if (pending.isEmpty) return
-      var any = false
-      pending.forEach { e =>
-        if (qe.analyzed.exists(p => p.sameResult(e.plan))) {
-          e.consumed = true; any = true
-        }
-      }
-      if (any) {
-        val evicted = live.synchronized(evictEligibleLocked())
-        evicted.foreach(_.df.unpersist(false))
-      }
-    } catch { case _: Throwable => () }
-
-    /** Number of probe frames currently held (spec hook). */
-    def size: Int = live.synchronized(live.size)
-    /** Number of held frames already marked consumed (spec hook). */
-    def consumedCount: Int = {
-      var n = 0
-      live.synchronized(live.forEach(e => if (e.consumed) n += 1))
-      n
-    }
-    /** Eagerly unpersist every registered probe frame. */
-    def clear(): Unit = {
-      val all = live.synchronized {
-        val xs = new java.util.ArrayList[Entry](live)
-        live.clear(); xs
-      }
-      all.forEach(_.df.unpersist(false))
-    }
-  }
-
-  /** Drop every probe frame [[broadcastIfUnder]]/guards have cached —
-    * the explicit end-of-job cleanup hook for long-lived sessions. */
-  def releaseProbes(): Unit = ProbeRegistry.clear()
 
   /** Money-sum with deterministic, engine-independent result: cast each
     * value to DECIMAL(18,2) (cents), sum exactly, cast back to double.
@@ -1018,12 +811,10 @@ object Relational {
       .agg(min("hb").as("lo"), max("hb").as("hi"))
       .withColumn("clamped_lo",
         greatest(col("lo"), col("hi") - lit(maxGridHours.toLong) + 1))
-    ensureClampListener(eventsDf.sparkSession)
-    val observed = spans.observe(gridClampMetricName(),
+    val observed = Observations.observe(spans, Observations.GridClamp,
       coalesce(sum(when(col("clamped_lo") > col("lo"), 1L)
-        .otherwise(0L)), lit(0L)).as("clamped_users"),
-      coalesce(sum(col("clamped_lo") - col("lo")), lit(0L))
-        .as("dropped_hours"))
+        .otherwise(0L)), lit(0L)),
+      coalesce(sum(col("clamped_lo") - col("lo")), lit(0L)))
     val grid = observed.select(col("user_id"),
       explode(sequence(col("clamped_lo"), col("hi"))).as("hb"))
       .join(hourly, Seq("user_id", "hb"), "left")
@@ -1047,54 +838,4 @@ object Relational {
       .filter(col("in_grid"))
       .drop("in_grid")
   }
-
-  private val gridClampSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def gridClampMetricName(): String =
-    s"graft_grid_clamp_${gridClampSeq.incrementAndGet()}"
-
-  /** Last clamp counts per observation name — (clamped_users,
-    * dropped_hours); test hook + ops surface, bounded like
-    * [[Dedup.lastPrune]]. */
-  private[operators] val lastGridClamp: java.util.Map[String, (Long, Long)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long)](16, 0.75f, false) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long)]): Boolean =
-          size() > 256
-      })
-
-  private val clampListenerInstalled =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Install (once per session) the listener surfacing grid clamps
-    * inline — same shape as [[Dedup.ensurePruneListener]]. */
-  private def ensureClampListener(spark: SparkSession): Unit =
-    if (clampListenerInstalled.add(spark)) {
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith("graft_grid_clamp")) {
-                val users = row.getAs[Long]("clamped_users")
-                val hours = row.getAs[Long]("dropped_hours")
-                lastGridClamp.put(name, (users, hours))
-                if (users > 0)
-                  log.warn(s"$name: maxGridHours clamped $users user(s)" +
-                    s", dropping $hours grid hour(s) of pre-window " +
-                    "fill — their LOCF series starts at the window's " +
-                    "left edge (older observations still seed the carry)")
-              }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-    }
 }

@@ -174,7 +174,7 @@ object Similarity {
     * Buckets holding more than `maxBucket` vectors are dropped from the
     * candidate stream BEFORE the join; the prune is surfaced inline via
     * the shared `graft_bucket_prune_*` observation + WARN listener
-    * ([[Dedup.ensurePruneListener]]) and auditable after the fact with
+    * ([[Observations]]) and auditable after the fact with
     * [[embedHotBuckets]]. `maxBucket <= 0` disables the cap (and the
     * bound).
     *
@@ -188,16 +188,13 @@ object Similarity {
   private def capBuckets(bucketed: DataFrame, maxBucket: Int): DataFrame =
     if (maxBucket <= 0) bucketed
     else {
-      val spark = bucketed.sparkSession
       val sizes = bucketed.groupBy("bucket")
         .agg(count(lit(1)).as("bucket_n"))
       val over = col("bucket_n") > maxBucket
-      Dedup.ensurePruneListener(spark)
-      val keep = sizes.observe(Dedup.pruneMetricName(),
-          coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L))
-            .as("pruned_buckets"),
+      val keep = Observations.observe(sizes, Observations.BucketPrune,
+          coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L)),
           coalesce(sum(when(over, col("bucket_n")).otherwise(0L)),
-            lit(0L)).as("pruned_docs"))
+            lit(0L)))
         .filter(col("bucket_n") <= maxBucket)
       bucketed.join(broadcast(keep.select("bucket")), Seq("bucket"))
     }

@@ -67,22 +67,16 @@ object SketchOps {
     * key) just to learn the number is too big. The map-side pass over
     * the raw data still runs (any aggregation pays it) but the
     * failure stays early-terminating, as the r12-pre-fix probe was.
-    * The persisted table is registered in [[Relational.ProbeRegistry]]
-    * so a long session holds a bounded number of guard caches instead
-    * of one per historical call ([[Relational.releaseProbes]] drops
-    * them eagerly). Pairs with no estimated overlap are dropped. */
+    * Spark's CacheManager owns the persisted table: a repeated call on
+    * the same plan reuses its one cache entry, and
+    * `spark.catalog.clearCache()` releases it. Pairs with no estimated
+    * overlap are dropped. */
   def overlapMatrix(df: DataFrame, groupCol: String, value: Column,
       k: Int, outA: String = "group_a", outB: String = "group_b",
       maxGroups: Int = 10000): DataFrame = {
     val sk = sketchTable(df, groupCol, value, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // both counts below go through gateCount (round-14): a plain
-    // count() would be seen by the ProbeRegistry listener as a
-    // CONSUMER of the sketch table, marking it eviction-eligible
-    // before the caller's matrix join ever runs — reopening the r11
-    // double-scan regression the persist exists to close.
-    if (Relational.ProbeRegistry.gateCount(sk.limit(maxGroups + 1))
-        > maxGroups) {
+    if (sk.limit(maxGroups + 1).count() > maxGroups) {
       sk.unpersist(false)
       throw new IllegalArgumentException(
         s"overlapMatrix: groupCol '$groupCol' has more than $maxGroups " +
@@ -94,8 +88,7 @@ object SketchOps {
     // above already touched every partition (it ran out of rows), but
     // an exhausted CollectLimit is not CONTRACTUALLY a full cache —
     // this count is, and it reads partitions the probe cached for free.
-    Relational.ProbeRegistry.gateCount(sk)
-    Relational.ProbeRegistry.register(sk)
+    sk.count()
     val a = sk.select(col(groupCol).as(outA), col("sketch").as("sk_a"))
     val b = sk.select(col(groupCol).as(outB), col("sketch").as("sk_b"))
     a.join(b, col(outA) < col(outB))
@@ -602,7 +595,9 @@ object SketchOps {
     * CM-rare set is a SUBSET of the true rare set, per document
     * (`subset_ok`). The exact `true_rare_n` here is computed with a
     * broadcast frequency join for the contract only; production uses
-    * just the map-side probe column. */
+    * just the map-side probe column. Spark's CacheManager owns the
+    * persisted frequency table: a repeated call on the same plan reuses
+    * its one cache entry, and `spark.catalog.clearCache()` releases it. */
   def cmRareRatio(spark: SparkSession, dir: String,
       threshold: Long = 2000L, depth: Int = 4,
       width: Int = 256): DataFrame = {
@@ -615,7 +610,6 @@ object SketchOps {
     // per-row aggregator (r16; weighted state bit-identical by the
     // additivity law, spec-pinned)
     val freq = w.groupBy("word").agg(count(lit(1)).as("f")).persist()
-    Relational.ProbeRegistry.register(freq)
     val state: Array[Long] = freq
       .agg(CountMinSketch.sketchStateWeighted(col("word"), col("f"),
         depth, width).as("st"))

@@ -53,7 +53,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    // keep the session alive for other suites in the same forked JVM
+    // keep the session alive for other suites in the same forked JVM,
+    // but release the frames this suite persisted on it
+    spark.catalog.clearCache()
     super.afterAll()
   }
 }

@@ -169,9 +169,9 @@ class DedupSpec extends SparkSpec {
     // ...and reaches the async listener hook (the logged-warning path)
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     val metricName = pruneMetrics.keys.head
-    while (!Dedup.lastPrune.containsKey(metricName) &&
+    while (!Observations.last.containsKey(metricName) &&
         System.nanoTime() < deadline) Thread.sleep(50)
-    assert(Dedup.lastPrune.get(metricName) === ((16L, 1600L)))
+    assert(Observations.last.get(metricName) === ((16L, 1600L)))
 
     // same contract for simhash banding
     val shCapped = Dedup.simHashPairs(spark, tmp, maxBucket = 16)
@@ -198,14 +198,14 @@ class DedupSpec extends SparkSpec {
   test("prune-metric registry is bounded: oldest observations evicted " +
       "past 256 entries (long-lived driver guard)") {
     (1 to 300).foreach(i =>
-      Dedup.lastPrune.put(s"graft_bucket_prune_synthetic_$i", (1L, 1L)))
-    assert(Dedup.lastPrune.size() <= 256)
+      Observations.last.put(s"graft_bucket_prune_synthetic_$i", (1L, 1L)))
+    assert(Observations.last.size() <= 256)
     // insertion-order LRU: the newest survives, the first synthetics
     // (44+ evictions even from an empty registry) are gone
-    assert(Dedup.lastPrune.containsKey("graft_bucket_prune_synthetic_300"))
-    assert(!Dedup.lastPrune.containsKey("graft_bucket_prune_synthetic_1"))
+    assert(Observations.last.containsKey("graft_bucket_prune_synthetic_300"))
+    assert(!Observations.last.containsKey("graft_bucket_prune_synthetic_1"))
     (1 to 300).foreach(i =>
-      Dedup.lastPrune.remove(s"graft_bucket_prune_synthetic_$i"))
+      Observations.last.remove(s"graft_bucket_prune_synthetic_$i"))
   }
 
   test("charShingleArray: 5-grams, short-text collapse, jaccard semantics") {
@@ -1274,6 +1274,15 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getDouble(3)))
     assert(again.toSet === out.toSet, "must be deterministic")
+  }
+
+  test("a warm q_contrastive_pairs call runs no job while it builds " +
+      "its plan") {
+    val entry = graft.SparkEntry.queries("q_contrastive_pairs")
+    entry(spark, sfDir).collect() // builds the pair artifact
+    val (df, jobs) = jobsDuring(entry(spark, sfDir))
+    assert(jobs === 0, "no pre-flight size probe: AQE picks the join")
+    assert(df.count() > 0)
   }
 
   test("contrastivePairs threshold < 0.5 flows into the pair build: " +

@@ -530,6 +530,74 @@ class PipelineSpec extends SparkSpec {
       s"the snapshot side must not shuffle\n$plan")
   }
 
+  /** Join nodes of `df`'s final AQE plan, query stages included (run
+    * `df` first). */
+  private def finalJoins(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).collect {
+      case j: BroadcastHashJoinExec => ("broadcast", j.joinType.toString)
+      case j: SortMergeJoinExec => ("shuffle", j.joinType.toString)
+      case j: ShuffledHashJoinExec => ("shuffle", j.joinType.toString)
+    }
+  }
+
+  test("applyChanges: with no static broadcast, AQE broadcasts a small " +
+      "batch and keeps a shuffle join for a batch above the adaptive " +
+      "threshold, same rows either way") {
+    import spark.implicits._
+    val static = "spark.sql.autoBroadcastJoinThreshold"
+    val adaptive = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val priors = Seq(static, adaptive).map(k => k -> spark.conf.getOption(k))
+    val snap = (1L to 3000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+    // keys 3, 6, 9, ...: even i deletes, odd i revises
+    def changes(n: Int) = (1 to n).map(i =>
+      (if (i % 2 == 0) "D" else "U", 3L * i, s"u$i"))
+      .toDF("op", "doc_id", "text")
+    def expected(n: Int) = {
+      val touched = (1 to n).map(i => 3L * i).toSet
+      (1L to 3000L).filterNot(touched).map(i => i -> s"t$i").toMap ++
+        (1 to n).filter(_ % 2 == 1).map(i => 3L * i -> s"u$i")
+    }
+    def run(n: Int) = {
+      val out = Pipeline.applyChanges(snap, changes(n))
+      val got = out.collect().map(r => r.getLong(0) -> r.getString(1))
+      assert(got.length === expected(n).size)
+      assert(got.toMap === expected(n))
+      finalJoins(out)
+    }
+    try {
+      spark.conf.set(static, "-1")
+      // Spark's default threshold, stated because the adaptive one
+      // falls back to the static -1 when unset
+      spark.conf.set(adaptive, "10MB")
+      val small = run(10)
+      assert(small === Seq(("broadcast", "LeftAnti")),
+        s"a small batch must end as a broadcast anti-join: $small")
+      spark.conf.set(adaptive, "1KB")
+      val big = run(800)
+      assert(big === Seq(("shuffle", "LeftAnti")),
+        s"a batch above the threshold must stay a shuffle join: $big")
+    } finally priors.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("cdcMergeDemo runs no job while it builds its plan") {
+    graft.operators.Tables.documents(spark, sfDir) // warm-up read
+    val (_, jobs) = jobsDuring(Pipeline.cdcMergeDemo(spark, sfDir))
+    assert(jobs === 0, "no pre-flight size probe: AQE picks the join")
+  }
+
   test("scd2: unchanged/changed/removed/added fan into the right " +
       "version intervals") {
     import spark.implicits._

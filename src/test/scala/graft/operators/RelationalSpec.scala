@@ -303,7 +303,7 @@ class RelationalSpec extends SparkSpec {
     assert(got.filter(_._1._1 == 2L) === un, "in-contract user changed")
     // the clamp surfaced through the (async) observe-metric listener
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    def clamps = Relational.lastGridClamp.values()
+    def clamps = Observations.last.values()
       .toArray(Array.empty[(Long, Long)])
     while (!clamps.contains((1L, 99901L)) &&
       System.nanoTime() < deadline) Thread.sleep(50)
@@ -359,161 +359,27 @@ class RelationalSpec extends SparkSpec {
       s"l_shipdate filter must push to the parquet scan\n$q3")
   }
 
-  test("broadcastIfUnder: hints below the bound, withholds the hint " +
-      "above it (falls back to a shuffle join), same rows either way") {
+  test("a plain join runs its build-side lineage exactly ONCE") {
     import spark.implicits._
-    // kill every OTHER broadcast source so the hint is the only one
-    val priors = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    priors.foreach { case (k, _) => spark.conf.set(k, "-1") }
-    try {
-      val fact = (1L to 2000L).map(i => (i % 50 + 1, i)).toDF("k", "v")
-      def run(dimRows: Long) = {
-        val dim = (1L to dimRows).toDF("k")
-        // .withColumn mirrors the scd2Accrete shape: the hint must
-        // survive a projection on top of the gated frame
-        val j = fact.join(
-          Relational.broadcastIfUnder(dim, maxRows = 100)
-            .withColumn("t", lit(true)), Seq("k"))
-        val rows = j.count()
-        (rows, j.queryExecution.executedPlan.toString)
-      }
-      val (smallRows, smallPlan) = run(10)
-      assert(smallPlan.contains("BroadcastHashJoin"),
-        s"below-bound side must broadcast:\n$smallPlan")
-      val (bigRows, bigPlan) = run(500)
-      assert(!bigPlan.contains("BroadcastHashJoin"),
-        s"above-bound side must fall back to a shuffle join:\n$bigPlan")
-      assert(smallRows === 2000L / 50 * 10 && bigRows === 2000L,
-        "gating must not change join results")
-    } finally priors.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  test("broadcastIfUnder: the gated lineage is computed exactly ONCE per " +
-      "call — the probe's work is persisted and the join consumes it " +
-      "(r11 verdict: the unpersisted probe doubled a corpus pass)") {
-    import spark.implicits._
-    val acc = spark.sparkContext.longAccumulator("biu_lineage_rows")
+    val acc = spark.sparkContext.longAccumulator("join_build_lineage_rows")
     val bump = udf { (k: Long) => acc.add(1); k }.asNondeterministic()
-    // the gated side carries an accumulator-bumping stage standing in
+    // the build side carries an accumulator-bumping stage standing in
     // for an expensive lineage (corpusDiff / touched-key distinct)
     val dim = (1L to 20L).toDF("k0").select(bump(col("k0")).as("k"))
     val fact = (1L to 200L).map(i => (i % 20 + 1, i)).toDF("k", "v")
+    // no static broadcast: the join is planned as a shuffle join and
+    // AQE alone turns it into a broadcast at run time
+    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = fact.join(Relational.broadcastIfUnder(dim, maxRows = 100),
-        Seq("k"))
+      val joined = fact.join(dim, Seq("k"))
       assert(joined.count() === 200L)
       assert(acc.value === 20L,
-        s"gated lineage must run exactly once (probe cached, join reuses " +
-          s"the cache) - ran ${acc.value / 20.0} times")
-    } finally spark.catalog.clearCache()
-  }
-
-  /** Poll until `cond` holds — consumption marking rides the async
-    * QueryExecutionListener bus, so registry state is eventually
-    * consistent with completed actions, never instantly. */
-  private def awaitProbes(cond: => Boolean, ms: Long = 20000): Boolean = {
-    val deadline = System.currentTimeMillis() + ms
-    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    cond
-  }
-
-  test("broadcastIfUnder: persisted probes are BOUNDED per session — " +
-      "N consumed calls settle at <= ProbeRegistry.Cap cached frames; " +
-      "releaseProbes() drops them all (r12 verdict task #5)") {
-    import spark.implicits._
-    Relational.releaseProbes()
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
-    val fact = (1L to 100L).map(i => (i % 10 + 1, i)).toDF("k", "v")
-    val calls = Relational.ProbeRegistry.Cap + 24
-    try {
-      for (i <- 1 to calls) {
-        // distinct lineage per call (the cdcMerge/SCD2 shape: every
-        // invocation gates a NEW diff frame, nothing is plan-reusable)
-        val dim = (1L to 10L).map(_ + i * 1000L).map(k => k % 10 + 1)
-          .toDF("k").distinct()
-        fact.join(Relational.broadcastIfUnder(dim, maxRows = 100), Seq("k"))
-          .count()
-      }
-      // every probe above was consumed by its join's count(); once the
-      // listener processes those events the registry trims to Cap
-      assert(awaitProbes(
-        Relational.ProbeRegistry.size <= Relational.ProbeRegistry.Cap),
-        s"registry must settle at <= Cap live probes once consumed " +
-          s"(held ${Relational.ProbeRegistry.size})")
-      val grown = sc.getPersistentRDDs.size - before
-      assert(grown <= Relational.ProbeRegistry.Cap,
-        s"$calls calls must not grow the cached-RDD set beyond the cap " +
-          s"(grew $grown) - pre-r13 this leaked one persist per call")
-      Relational.releaseProbes()
-      assert(Relational.ProbeRegistry.size === 0)
-      assert(sc.getPersistentRDDs.size <= before,
-        "releaseProbes must drop every registered probe cache")
-    } finally { Relational.releaseProbes(); spark.catalog.clearCache() }
-  }
-
-  test("ProbeRegistry: hinted-but-UNCONSUMED probes are never evicted " +
-      "at hint time — consumption, not registration order, makes a " +
-      "probe eviction-eligible, and the probe's own gate count does " +
-      "not count as consumption (r13 advice, TOCTOU reopen)") {
-    import spark.implicits._
-    Relational.releaseProbes()
-    val fact = (1L to 100L).map(i => (i % 10 + 1, i)).toDF("k", "v")
-    val n = Relational.ProbeRegistry.Cap + 4
-    try {
-      val joins = (1 to n).map { i =>
-        val dim = (1L to 10L).map(_ + i * 1000L).map(k => k % 10 + 1)
-          .toDF("k").distinct()
-        fact.join(Relational.broadcastIfUnder(dim, maxRows = 100), Seq("k"))
-      }
-      // nothing consumed yet: the r13 FIFO would have evicted 4 probes
-      // here, reopening the recompute TOCTOU for their pending joins
-      Thread.sleep(500) // let any stray listener events drain
-      assert(Relational.ProbeRegistry.size === n,
-        s"all $n unconsumed probes must stay cached " +
-          s"(held ${Relational.ProbeRegistry.size})")
-      assert(Relational.ProbeRegistry.consumedCount === 0,
-        "the gate count must not mark its own probe consumed")
-      // consume them all — every pending join still sees its cached probe
-      joins.foreach(j => assert(j.count() === 100L))
-      assert(awaitProbes(
-        Relational.ProbeRegistry.size <= Relational.ProbeRegistry.Cap),
-        s"after consumption the registry must trim to Cap " +
-          s"(held ${Relational.ProbeRegistry.size})")
-    } finally { Relational.releaseProbes(); spark.catalog.clearCache() }
-  }
-
-  test("ProbeRegistry: HardCap backstop force-evicts (loudly) rather " +
-      "than letting unconsumed probes grow a long session unboundedly") {
-    import spark.implicits._
-    Relational.releaseProbes()
-    val fact = (1L to 100L).map(i => (i % 10 + 1, i)).toDF("k", "v")
-    val n = Relational.ProbeRegistry.HardCap + 3
-    try {
-      for (i <- 1 to n) {
-        val dim = (1L to 10L).map(_ + i * 1000L).map(k => k % 10 + 1)
-          .toDF("k").distinct()
-        Relational.broadcastIfUnder(dim, maxRows = 100)
-      }
-      assert(Relational.ProbeRegistry.size <=
-        Relational.ProbeRegistry.HardCap,
-        s"registry must never exceed HardCap " +
-          s"(held ${Relational.ProbeRegistry.size})")
-    } finally { Relational.releaseProbes(); spark.catalog.clearCache() }
-  }
-
-  test("broadcastIfUnder: refuses maxRows >= Int.MaxValue — the probe " +
-      "cap would otherwise silently truncate the broadcast side") {
-    import spark.implicits._
-    val dim = (1L to 5L).toDF("k")
-    val e = intercept[IllegalArgumentException] {
-      Relational.broadcastIfUnder(dim, maxRows = Int.MaxValue.toLong)
+        s"build-side lineage must run exactly once - ran " +
+          s"${acc.value / 20.0} times")
+    } finally prior match {
+      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    assert(e.getMessage.contains("Int.MaxValue"), e.getMessage)
   }
 }

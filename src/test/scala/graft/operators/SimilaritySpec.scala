@@ -180,9 +180,9 @@ class SimilaritySpec extends SparkSpec {
     // ...reaches the shared async listener (the logged-warning path)...
     val name = metrics.keys.head
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (!Dedup.lastPrune.containsKey(name) &&
+    while (!Observations.last.containsKey(name) &&
         System.nanoTime() < deadline) Thread.sleep(50)
-    assert(Dedup.lastPrune.get(name) === ((1L, 50L)))
+    assert(Observations.last.get(name) === ((1L, 50L)))
     // ...and is auditable after the fact
     val hot = Similarity.embedHotBuckets(spark, tmp, maxBucket = 10).collect()
     assert(hot.length === 1 && hot(0).getLong(1) === 50L)
