@@ -84,11 +84,6 @@ object SketchOps {
             maxGroups / 2} rows. Pre-bucket the groups or raise " +
           "maxGroups deliberately.")
     }
-    // Exhaustive materialization for the pass path: the limit probe
-    // above already touched every partition (it ran out of rows), but
-    // an exhausted CollectLimit is not CONTRACTUALLY a full cache —
-    // this count is, and it reads partitions the probe cached for free.
-    sk.count()
     val a = sk.select(col(groupCol).as(outA), col("sketch").as("sk_a"))
     val b = sk.select(col(groupCol).as(outB), col("sketch").as("sk_b"))
     a.join(b, col(outA) < col(outB))

@@ -259,4 +259,17 @@ class KmvSketchSpec extends SparkSpec {
           s"the cached sketch table) - scanned ${acc.value / 100.0} times")
     } finally spark.catalog.clearCache()
   }
+
+  test("overlapMatrix builds its plan with the limit guard's jobs alone: " +
+      "the guard already caches every partition of the sketch table, so " +
+      "no second count runs (a full count added 2 jobs, 6 in all)") {
+    import spark.implicits._
+    val df = (1 to 100).map(i => (s"g${i % 5}", s"v${i % 7}")).toDF("g", "v")
+    try {
+      val (m, jobs) = jobsDuring(graft.operators.SketchOps
+        .overlapMatrix(df, "g", col("v"), k = 1024, maxGroups = 10))
+      assert(jobs === 4, s"building the plan ran $jobs jobs")
+      assert(m.collect().nonEmpty)
+    } finally spark.catalog.clearCache()
+  }
 }
