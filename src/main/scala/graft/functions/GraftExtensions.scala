@@ -37,26 +37,17 @@ object GraftExtensions {
   type FunctionDef = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
   type TableFunctionDef = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)
 
-  private def litInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal integer")
-    e.eval(null) match {
-      case v: Number => v.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$what must be a literal integer, got $other")
-    }
-  }
-
   /** The native scalar functions, each with the catalog docs that
     * mirror the reference's per-function description/example metadata
     * (function_builder.hpp:10-41): DESCRIBE FUNCTION [EXTENDED] shows
-    * them. */
+    * them. Arguments bind through [[graft.api.Binder]], so a literal
+    * parameter out of range or not integral fails at analysis. */
   private[graft] lazy val functions: Seq[FunctionDef] = {
-    def fn(name: String, cls: Class[_], usage: String, examples: String)(
-        builder: Seq[Expression] => Expression): FunctionDef =
-      (FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, null, name, usage,
-          s"\n    Examples:\n$examples\n  "),
-        builder)
+    import graft.api.Binder.{bind, column, info, int, Args, Param}
+    def fn(name: String, cls: Class[_], usage: String, examples: String,
+        params: Param*)(build: Args => Expression): FunctionDef =
+      (FunctionIdentifier(name), info(cls.getName, name, usage, examples),
+        children => build(bind(name, params, children)))
     Seq(
       fn("SUDAN_GeoCode", classOf[GeoCodeExpression],
         "SUDAN_GeoCode(name) - Returns the ISO 3166-2:SD code for a Sudanese " +
@@ -65,60 +56,48 @@ object GraftExtensions {
         """      > SELECT SUDAN_GeoCode('Khartoum');
        SD-KH
       > SELECT SUDAN_GeoCode('الخرطوم');
-       SD-KH""") { children =>
-        require(children.length == 1, "SUDAN_GeoCode takes exactly one argument")
-        GeoCodeExpression(children.head)
-      },
+       SD-KH""", column("name"))(a => GeoCodeExpression(a.expr("name"))),
       fn("simhash", classOf[SimHashExpression],
         "simhash(text) - Returns the 64-bit SimHash of the text's " +
           "whitespace tokens (near-duplicate signature; NULL yields 0).",
         """      > SELECT simhash('the quick brown fox');
-       [64-bit signature]""") { children =>
-        require(children.length == 1, "simhash takes exactly one argument")
-        SimHashExpression(children.head)
-      },
+       [64-bit signature]""", column("text"))(
+        a => SimHashExpression(a.expr("text"))),
       fn("minhash_signature", classOf[MinHashExpression],
         "minhash_signature(text[, numHashes]) - Returns the MinHash " +
           "signature (array of numHashes bigints, default 64) of the " +
           "text's word 3-shingles; NULL yields the empty-set signature.",
         """      > SELECT minhash_signature('the quick brown fox', 16);
-       [array of 16 signature values]""") {
-        case Seq(text) => MinHashExpression(text, 64)
-        case Seq(text, n) => MinHashExpression(text, litInt(n, "numHashes"))
-        case _ => throw new IllegalArgumentException(
-          "minhash_signature takes (text[, numHashes])")
-      },
+       [array of 16 signature values]""", column("text"),
+        int("numHashes", 64).atLeast(1))(
+        a => MinHashExpression(a.expr("text"), a.int("numHashes"))),
       fn("winnow_fingerprints", classOf[WinnowExpression],
         "winnow_fingerprints(text) - Returns the sorted winnowing " +
           "fingerprint set (Schleimer et al. SIGMOD'03; k=8 char grams, " +
           "window 4) of the text; NULL or short text yields [].",
         """      > SELECT winnow_fingerprints('the quick brown fox jumps');
-       [array of rolling-hash fingerprints]""") { children =>
-        require(children.length == 1,
-          "winnow_fingerprints takes exactly one argument")
-        WinnowExpression(children.head, 8, 4)
-      },
+       [array of rolling-hash fingerprints]""", column("text"))(
+        a => WinnowExpression(a.expr("text"), 8, 4)),
+      // bit i of the bucket is plane i, so at most 64 planes fit a BIGINT
       fn("hyperplane_bucket", classOf[HyperplaneBucketExpression],
         "hyperplane_bucket(embedding[, numPlanes[, dim]]) - Returns the " +
           "random-hyperplane LSH bucket id (bit i = sign of the dot " +
           "product with deterministic plane i) of an ARRAY<FLOAT> " +
-          "embedding; defaults: 12 planes, dim 64. NULL yields NULL.",
+          "embedding; defaults: 12 planes (at most 64), dim 64. NULL " +
+          "yields NULL.",
         """      > SELECT hyperplane_bucket(embedding, 8) FROM embeddings;
-       [bucket ids in 0..255]""") {
-        case Seq(emb) => HyperplaneBucketExpression(emb, 12, 64)
-        case Seq(emb, n) =>
-          HyperplaneBucketExpression(emb, litInt(n, "numPlanes"), 64)
-        case Seq(emb, n, d) => HyperplaneBucketExpression(emb,
-          litInt(n, "numPlanes"), litInt(d, "dim"))
-        case _ => throw new IllegalArgumentException(
-          "hyperplane_bucket takes (embedding[, numPlanes[, dim]])")
-      })
+       [bucket ids in 0..255]""", column("embedding"),
+        int("numPlanes", 12).atLeast(1).atMost(64),
+        int("dim", 64).atLeast(1))(
+        a => HyperplaneBucketExpression(a.expr("embedding"),
+          a.int("numPlanes"), a.int("dim"))))
   }
 
   /** The 11 Sudan source TVFs (`SUDAN_WorldBank(...)`, `SUDAN_States()`,
     * …) and the corpus-pipeline TVFs (`corpus_clean('/dir')`, …). */
   private[graft] lazy val tableFunctions: Seq[TableFunctionDef] =
-    graft.api.SudanTableFunctions.defs ++ graft.api.CorpusTableFunctions.defs
+    (graft.api.SudanTableFunctions.rows ++ graft.api.CorpusTableFunctions.rows)
+      .map(_.definition)
 
   /** Optimizer rules, both exact: the char-bag reject ahead of raw
     * `levenshtein(a, b) <= k` predicates, and the band-join rewrite from

@@ -50,7 +50,12 @@ object KmvSketch {
     fmix64(h) & Long.MaxValue // non-negative for the fraction estimate
   }
 
+  /** The estimate (k-1)/h_k reads 0 at k = 1 for every non-empty input. */
+  private def requireK(k: Int): Unit =
+    require(k >= 2, s"KMV sketch size k must be >= 2, got $k")
+
   final class DistinctSketch(k: Int) extends Aggregator[String, State, Long] {
+    requireK(k)
     override def zero: State = State(k, TreeSet.empty)
 
     override def reduce(b: State, a: String): State = {
@@ -120,6 +125,7 @@ object KmvSketch {
     * round-half-up on a positive double). */
   def estimateExpr(state: Column, k: Int): Column = {
     import org.apache.spark.sql.functions._
+    requireK(k)
     ExprLet.bindCompound(state) { st =>
       when(size(st) < k, size(st).cast("long"))
         .otherwise(round(lit((k - 1).toDouble) /

@@ -91,41 +91,39 @@ class GeoSpec extends SparkSpec {
   }
 
   test("SQL surface: pipeline views over a corpus dir answer plain SQL") {
-    SudanExtension.registerPipeline(spark, sfDir)
     val n = spark.sql(
-      "SELECT count(*) FROM corpus_clean WHERE lang = 'en'")
+      s"SELECT count(*) FROM corpus_clean('$sfDir') WHERE lang = 'en'")
       .collect()(0).getLong(0)
     assert(n > 0, "cleaned corpus has English docs")
     val joined = spark.sql(
-      "SELECT count(*) FROM corpus_stats s JOIN corpus_quality q " +
+      s"SELECT count(*) FROM corpus_stats('$sfDir') s " +
+        s"JOIN corpus_quality('$sfDir') q " +
         "ON q.doc_id = s.doc_id WHERE s.n_words >= 30 AND q.quality > 0")
       .collect()(0).getLong(0)
     assert(joined > 0, "stats⋈quality join over the views")
-    assert(spark.sql("SELECT * FROM corpus_sources").count() > 0)
-    // round-5 views: multimodal codec outputs and per-language trim
-    // answer plain SQL too
+    assert(spark.sql(s"SELECT * FROM corpus_sources('$sfDir')").count() > 0)
+    // multimodal codec outputs and per-language trim answer plain SQL too
     val audio = spark.sql(
-      "SELECT count(*) FROM corpus_audio_meta WHERE zero_crossings > 0")
+      s"SELECT count(*) FROM corpus_audio_meta('$sfDir') WHERE zero_crossings > 0")
       .collect()(0).getLong(0)
     assert(audio > 0, "decoded audio features via SQL")
     val dupImages = spark.sql(
-      "SELECT count(*) FROM corpus_image_neardup WHERE hamming = 0")
+      s"SELECT count(*) FROM corpus_image_neardup('$sfDir') WHERE hamming = 0")
       .collect()(0).getLong(0)
     assert(dupImages > 0, "planted identical images via SQL")
-    assert(spark.sql("SELECT count(*) FROM corpus_length_trim_lang")
+    assert(spark.sql(s"SELECT count(*) FROM corpus_length_trim_lang('$sfDir')")
       .collect()(0).getLong(0) > 0)
     assert(spark.sql(
-      "SELECT count(DISTINCT shard) FROM corpus_packing")
+      s"SELECT count(DISTINCT shard) FROM corpus_packing('$sfDir')")
       .collect()(0).getLong(0) > 1, "sharded packing via SQL")
   }
 
   test("SQL surface: graph + ANN views answer plain SQL and agree with " +
       "the Scala API") {
-    SudanExtension.registerAnalytics(spark, sfDir)
     // PageRank over the k-NN graph: ranks positive, top node matches
     // the Scala call
     val topSql = spark.sql(
-      "SELECT node FROM corpus_graph_pagerank " +
+      s"SELECT node FROM corpus_pagerank('$sfDir') " +
         "ORDER BY pr DESC, node ASC LIMIT 1").collect()(0).getLong(0)
     val topScala = graft.operators.GraphOps.knnPageRank(spark, sfDir)
       .orderBy(org.apache.spark.sql.functions.col("pr").desc,
@@ -134,20 +132,20 @@ class GeoSpec extends SparkSpec {
     assert(topSql === topScala)
     // seeded rank keeps its mass near the seed cohort
     val seeded = spark.sql(
-      "SELECT count(*) FROM corpus_graph_ppr WHERE is_seed AND pr > 0")
+      s"SELECT count(*) FROM corpus_graph_ppr('$sfDir') WHERE is_seed AND pr > 0")
       .collect()(0).getLong(0)
     assert(seeded > 0, "seed nodes carry rank via SQL")
     assert(spark.sql(
-      "SELECT count(*) FROM corpus_graph_triangles WHERE n_tri > 0")
+      s"SELECT count(*) FROM corpus_graph_triangles('$sfDir') WHERE n_tri > 0")
       .collect()(0).getLong(0) > 0, "triangle counts via SQL")
-    // the ANN probe view serves the two-stage IVF-PQ top-k
+    // the ANN probe serves the two-stage IVF-PQ top-k for query id 0
     val probe = spark.sql(
-      "SELECT vec_id, cosine FROM corpus_ann_probe").collect()
+      s"SELECT vec_id, cosine FROM corpus_ann_probe('$sfDir', 0)").collect()
     assert(probe.length === 10)
     val cos = probe.map(_.getDouble(1)).toSeq
     assert(cos === cos.sorted.reverse, "re-ranked order via SQL")
     assert(spark.sql(
-      "SELECT count(DISTINCT cluster_id) FROM corpus_embed_clusters")
+      s"SELECT count(DISTINCT cluster_id) FROM corpus_embed_clusters('$sfDir')")
       .collect()(0).getLong(0) > 0)
   }
 }

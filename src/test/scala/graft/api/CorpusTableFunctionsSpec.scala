@@ -151,7 +151,16 @@ class CorpusTableFunctionsSpec extends SparkSpec {
     assert(sqlMerge.toSet === sqlSrc.toSet)
     val e = intercept[Exception](spark.sql(
       s"SELECT * FROM corpus_sketch_sources('$sfDir', 0)"))
-    assert(e.getMessage.contains("'k' must be >= 1"), e.getMessage)
+    assert(e.getMessage.contains("'k' must be >= 2"), e.getMessage)
+    // k = 1 would estimate 0 distinct texts for every non-empty source
+    val one = intercept[Exception](spark.sql(
+      s"SELECT * FROM corpus_sketch_sources('$sfDir', 1)"))
+    assert(one.getMessage.contains("'k' must be >= 2, got 1."), one.getMessage)
+    // an integer parameter rejects a fractional literal, never truncates it
+    val frac = intercept[Exception](spark.sql(
+      s"SELECT * FROM corpus_sketch_sources('$sfDir', 1.9)"))
+    assert(frac.getMessage.contains("'k' must be an integer literal, got 1.9."),
+      frac.getMessage)
   }
 
   test("corpus_sketch_delta binds, matches Scala, and validates k") {
@@ -173,7 +182,7 @@ class CorpusTableFunctionsSpec extends SparkSpec {
     }
     val e = intercept[Exception](spark.sql(
       s"SELECT * FROM corpus_sketch_delta('$sfDir', 0)"))
-    assert(e.getMessage.contains("'k' must be >= 1"), e.getMessage)
+    assert(e.getMessage.contains("'k' must be >= 2"), e.getMessage)
   }
 
   test("corpus_quantile_drift binds, matches Scala, and validates " +
@@ -278,9 +287,13 @@ class CorpusTableFunctionsSpec extends SparkSpec {
       s"SELECT * FROM corpus_token_windows('$sfDir', 0)"))
     assert(e1.getMessage.contains("'window_tokens' must be >= 1"),
       e1.getMessage)
+    val half = intercept[Exception](spark.sql(
+      s"SELECT * FROM corpus_token_windows('$sfDir', 0.5)"))
+    assert(half.getMessage.contains(
+      "'window_tokens' must be an integer literal, got 0.5."), half.getMessage)
     val e2 = intercept[Exception](spark.sql(
       s"SELECT * FROM corpus_join_estimate('$sfDir', k => 0)"))
-    assert(e2.getMessage.contains("'k' must be >= 1"), e2.getMessage)
+    assert(e2.getMessage.contains("'k' must be >= 2"), e2.getMessage)
   }
 
   test("corpus_kanon / corpus_noisy_hist match Scala factories + binders") {
@@ -346,9 +359,50 @@ class CorpusTableFunctionsSpec extends SparkSpec {
       "SELECT * FROM corpus_ann_probe(query_id => 3)"))
     assert(missing.getMessage.contains("requires the corpus 'dir'"),
       missing.getMessage)
+    val frac = intercept[Exception](spark.sql(
+      s"SELECT * FROM corpus_ann_probe('$sfDir', 42.9)"))
+    assert(frac.getMessage.contains(
+      "'query_id' must be an integer literal, got 42.9."), frac.getMessage)
     val unknown = intercept[Exception](spark.sql(
       s"SELECT * FROM corpus_clean('$sfDir', wat => 1)"))
     assert(unknown.getMessage.contains("no parameter 'wat'"),
       unknown.getMessage)
+  }
+
+  test("each directory-only operator TVF returns its factory's rows") {
+    import graft.operators.{GraphOps, Multimodal, QualityModel, Similarity,
+      Zorder}
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+      .groupBy(identity).map { case (r, n) => r -> n.size }
+    val factories = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "corpus_split" -> (Pipeline.trainValSplit(spark, _)),
+      "corpus_sources" -> (Pipeline.sourceReport(spark, _)),
+      "corpus_dedup_clusters" -> (Dedup.minHashClusters(spark, _)),
+      "corpus_entropy" -> (TextOps.charEntropy(spark, _)),
+      "corpus_bm25" -> (TextOps.bm25(spark, _)),
+      "corpus_length_trim" -> (Pipeline.lengthTrim(spark, _)),
+      "corpus_length_trim_lang" -> (Pipeline.lengthTrimByLang(spark, _)),
+      "corpus_packing" -> (Pipeline.packSequences(spark, _)),
+      "corpus_image_meta" -> (Multimodal.imageMeta(spark, _)),
+      "corpus_image_dhash" -> (Multimodal.imageDHash(spark, _)),
+      "corpus_image_neardup" -> (Multimodal.imageNearDupPairs(spark, _)),
+      "corpus_audio_meta" -> (Multimodal.audioMeta(spark, _)),
+      "corpus_video_frames" -> (Multimodal.videoFrameStats(spark, _)),
+      "corpus_weighted_sample" -> (Pipeline.weightedSample(spark, _)),
+      "corpus_shuffle" -> (Pipeline.corpusShuffle(spark, _)),
+      "corpus_inverted_index" ->
+        (TextOps.invertedIndex(spark, _, maxDf = 5000)),
+      "corpus_zorder" -> (Zorder.docZValues(spark, _)),
+      "corpus_quality_model" -> (QualityModel.qualityClassifier(spark, _)),
+      "corpus_knn_graph" -> (Similarity.knnJoin(spark, _)),
+      "corpus_graph_triangles" -> (GraphOps.knnTriangles(spark, _)),
+      "corpus_graph_ppr" -> (GraphOps.knnSeededRank(spark, _)),
+      "corpus_embed_clusters" -> (Similarity.embedClusters(spark, _)))
+    factories.foreach { case (fn, factory) =>
+      val viaSql = rows(spark.sql(s"SELECT * FROM $fn('$sfDir')"))
+      assert(viaSql.nonEmpty, fn)
+      assert(viaSql === rows(factory(sfDir)), fn)
+    }
   }
 }

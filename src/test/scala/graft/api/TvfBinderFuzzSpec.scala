@@ -12,33 +12,14 @@ import org.scalacheck.Test.{check, Parameters, Passed, Result}
   * error contract: malformed SQL gets a named, actionable message. */
 class TvfBinderFuzzSpec extends SparkSpec {
 
-  // BOTH registries, complete: the 11 SUDAN_* source TVFs and every
-  // corpus_* pipeline TVF — the corpus family's num/numSeq binders have
-  // malformed-literal paths the source TVFs never exercise
-  private val fns = Seq("SUDAN_Providers", "SUDAN_States",
-    "SUDAN_Boundaries", "SUDAN_WB_Indicators", "SUDAN_WHO_Indicators",
-    "SUDAN_Search", "SUDAN_WorldBank", "SUDAN_WHO", "SUDAN_ILO",
-    "SUDAN_UNHCR", "SUDAN_FAO",
-    "corpus_clean", "corpus_stats", "corpus_quality", "corpus_lang_id",
-    "corpus_neardup_pairs", "corpus_dedup_keep", "corpus_keep_best",
-    "corpus_soft_dedup", "corpus_mixture_schedule", "corpus_pagerank",
-    "corpus_decontaminate", "corpus_eval_containment",
-    "corpus_dataset_card", "corpus_mixture_plan", "corpus_ann_probe",
-    "corpus_repeated_spans", "corpus_span_excise", "corpus_span_guard",
-    "corpus_setsim_pairs", "corpus_sketch_sources",
-    "corpus_sketch_snapshot_merge", "corpus_quantile_sources",
-    "corpus_priority_totals", "corpus_bloom_guard",
-    "corpus_sketch_rollup", "corpus_contrastive_pairs",
-    "corpus_range_estimate", "corpus_join_estimate", "corpus_scd2",
-    "corpus_apply_changes", "corpus_token_windows",
-    "corpus_expectations", "corpus_heavy_hitters", "corpus_sketch_delta",
-    "corpus_quantile_drift", "corpus_kanon", "corpus_noisy_hist",
-    "corpus_bpe_merges", "corpus_bpe_tokens", "corpus_unigram_vocab",
-    "corpus_unigram_tokens")
+  // every table function the session carries, read off the one list
+  // graft installs, so a new row is fuzzed as soon as it exists
+  private val fns = graft.functions.GraftExtensions.tableFunctions
+    .map(_._1.funcName)
 
   // argument-VALUE generator: literals of assorted types, arrays, and
-  // non-foldable expressions (rand()); keys both known and unknown;
-  // malformed numerics/arrays aimed at the corpus binders' num/numSeq
+  // non-foldable expressions (rand()); malformed numerics and arrays
+  // aimed at the integer, numeric and list coercions
   private val valueGen: Gen[String] = Gen.oneOf(
     Gen.oneOf("'SDN'", "''", "'x'", s"'$sfDir'"),
     Gen.chooseNum(-5, 50).map(_.toString),
@@ -46,10 +27,10 @@ class TvfBinderFuzzSpec extends SparkSpec {
     Gen.oneOf("array('SDN','EGY')", "array()", "array(0.5, 0.5)",
       "array('a')", "array('a', 1)", "array(array(1))", "array(NULL)"),
     Gen.oneOf("NULL", "rand()", "1 + 2", "CAST(NULL AS STRING)"))
-  private val keyGen: Gen[String] = Gen.oneOf("countries", "search",
-    "query", "level", "dir", "threshold", "min_words", "sources",
-    "shares", "budget", "max_epochs", "k", "query_id", "eval_max_id",
-    "n", "epochs", "t_start", "t_end", "window_tokens", "bogus", "WAT")
+  // keys: every declared parameter name plus unknown ones
+  private val keyGen: Gen[String] = Gen.oneOf(
+    (SudanTableFunctions.rows ++ CorpusTableFunctions.rows)
+      .flatMap(_.params.map(_.name)).distinct :+ "bogus" :+ "WAT")
   private val argGen: Gen[String] = Gen.oneOf(
     valueGen,
     Gen.zip(keyGen, valueGen).map { case (k, v) => s"$k => $v" })

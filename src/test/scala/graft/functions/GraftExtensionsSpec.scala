@@ -97,6 +97,30 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(bucketsSql.nonEmpty && bucketsSql === bucketsApi)
   }
 
+  test("scalar literal arguments are range-checked at analysis") {
+    def refused(sql: String, msg: String): Unit = {
+      val e = intercept[Exception](live.sql(sql))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
+      assert(chain.contains(msg), chain)
+    }
+    val emb = "array(CAST(0.5 AS FLOAT), CAST(-0.25 AS FLOAT))"
+    // plane 64 would fold onto bit 0 through 1L << i
+    refused(s"SELECT hyperplane_bucket($emb, 65)",
+      "SUDAN: hyperplane_bucket() parameter 'numPlanes' must be in [1, 64], got 65.")
+    refused(s"SELECT hyperplane_bucket($emb, 0)", "'numPlanes' must be in [1, 64]")
+    refused(s"SELECT hyperplane_bucket($emb, 8, -3)", "'dim' must be >= 1, got -3.")
+    refused(s"SELECT hyperplane_bucket($emb, 8.5)",
+      "'numPlanes' must be an integer literal, got 8.5.")
+    refused("SELECT minhash_signature('a b c d', -3)",
+      "SUDAN: minhash_signature() parameter 'numHashes' must be >= 1, got -3.")
+    refused("SELECT minhash_signature('a b c d', 2.5)",
+      "'numHashes' must be an integer literal, got 2.5.")
+    refused("SELECT minhash_signature('a b c d', rand())",
+      "'numHashes' must be an integer literal")
+    assert(live.sql(s"SELECT hyperplane_bucket($emb, 64)").collect().length === 1)
+  }
+
   test("live session: SUDAN_GeoCode analyzes to the native expression, no ScalaUDF") {
     val df = live.sql("SELECT SUDAN_GeoCode('Khartoum') AS iso")
     val exprs = df.queryExecution.analyzed.expressions

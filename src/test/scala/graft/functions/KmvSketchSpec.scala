@@ -12,6 +12,15 @@ class KmvSketchSpec extends SparkSpec {
     assert(est === 37L)
   }
 
+  test("k = 1 is refused: its estimate (k-1)/h_k would read 0 for any input") {
+    val agg = intercept[IllegalArgumentException](KmvSketch.approxDistinct(col("s"), k = 1))
+    assert(agg.getMessage.contains("k must be >= 2, got 1"), agg.getMessage)
+    val state = intercept[IllegalArgumentException](KmvSketch.sketchState(col("s"), k = 1))
+    assert(state.getMessage.contains("k must be >= 2, got 1"), state.getMessage)
+    val est = intercept[IllegalArgumentException](KmvSketch.estimateExpr(col("s"), 1))
+    assert(est.getMessage.contains("k must be >= 2, got 1"), est.getMessage)
+  }
+
   test("estimate within 15% above k; deterministic across runs") {
     import spark.implicits._
     val df = (1 to 20000).map(i => s"user-${i % 5000}").toDF("s").repartition(8)
