@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.Sudan
-import graft.operators.{AsOf, BloomFilterJoin, Dedup, Ivf, Multimodal,
+import graft.operators.{AsOf, Dedup, Ivf, Multimodal,
   RangeJoin, Relational, Similarity, TextOps}
 import graft.functions.GeoCode
 import graft.geo.SudanGeo

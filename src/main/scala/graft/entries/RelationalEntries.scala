@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOf, BloomFilterJoin, Dedup, Multimodal,
+import graft.operators.{AsOf, Dedup, Multimodal,
   ParquetInput, RangeJoin, Relational, Similarity, TextOps}
 import OracleLib._
 
@@ -68,29 +68,33 @@ private[graft] object RelationalEntries {
     "q_semi_anti" -> (Relational.semiAnti _),
     // per-column table profile (DuckDB SUMMARIZE parity), schema-derived
     "q_summarize" -> (Relational.summarizeOrders _),
-    "q_bloom_join" -> ((s, d) => BloomFilterJoin.urgentOrderRevenue(s, d)),
-    // event_id is the unique row id: salting by it spreads even
-    // fully-duplicate rows of a hot key uniformly (see Skew scaladoc)
+    // plain join: Spark's InjectRuntimeFilter adds the Bloom pre-filter
+    // on the lineitem scan once it is large enough to pay for one
+    "q_bloom_join" -> ((s, d) =>
+      Relational.table(s, d, "lineitem")
+        .join(Relational.table(s, d, "orders")
+          .filter(col("o_orderpriority") === "1-URGENT"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_items"),
+          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
+            .as("revenue"))),
+    // plain groupBy: partial aggregation collapses a hot key map-side
     "q_salted_agg" -> ((s, d) =>
-      graft.operators.Skew.saltedCountSum(Relational.events(s, d),
-        "event_type", "value", idCol = Some("event_id"))),
-    // salted fact⋈dim join, rolled up — hash-matches the PLAIN join SQL
-    // (the equivalence IS the contract, like q_salted_agg). Dim side =
-    // customer (the SMALL side — its ×salts replication is the price of
-    // the hot-key spread; replicating a large dim would be the anti-
-    // pattern the operator's scaladoc warns about)
-    "q_salted_join" -> ((s, d) => {
-      val ord = ParquetInput.read(s, s"$d/orders.parquet")
-      val cust = ParquetInput.read(s, s"$d/customer.parquet")
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-      // o_orderkey is the fact side's primary key — the idCol contract
-      graft.operators.Skew.saltedJoin(ord, cust, "o_custkey",
-          idCol = Some("o_orderkey"))
+      Relational.events(s, d).groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("value").cast("decimal(18,2)")).cast("double")
+            .as("sum_value"))),
+    // plain fact⋈dim join: the customer side is broadcast, and AQE
+    // splits a skewed shuffle join when it is not
+    "q_salted_join" -> ((s, d) =>
+      ParquetInput.read(s, s"$d/orders.parquet")
+        .join(ParquetInput.read(s, s"$d/customer.parquet"),
+          col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("revenue"))
-    }),
+            .as("revenue"))),
     // hourly LOCF gap-fill resample of each user's event stream
     "q_resample_locf" -> ((s, d) => Relational.resampleLocf(s, d)),
     // temporal joins (beyond the reference): as-of enrichment and a
@@ -181,8 +185,8 @@ private[graft] object RelationalEntries {
         "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue " +
         "FROM orders JOIN customer ON o_custkey = c_custkey " +
         "GROUP BY c_mktsegment"),
-    // Bloom-pruned SMJ equals the plain join (no false negatives + the
-    // exact join behind the filter) — the equivalence IS the contract
+    // Spark's runtime Bloom filter admits no false negatives, and the
+    // exact join runs behind it: same rows as the plain join
     "q_bloom_join" ->
       ("SELECT o_orderpriority, count(*) AS n_items, " +
         "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue " +
@@ -470,13 +474,10 @@ private[graft] object RelationalEntries {
         "WHERE c_custkey IN (SELECT o_custkey FROM orders) " +
         "UNION ALL SELECT 'no_orders' AS kind, c_custkey FROM customer " +
         "WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)"),
-    // the salted two-phase aggregation must be indistinguishable from the
-    // plain GROUP BY — that equivalence IS the correctness contract
     "q_salted_agg" ->
       ("SELECT event_type, count(*) AS n_rows, " +
         "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value " +
         "FROM events GROUP BY event_type"),
-    // the PLAIN join — the salted rewrite must be indistinguishable
     "q_salted_join" ->
       ("SELECT c_mktsegment, count(*) AS n_rows, " +
         "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) " +

@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOf, BloomFilterJoin, Dedup, Multimodal,
+import graft.operators.{AsOf, Dedup, Multimodal,
   RangeJoin, Relational, Similarity, TextOps}
 import OracleLib._
 

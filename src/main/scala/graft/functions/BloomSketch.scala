@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Bloom-filter membership sketch with the same table algebra as
   * [[KmvSketch]]/[[QuantileSketch]]: the state is STORABLE (an
@@ -166,10 +167,8 @@ object BloomSketch {
   def mightContain(key: Column, words: Array[Long],
       numHashes: Int): Column = {
     requireLayout(words.length * 64)
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      BloomMightContainExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(key),
-        words, numHashes))
+    GraftSqlShim.column(BloomMightContainExpression(
+      GraftSqlShim.expression(key), words, numHashes))
   }
 
   /** Column-API gram probe: true iff ANY word k-gram of `text` bloom-
@@ -178,10 +177,8 @@ object BloomSketch {
   def anyGramMightContain(text: Column, words: Array[Long],
       numHashes: Int, k: Int): Column = {
     requireLayout(words.length * 64)
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      BloomAnyGramExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text),
-        words, numHashes, k))
+    GraftSqlShim.column(BloomAnyGramExpression(
+      GraftSqlShim.expression(text), words, numHashes, k))
   }
 }
 

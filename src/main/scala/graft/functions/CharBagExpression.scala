@@ -227,14 +227,14 @@ object CharBagExpression {
   }
 
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.graftshim.GraftSqlShim
   /** Column-API forms (same bridge idiom as [[SimHashExpression]]). */
   def bagCol(text: Column): Column =
-    ColumnBridge.column(CharBagExpression(ColumnBridge.expression(text)))
+    GraftSqlShim.column(CharBagExpression(GraftSqlShim.expression(text)))
   def l1Col(a: Column, b: Column): Column =
-    ColumnBridge.column(CharBagL1Expression(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftSqlShim.column(CharBagL1Expression(
+      GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
   def withinCol(a: Column, b: Column, k: Int): Column =
-    ColumnBridge.column(CharBagWithinExpression(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), k))
+    GraftSqlShim.column(CharBagWithinExpression(
+      GraftSqlShim.expression(a), GraftSqlShim.expression(b), k))
 }

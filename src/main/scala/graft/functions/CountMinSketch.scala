@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Count-Min frequency sketch as a typed Spark `Aggregator` — the
   * OVERCOUNT-bounded dual of the Misra-Gries heavy-hitters sketch
@@ -158,10 +159,8 @@ object CountMinSketch {
     requireLayout(depth, width)
     require(state.length == depth * width,
       s"state length ${state.length} != depth*width ${depth * width}")
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      CmEstimateExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(item),
-        state, depth, width))
+    GraftSqlShim.column(CmEstimateExpression(
+      GraftSqlShim.expression(item), state, depth, width))
   }
 
   /** Shared probe core (aggregator, literal probes and the native

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Sequential-fold dot product of two float/double array columns — the
   * native verify kernel of every cosine in [[graft.operators.Similarity]]
@@ -106,8 +107,6 @@ object DotProductExpression {
   /** Column form (the Similarity/Ivf/Pq call sites). */
   def dotCol(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      DotProductExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+    GraftSqlShim.column(DotProductExpression(
+      GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Let-binding for Catalyst expression trees.
   *
@@ -58,8 +59,7 @@ object ExprLet {
     * sits inside a reader's lambda). Leaf arguments skip the wrapper
     * so simple per-row reads stay inside whole-stage codegen. */
   def bindCompound(value: Column)(body: Column => Column): Column = {
-    val leaf = org.apache.spark.sql.graft.ColumnBridge
-      .expression(value).children.isEmpty
+    val leaf = GraftSqlShim.expression(value).children.isEmpty
     if (leaf) body(value) else bindOnce(value)(body)
   }
 }

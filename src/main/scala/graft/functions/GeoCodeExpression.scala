@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expression for SUDAN_GeoCode — the codegen'd upgrade of
   * the UDF (SURVEY §7.3): stays inside WholeStageCodegen instead of paying
@@ -57,6 +58,5 @@ object GeoCodeExpression {
   /** Column-API form of the native expression:
     * `df.select(GeoCodeExpression.native(col("name")))`. */
   def native(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      GeoCodeExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    GraftSqlShim.column(GeoCodeExpression(GraftSqlShim.expression(c)))
 }

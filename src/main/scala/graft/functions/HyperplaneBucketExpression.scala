@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expression for the random-hyperplane LSH bucket id:
   * bit i of the result is the sign (≥ 0) of the vector's dot product with
@@ -77,7 +78,6 @@ object HyperplaneBucketExpression {
     * `df.select(HyperplaneBucketExpression.native(col("embedding"), 12))`. */
   def native(c: org.apache.spark.sql.Column, numPlanes: Int,
       dim: Int = 64): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      HyperplaneBucketExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), numPlanes, dim))
+    GraftSqlShim.column(HyperplaneBucketExpression(
+      GraftSqlShim.expression(c), numPlanes, dim))
 }

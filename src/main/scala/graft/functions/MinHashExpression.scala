@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, I
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expression for the MinHash signature — the signature
   * pass of [[graft.operators.Dedup.minHashPairs]] without the Scala-UDF
@@ -54,7 +55,6 @@ object MinHashExpression {
   /** Column-API form. */
   def native(c: org.apache.spark.sql.Column, numHashes: Int)
       : org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      MinHashExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), numHashes))
+    GraftSqlShim.column(MinHashExpression(
+      GraftSqlShim.expression(c), numHashes))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expressions for the IVF-PQ encode path — the
   * cell-assignment and code-emission maps of
@@ -88,13 +89,10 @@ object PqEncodeExpression {
   /** Column-API forms. */
   def assign(c: org.apache.spark.sql.Column,
       centroids: Array[Array[Double]]): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      NearestCentroidExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), centroids))
+    GraftSqlShim.column(NearestCentroidExpression(
+      GraftSqlShim.expression(c), centroids))
 
   def codes(c: org.apache.spark.sql.Column,
       books: Array[Array[Array[Double]]]): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      PqCodesExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), books))
+    GraftSqlShim.column(PqCodesExpression(GraftSqlShim.expression(c), books))
 }

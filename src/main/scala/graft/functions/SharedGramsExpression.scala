@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native decontamination probe: the number of DISTINCT word k-grams of
   * `child` that appear in the benchmark gram set — the whole corpus
@@ -99,8 +100,6 @@ object SharedGramsExpression {
   def native(c: org.apache.spark.sql.Column,
       benchGrams: java.util.HashSet[String], k: Int)
       : org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      SharedGramsExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c),
-        benchGrams, k))
+    GraftSqlShim.column(SharedGramsExpression(
+      GraftSqlShim.expression(c), benchGrams, k))
 }

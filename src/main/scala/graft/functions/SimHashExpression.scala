@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ImplicitCastInputTypes}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expression for the 64-bit SimHash (the one remaining
   * per-row signature UDF with a clean codegen upgrade path — r2 verdict
@@ -52,6 +53,5 @@ object SimHashExpression {
 
   /** Column-API form: `df.select(SimHashExpression.native(col("text")))`. */
   def native(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      SimHashExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    GraftSqlShim.column(SimHashExpression(GraftSqlShim.expression(c)))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Positional agreement count of two long-array columns — the MinHash
   * Jaccard-estimate numerator of [[graft.operators.Dedup]]'s
@@ -90,8 +91,6 @@ object SlotAgreeExpression {
   /** Column form (the Dedup scorer call sites). */
   def countCol(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      SlotAgreeExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+    GraftSqlShim.column(SlotAgreeExpression(
+      GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
 }

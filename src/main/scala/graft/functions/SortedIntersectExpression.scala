@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Distinct-common-element count of two SORTED LongArray columns — the
   * native verify probe of [[graft.operators.Dedup.setSimPairs]]'s bulk
@@ -111,8 +112,6 @@ object SortedIntersectExpression {
   /** Column form (the [[graft.operators.Dedup.setSimPairs]] call site). */
   def countCol(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      SortedIntersectExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+    GraftSqlShim.column(SortedIntersectExpression(
+      GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, I
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Native Catalyst expression for winnowing fingerprints (Schleimer et
   * al., SIGMOD'03) — the fingerprint pass of
@@ -55,7 +56,5 @@ object WinnowExpression {
   /** Column-API form (defaults match [[graft.operators.TextOps.fingerprintSet]]). */
   def native(c: org.apache.spark.sql.Column, k: Int = 8, window: Int = 4)
       : org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      WinnowExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), k, window))
+    GraftSqlShim.column(WinnowExpression(GraftSqlShim.expression(c), k, window))
 }

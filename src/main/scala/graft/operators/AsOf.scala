@@ -243,25 +243,25 @@ object AsOf {
     * sees the key's complete right-side run.
     *
     * Cost model at 100 TB: right shuffle volume × `salts` buys hot-key
-    * parallelism `salts` — the classic salted-join trade
-    * ([[Skew.saltedJoin]]); per hot key the task cost goes from
-    * (hotLeft + hotRight) serialized to (hotLeft/salts + hotRight), so
-    * the achievable speedup is CAPPED at (L+R)/R by the replicated
-    * right run — measured on the 90%-hot-key probe
-    * (`tools/AsOfSkewProbe`, committed in BENCH_sf10_r15.json):
-    * right = left/5 recovers only ×1.16 of a ×5.5 straggler, while the
-    * event-enrichment shape (right = left/50, too big to broadcast,
-    * far smaller than the left) brings a ×6.7–7.0 straggler back to
-    * ×1.63–1.74 of the uniform layout (two committed runs). Keep this
-    * form for that enrichment shape; a hot key whose RIGHT side is
-    * also huge needs [[asOfJoinBucketed]] — the ts-range split,
-    * measured better exactly where salting is capped (×2.85 vs ×4.48
-    * at right=left/5) and close behind where replication is cheap
-    * (×2.11 vs ×1.63 at right=left/50: its bucket-spine pass over the
-    * left roughly offsets the saved replication there).
+    * parallelism `salts` — the classic salted-join trade; per hot key
+    * the task cost goes from (hotLeft + hotRight) serialized to
+    * (hotLeft/salts + hotRight), so the achievable speedup is CAPPED at
+    * (L+R)/R by the replicated right run. Measured on the 90%-hot-key
+    * probe (`tools/AsOfSkewProbe`, 2M left rows, 32 salts, Spark 4.1.2,
+    * `local[4]`, two runs each), as multiples of the uniform layout's
+    * time: the event-enrichment shape (right = left/50, too big to
+    * broadcast, far smaller than the left) brings a ×2.5–2.8 straggler
+    * back to ×1.5–1.7, ahead of [[asOfJoinBucketed]]'s ×1.7–1.9 (its
+    * bucket-spine pass over the left outweighs the saved replication
+    * there). At right = left/5 salting is SLOWER than leaving the skew
+    * alone: ×5.4–5.8 against the unsalted exec's ×2.4–2.9, while the
+    * ts-range split holds ×1.3–1.6. Keep this form for the enrichment
+    * shape; a hot key whose RIGHT side is also large needs
+    * [[asOfJoinBucketed]].
     * Salt determinism: `saltBy` must be a unique left column
     * (primary key / event id) — a content hash of all columns is the
-    * fallback, with [[Skew]]'s duplicate-multiplicity caveat (logged).
+    * fallback (logged), and fully-duplicate rows of a hot key then
+    * share one salt bucket.
     *
     * Parity with [[asOfJoin]]/[[asOfJoinExec]] is spec-pinned on a
     * 90%-hot-key fixture ([[graft.plans.AsOfJoinExecSpec]]). */
@@ -298,8 +298,10 @@ object AsOf {
   /** TS-RANGE-SPLIT (bucketed) as-of join — the skew path for the case
     * NEITHER broadcast nor salting covers: a hot key whose RIGHT side
     * is also huge. [[asOfJoinSalted]] replicates each hot key's whole
-    * right run ×salts, capping its speedup at (L+R)/R (measured ×1.16
-    * at right=left/5 — BENCH_sf10_r15.json asof_skew rows); here the
+    * right run ×salts, capping its speedup at (L+R)/R (at right =
+    * left/5 it measured ×5.4–5.8 of the uniform time, slower than the
+    * unsalted exec's ×2.4–2.9, where this split held ×1.3–1.6 —
+    * `AsOfSkewProbe` on Spark 4.1.2); here the
     * time axis itself is the split: both sides bucket by
     * `floor(ts / bucketWidth)`, the join key becomes (keys, bucket),
     * and each bucket receives ONE carry row — the latest right at or
@@ -412,8 +414,8 @@ object AsOf {
 
   /** The PURE routing function behind [[asOfJoinAuto]] — separated so
     * the regime → path mapping is unit-testable without Spark jobs.
-    * Thresholds encode the committed r15 skew probe
-    * (`BENCH_sf10_r15.json` asof_skew rows):
+    * Thresholds encode the skew probe (`tools/AsOfSkewProbe`, re-run
+    * on Spark 4.1.2, `local[4]`):
     *  - broadcast: stats fit AND the probed row count is under
     *    `broadcastRowCap` — the row cap guards the stats
     *    UNDERestimate failure mode (the r14 probe measured a forced
@@ -423,11 +425,13 @@ object AsOf {
     *    exec's hot task vs the average — above `skewTaskFactor` the
     *    flat merge is the wrong plan;
     *  - salted vs bucketed: salting replicates each hot key's right
-    *    run ×salts, capping its win at (L+R)/R — measured ×1.63–1.74
-    *    at right=left/50 but only ×4.48 (vs bucketed's ×2.85) at
-    *    right=left/5; `saltCrossover` = 16 sits at the geometric
-    *    middle of those committed regimes, so smaller rights salt and
-    *    bigger rights split the time axis. */
+    *    run ×salts, capping its win at (L+R)/R — ×1.5–1.7 of the
+    *    uniform time against bucketed's ×1.7–1.9 at right=left/50, but
+    *    ×5.4–5.8 against bucketed's ×1.3–1.6 at right=left/5, where
+    *    salting is slower than the unsalted exec (×2.4–2.9);
+    *    `saltCrossover` = 16 sits at the geometric middle of those two
+    *    regimes, so each routes to its faster form: smaller rights salt
+    *    and bigger rights split the time axis. */
   def asOfRouteOf(leftRows: Long, maxKeyRows: Long, rightRows: Long,
       tsSpan: Long, broadcastFits: Boolean, bucketable: Boolean,
       partitions: Int, broadcastRowCap: Long = 1000000L,

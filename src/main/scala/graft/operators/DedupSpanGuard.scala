@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Span-guard gram index: the persisted n-gram admission index with
-  * exact and bucketed modes, live (streaming) probes, and compaction.
+/** Span-guard gram index: the persisted n-gram admission index, its
+  * live (streaming) probes, and compaction.
   * See [[Dedup]]. */
 private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with DedupMinHash =>
   // --------------------------------------------------- span-guard index
@@ -16,8 +16,7 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     * would prune to the wrong partition directories and silently miss —
     * so [[spanGuardProbe]] reads them back from the index instead of
     * trusting the caller, and rejects explicit mismatches loudly. */
-  private[operators] case class GramIndexMeta(k: Int, nBuckets: Int,
-      exact: Boolean)
+  private[operators] case class GramIndexMeta(k: Int, nBuckets: Int)
 
   private val GramMetaFile = "_graft_gram_meta"
 
@@ -30,11 +29,13 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     val p = new org.apache.hadoop.fs.Path(indexDir, GramMetaFile)
     val out = hadoopFs(spark, indexDir).create(p, true)
     try out.write(
-      s"k=${meta.k}\nnBuckets=${meta.nBuckets}\nexact=${meta.exact}\n"
-        .getBytes("UTF-8"))
+      s"k=${meta.k}\nnBuckets=${meta.nBuckets}\n".getBytes("UTF-8"))
     finally out.close()
   }
 
+  /** Older meta files carry an `exact=` line. `exact=false` marks a
+    * hash-only index (no gram column), which a probe would silently
+    * miss against, so it is refused; `exact=true` reads as usual. */
   private[operators] def readGramIndexMeta(spark: SparkSession,
       indexDir: String): Option[GramIndexMeta] = {
     val fs = hadoopFs(spark, indexDir)
@@ -52,8 +53,11 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
       val kv = body.linesIterator.filter(_.contains("="))
         .map { l => val Array(a, b) = l.split("=", 2); (a.trim, b.trim) }
         .toMap
-      Some(GramIndexMeta(kv("k").toInt, kv("nBuckets").toInt,
-        kv("exact").toBoolean))
+      if (kv.get("exact").exists(!_.toBoolean))
+        throw new IllegalArgumentException(
+          s"SUDAN: gram index at $indexDir stores hashes only; rebuild " +
+            "it with materializeGramIndex, which stores each gram.")
+      Some(GramIndexMeta(kv("k").toInt, kv("nBuckets").toInt))
     }
   }
 
@@ -62,12 +66,10 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     * files to infer from and throws — empty history is a legitimate
     * bootstrap state (first admission batch), so probes always read
     * with the declared schema instead. */
-  private def gramIndexSchema(exact: Boolean)
-      : org.apache.spark.sql.types.StructType = {
+  private def gramIndexSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    val base = StructType(Seq(StructField("gh", LongType)))
-    val withGram = if (exact) base.add("gram", StringType) else base
-    withGram.add("bucket", LongType)
+    StructType(Seq(StructField("gh", LongType),
+      StructField("gram", StringType), StructField("bucket", LongType)))
   }
 
   /** Build the span-guard index at `indexDir`: every DISTINCT k-gram of
@@ -82,31 +84,23 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     * and the bucket partitioning is what keeps probes sublinear: a
     * probe's static `bucket IN` filter prunes whole directories, so a
     * small batch touches a handful of buckets regardless of how big
-    * history is. `exact = true` stores the gram string alongside its
-    * hash so the probe is EXACT (hash-bucket prune, string confirm);
-    * `exact = false` stores the 8-byte hash only — the index shrinks to
-    * distinct-gram-count × 8 bytes, at a ~2⁻⁶⁴-per-window
-    * false-flag rate (collision-free corpora produce identical regions,
-    * spec-pinned).
+    * history is. The gram string is stored alongside its hash so the
+    * probe is EXACT (hash-bucket prune, string confirm).
     *
-    * The layout (k, nBuckets, exact) is persisted in a `_graft_gram_meta`
+    * The layout (k, nBuckets) is persisted in a `_graft_gram_meta`
     * file written AFTER the data commit, and probes read it back — the
     * bucket convention is enforced by the index itself, not by caller
     * discipline. */
   def materializeGramIndex(spark: SparkSession, history: DataFrame,
-      indexDir: String, k: Int = 8, nBuckets: Int = 64,
-      exact: Boolean = true): Unit = {
-    val distinctGrams = anchorGrams(history, k)
+      indexDir: String, k: Int = 8, nBuckets: Int = 64): Unit = {
+    anchorGrams(history, k)
       .select(col("gram")).distinct()
       .select(xxhash64(col("gram")).as("gh"), col("gram"))
       .withColumn("bucket", pmod(col("gh"), lit(nBuckets.toLong)))
-    val stored =
-      if (exact) distinctGrams
-      else distinctGrams.select(col("gh"), col("bucket"))
-    stored.write.partitionBy("bucket").mode("overwrite").parquet(indexDir)
+      .write.partitionBy("bucket").mode("overwrite").parquet(indexDir)
     // meta last: its presence marks a complete build (a crashed build
     // leaves no meta, and the probe's explicit error says to rebuild)
-    writeGramIndexMeta(spark, indexDir, GramIndexMeta(k, nBuckets, exact))
+    writeGramIndexMeta(spark, indexDir, GramIndexMeta(k, nBuckets))
   }
 
   /** Probe the span-guard index with a batch of incoming documents:
@@ -114,8 +108,8 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     * exist in the indexed history (same region semantics as
     * [[repeatedSpans]]).
     *
-    * Layout comes from the index's own `_graft_gram_meta` (k, nBuckets,
-    * exact); passing `k`/`nBuckets` explicitly is a cross-check — a
+    * Layout comes from the index's own `_graft_gram_meta` (k,
+    * nBuckets); passing `k`/`nBuckets` explicitly is a cross-check — a
     * mismatch against the stored layout throws instead of silently
     * missing. Pass -1 (the default) to defer entirely to the meta.
     *
@@ -124,10 +118,9 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     * materialized batch-sized frame instead of re-tokenizing); the
     * distinct bucket set (≤ nBuckets ints, a batch-local job) becomes a
     * STATIC partition filter on the index scan; the join is an equi-join
-    * on (gh, gram) — hash first, exact string confirm in the same key
-    * (on `gh` alone for a hash-only index) — and the island merge
-    * touches flagged positions only. History size enters ONLY through
-    * the pruned buckets read. */
+    * on (gh, gram) — hash first, exact string confirm in the same key —
+    * and the island merge touches flagged positions only. History size
+    * enters ONLY through the pruned buckets read. */
   def spanGuardProbe(spark: SparkSession, indexDir: String,
       incoming: DataFrame, k: Int = -1, nBuckets: Int = -1): DataFrame = {
     val meta = readGramIndexMeta(spark, indexDir).getOrElse {
@@ -136,7 +129,7 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
           "crashed before committing (rebuild via materializeGramIndex) " +
           "or this is a pre-meta index: pass its k and nBuckets " +
           "explicitly to probe it.")
-      GramIndexMeta(k, nBuckets, exact = true)
+      GramIndexMeta(k, nBuckets)
     }
     if (k > 0 && k != meta.k) throw new IllegalArgumentException(
       s"SUDAN: span-guard index at $indexDir was built with k=${meta.k}; " +
@@ -158,12 +151,10 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
     val none = islandRegions(
       probe.select(col("doc_id"), col("p")).where(lit(false)), meta.k)
     if (buckets.isEmpty) return none
-    val hist = spark.read.schema(gramIndexSchema(meta.exact))
-      .parquet(indexDir)
+    val hist = spark.read.schema(gramIndexSchema).parquet(indexDir)
       .filter(col("bucket").isin(buckets: _*))
-    val joinKeys = if (meta.exact) Seq("gh", "gram") else Seq("gh")
-    val flagged = probe
-      .join(hist.select(joinKeys.map(col): _*), joinKeys, "left_semi")
+      .select(col("gh"), col("gram"))
+    val flagged = probe.join(hist, Seq("gh", "gram"), "left_semi")
       .select(col("doc_id"), col("p"))
     islandRegions(flagged, meta.k)
   }
@@ -228,8 +219,7 @@ private[operators] trait DedupSpanGuard { self: DedupCore with DedupSpans with D
       k: Int, nBuckets: Int): Unit =
     readGramIndexMeta(spark, gramDir) match {
       case None =>
-        writeGramIndexMeta(spark, gramDir, GramIndexMeta(k, nBuckets,
-          exact = true))
+        writeGramIndexMeta(spark, gramDir, GramIndexMeta(k, nBuckets))
       case Some(meta) =>
         if (meta.k != k || meta.nBuckets != nBuckets)
           throw new IllegalArgumentException(

@@ -693,26 +693,15 @@ object Pipeline {
     * joins, no second scan; the cost of reading the corpus once. The
     * one non-constant aggregation state is the EXACT percentile buffer
     * (O(n) values on the final reducer) — fine to the low billions of
-    * docs; at full 100 TB pass `exact = false` to swap `percentile`
-    * for `approx_percentile` (mergeable bounded sketch, the
-    * [[graft.operators.Relational.approxQuantileContract]] trade) while
-    * every other metric stays exact in both modes.
+    * docs; every other metric is constant-state.
     * Quality/short-doc definitions reuse the corpus-wide conventions
     * ([[graft.operators.TextOps.qualityScore]], ceil(chars/4) tokens),
     * so the card agrees with the per-doc operators it summarizes. */
-  def datasetCard(spark: SparkSession, dir: String,
-      exact: Boolean = true): DataFrame = {
+  def datasetCard(spark: SparkSession, dir: String): DataFrame = {
     val nWords = TextOps.nWords
     val tokens = ceil(length(col("text")).cast("double") / lit(4.0))
       .cast("long")
-    // exact=false swaps the one O(n)-state aggregate (the percentile
-    // value buffer on the final reducer) for approx_percentile's
-    // mergeable bounded sketch — the 100 TB regime; accuracy 1/10000
-    // keeps the swap within ±0.01% rank error. Everything else on the
-    // card is already constant-state and stays exact in both modes.
-    def pct(q: Double): Column =
-      if (exact) expr(s"percentile(n_chars, $q)")
-      else expr(s"approx_percentile(n_chars, $q, 10000)").cast("double")
+    def pct(q: Double): Column = expr(s"percentile(n_chars, $q)")
     val one = Tables.documents(spark, dir).agg(
       count(lit(1)).cast("double").as("n_docs"),
       countDistinct(col("source")).cast("double").as("n_sources"),

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *    straggler cost being fixed;
   *  - `salted_s`    — [[graft.operators.AsOf.asOfJoinSalted]] on the
   *    skewed layout (left salted, right replicated ×salts): the skew
-  *    path for right sides too large to broadcast.
+  *    path for right sides too large to broadcast;
+  *  - `bucketed_s`  — [[graft.operators.AsOf.asOfJoinBucketed]] on the
+  *    skewed layout (the ts axis split into `salts` ranges).
   *
   * Each timing is the median of 3 passes after one untimed build pass
   * (the gate protocol in miniature); a checksum equality between the
@@ -27,11 +29,14 @@ import org.apache.spark.sql.functions._
   * salted form replicates each hot key's whole right-side run ×salts,
   * so its win is (hotLeft/salts + hotRight) per task vs
   * (hotLeft + hotRight) serialized — a right side comparable to the
-  * left caps the speedup at (L+R)/R regardless of salts (measured:
-  * right=left/5 bought only ×1.16), while the event-enrichment shape
-  * the operator documents (right ≪ left, but too big to broadcast)
-  * recovers near-uniform runtime. Both measurements are committed;
-  * the scaladoc carries the cost model.
+  * left caps the speedup at (L+R)/R regardless of salts. On Spark
+  * 4.1.2 (`local[4]`, 2M left rows, 32 salts, two runs each) right =
+  * left/5 made salting SLOWER than the unsalted skewed exec (×5.4–5.8
+  * of the uniform time against ×2.4–2.9), while the event-enrichment
+  * shape the operator documents (right = left/50: right ≪ left, but
+  * too big to broadcast) brought salting to ×1.5–1.7. The
+  * [[graft.operators.AsOf.asOfJoinSalted]] scaladoc carries the cost
+  * model.
   *
   * Usage: `runMain graft.tools.AsOfSkewProbe [leftRows] [salts] [leftOverRight]`
   * (defaults 2,000,000 / 32 / 50). */

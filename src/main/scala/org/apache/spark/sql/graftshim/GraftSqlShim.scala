@@ -13,8 +13,10 @@ import org.apache.spark.sql.classic
   * Expression→Column constructor, so every library that ships a custom
   * logical operator (the documented `LogicalPlan` + `Strategy` +
   * `SparkPlan` extension tier) hosts this same shim in an
-  * `org.apache.spark.sql` subpackage. Nothing else in the codebase may
-  * import from here except `graft.plans` factories.
+  * `org.apache.spark.sql` subpackage. It is graft's one object in that
+  * package; its callers are the `graft.plans` factories, the as-of
+  * planned forms and the Column-API forms of the native expressions in
+  * `graft.functions`.
   */
 object GraftSqlShim {
 
@@ -22,7 +24,8 @@ object GraftSqlShim {
     * ColumnNode, not an Expression; the converter is `private[sql]`).
     * Used by [[graft.plans.FloorBin]] so the DataFrame-side range-join
     * operators share ONE exact-arithmetic implementation with the
-    * optimizer rule instead of a stringly `expr(...)` twin. */
+    * optimizer rule instead of a stringly `expr(...)` twin, and by every
+    * native expression's Column-API form. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** [[Column]] → catalyst [[Expression]] (unresolved is fine — the

@@ -22,6 +22,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val JobTagKey = "graft.spec.jobsDuring"
 
+  /** Runs `body` with the given session confs set, then restores each
+    * to its prior value (or unsets it). */
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body` and counts the Spark jobs it submitted from this
     * thread. Listener events arrive asynchronously, so a marker job is
     * submitted afterwards and awaited: events reach a listener in order,

@@ -21,15 +21,6 @@ import org.apache.spark.sql.functions._
   */
 class BucketingSpec extends SparkSpec {
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed tables join without any shuffle exchange") {
     val tmp = java.nio.file.Files.createTempDirectory("buckets").toString
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")

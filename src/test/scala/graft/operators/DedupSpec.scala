@@ -1069,8 +1069,7 @@ class DedupSpec extends SparkSpec {
     roundsFor(star, starNodes.map(_ -> 0L).toMap, 100, "star-of-chains")
   }
 
-  test("span-guard hash-only index: identical regions on a collision-" +
-      "free corpus, a strictly smaller index, and meta-driven probes") {
+  test("span-guard gram index: meta-driven probes and layout checks") {
     import spark.implicits._
     val boiler = "terms of service apply to all users of this site"
     val hist = (0 until 30).map { i =>
@@ -1082,30 +1081,30 @@ class DedupSpec extends SparkSpec {
       (901L, (0 until 20).map(j => s"new$j").mkString(" ")))
       .toDF("doc_id", "text")
     val tmpRoot = java.nio.file.Files.createTempDirectory("spanguardh")
-    val (exactIdx, hashIdx) = (s"$tmpRoot/exact", s"$tmpRoot/hash")
+    val exactIdx = s"$tmpRoot/exact"
     Dedup.materializeGramIndex(spark, hist, exactIdx, k = 8, nBuckets = 16)
-    Dedup.materializeGramIndex(spark, hist, hashIdx, k = 8, nBuckets = 16,
-      exact = false)
     // probes take layout from the index meta — no k/nBuckets repeated
     def regions(idx: String) = Dedup.spanGuardProbe(spark, idx, incoming)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).sortBy(_._1)
     val e = regions(exactIdx)
     assert(e === Array((900L, 3L, 13L, 10L)), s"got ${e.mkString(",")}")
-    assert(regions(hashIdx) === e,
-      "hash-only mode must flag the same regions on a collision-free corpus")
-    // the hash-only index drops the gram strings: strictly smaller
-    def bytes(idx: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
-      try s.filter(p => p.toString.endsWith(".parquet"))
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-      finally s.close()
+    assert(Dedup.readGramIndexMeta(spark, exactIdx)
+      === Some(Dedup.GramIndexMeta(8, 16)))
+    // a meta file with the older `exact=` line: `true` still probes,
+    // a hash-only `false` is refused rather than missing every window
+    val metaPath = java.nio.file.Paths.get(exactIdx, "_graft_gram_meta")
+    def writeMeta(body: String): Unit = {
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(exactIdx, "._graft_gram_meta.crc"))
+      java.nio.file.Files.write(metaPath, body.getBytes("UTF-8"))
     }
-    assert(bytes(hashIdx) < bytes(exactIdx),
-      s"hash index ${bytes(hashIdx)}B must be smaller than exact " +
-        s"${bytes(exactIdx)}B")
-    assert(Dedup.readGramIndexMeta(spark, hashIdx)
-      === Some(Dedup.GramIndexMeta(8, 16, exact = false)))
+    writeMeta("k=8\nnBuckets=16\nexact=true\n")
+    assert(regions(exactIdx) === e)
+    writeMeta("k=8\nnBuckets=16\nexact=false\n")
+    val eH = intercept[IllegalArgumentException](regions(exactIdx))
+    assert(eH.getMessage.contains("hashes only"), eH.getMessage)
+    writeMeta("k=8\nnBuckets=16\n")
     // layout mismatches fail loudly instead of silently missing
     val eK = intercept[IllegalArgumentException] {
       Dedup.spanGuardProbe(spark, exactIdx, incoming, k = 4)

@@ -681,22 +681,6 @@ class PipelineSpec extends SparkSpec {
     assert(dirty("source_present"))
   }
 
-  test("datasetCard approx mode: percentiles within rank tolerance, " +
-      "every non-percentile metric bit-identical to the exact card") {
-    def card(exact: Boolean) = Pipeline.datasetCard(spark, sfDir, exact)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val ex = card(exact = true)
-    val ap = card(exact = false)
-    assert(ex.keySet === ap.keySet)
-    val pcts = Set("p50_chars", "p90_chars")
-    (ex.keySet -- pcts).foreach(k =>
-      assert(ap(k) === ex(k), s"non-percentile metric $k must be exact"))
-    pcts.foreach { k =>
-      assert(math.abs(ap(k) - ex(k)) / ex(k) <= 0.01,
-        s"$k: approx ${ap(k)} vs exact ${ex(k)}")
-    }
-  }
-
   test("expectations: NULL comparisons count as check FAILURES, not " +
       "skipped rows (avg-skips-null regression)") {
     import spark.implicits._

@@ -369,17 +369,41 @@ class RelationalSpec extends SparkSpec {
     val fact = (1L to 200L).map(i => (i % 20 + 1, i)).toDF("k", "v")
     // no static broadcast: the join is planned as a shuffle join and
     // AQE alone turns it into a broadcast at run time
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = fact.join(dim, Seq("k"))
       assert(joined.count() === 200L)
       assert(acc.value === 20L,
         s"build-side lineage must run exactly once - ran " +
           s"${acc.value / 20.0} times")
-    } finally prior match {
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
+  }
+
+  private def bloomJoin =
+    graft.entries.RelationalEntries.queries("q_bloom_join")
+
+  test("q_bloom_join: Spark's runtime Bloom filter prunes the lineitem " +
+      "scan of the plain join, same rows") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val plain = rows(bloomJoin(spark, sfDir))
+    // a shuffle join over a scan above the (lowered) size threshold: the
+    // shape InjectRuntimeFilter targets at scale
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter." +
+        "applicationSideScanSizeThreshold" -> "1") {
+      val df = bloomJoin(spark, sfDir)
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("might_contain") &&
+        optimized.contains("bloom_filter_agg"), optimized)
+      assert(rows(df) === plain)
+      // AQE's final plan keeps the filter on the lineitem scan
+      val executed = df.queryExecution.executedPlan.toString
+      assert(executed.contains("might_contain"), executed)
+    }
+  }
+
+  test("q_bloom_join builds its plan without running a job") {
+    val (_, jobs) = jobsDuring(bloomJoin(spark, sfDir))
+    assert(jobs === 0, s"$jobs jobs")
   }
 }
